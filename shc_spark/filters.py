@@ -251,7 +251,7 @@ def _translate(f, key_name: str, encode, points_only: bool = False) -> HRF:
         if ikind == "In" and _attr(inner) == key_name:
             # Not(In): AND of Not(EqualTo) (HBaseFilter.scala:379-385)
             hrf = HRF(list(FULL_SCAN), True)
-            for v in inner.values:
+            for v in inner.value:
                 ev = encode(v)
                 neq = ranges_or(
                     [ScanRange(None, True, ev, False)], [ScanRange(ev, False, None, False)]
@@ -268,7 +268,7 @@ def _translate(f, key_name: str, encode, points_only: bool = False) -> HRF:
         v = encode(f.value)
         return HRF([ScanRange(v, True, v, True)], True)
     if kind == "In":
-        pts = [encode(v) for v in f.values]
+        pts = [encode(v) for v in f.value]
         rs: list[ScanRange] = []
         for p in pts:
             rs = ranges_or(rs, [ScanRange(p, True, p, True)])

@@ -12,11 +12,12 @@ schemas instead of re-inferring per read (guide §1.2 fixed costs /
 §6 I/O metadata).
 
 This helper is the explicit-schema pattern for path-addressed parquet:
-the schema is inferred ONCE per (realpath, mtime_ns, size) and reused
-while the file is unchanged. ONLY schema metadata is memoized — every
+the schema is inferred ONCE per realpath and reused while the file's
+(mtime_ns, size) is unchanged. ONLY schema metadata is memoized — every
 read still scans the parquet data itself, so nothing here caches
-results or precomputes across runs; the stat-based key drops the memo
-the moment the input file changes (rewritten tables re-infer).
+results or precomputes across runs; a changed stat drops the memo the
+moment the input file changes (a rewritten table re-infers and its
+entry is replaced, so the memo holds one entry per path).
 
 Scope: immutable table inputs (the $SPARK_GRAFT_SF_DIR tables read by
 the query registry). Mutable operator-managed stores (persisted
@@ -32,22 +33,24 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
-_SCHEMAS: dict[tuple[str, int, int], StructType] = {}
+# realpath -> (mtime_ns, size, schema)
+_SCHEMAS: dict[str, tuple[int, int, StructType]] = {}
 
 
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     """``spark.read.parquet(path)`` with the inferred schema memoized
-    per (realpath, mtime_ns, size) — identical result frame, minus the
-    per-call schema-inference job while ``path`` is unchanged."""
+    per realpath and validated by (mtime_ns, size) — identical result
+    frame, minus the per-call schema-inference job while ``path`` is
+    unchanged."""
     try:
         st = os.stat(path)
-        key = (os.path.realpath(path), st.st_mtime_ns, st.st_size)
     except OSError:
         # missing path: let Spark raise its own AnalysisException
         return spark.read.parquet(path)
-    schema = _SCHEMAS.get(key)
-    if schema is None:
+    key, stamp = os.path.realpath(path), (st.st_mtime_ns, st.st_size)
+    hit = _SCHEMAS.get(key)
+    if hit is None or hit[:2] != stamp:
         df = spark.read.parquet(path)
-        _SCHEMAS[key] = df.schema
+        _SCHEMAS[key] = (*stamp, df.schema)
         return df
-    return spark.read.schema(schema).parquet(path)
+    return spark.read.schema(hit[2]).parquet(path)

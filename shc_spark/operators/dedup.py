@@ -308,17 +308,6 @@ def _sig_udf(num_perm: int, seed: int = 42):
     return sig(F.col("hs"))
 
 
-def minhash_signatures(
-    df: DataFrame, text_col: str, id_col: str, num_perm: int = 64, n: int = 3, seed: int = 42
-) -> DataFrame:
-    """(id, sig: array<long>) MinHash signatures via seeded xxhash64 —
-    independent 64-bit hash per permutation. Signature minima run in
-    one vectorized pandas UDF (``_sig_udf``); the definition is the
-    seeded-xxhash64 chain of ``_sig_expr``, bit-identical."""
-    hashed = _hashed_shingles(df, text_col, id_col, n)
-    return hashed.select("id", _sig_udf(num_perm, seed).alias("sig"))
-
-
 def _doc_lsh_features(
     df: DataFrame, text_col: str, id_col: str, n: int, num_perm: int, bands: int
 ):
@@ -2230,6 +2219,19 @@ def _not_tombstoned(spark, path: str, pairs: DataFrame) -> DataFrame:
     )
 
 
+def _statically_pruned(rel: DataFrame, part_col: str, frame: DataFrame, bucket):
+    """``rel`` filtered to the ``part_col`` partitions that ``bucket``
+    (an int expression over ``frame``, bounded by construction — a
+    ``% num_buckets`` value) takes on ``frame``. The bucket list is a
+    driver collect run non-adaptively (planutil.no_adaptive): AQE only
+    adds stage-job barriers to a pass this small, and a static list
+    keeps plan-time pruning that AQE cannot drop (see
+    _index_candidates)."""
+    with no_adaptive(frame.sparkSession):
+        vals = [r[0] for r in frame.select(bucket.cast("int")).distinct().collect()]
+    return rel.filter(F.col(part_col).isin(vals) if vals else F.lit(False))
+
+
 def _index_candidates(spark, path, inc_feats, nb):
     """Lazy candidate pairs (id_a = increment, id_b = corpus) from the
     pruned banded scan: the increment's bucket list (bounded <= nb by
@@ -2257,20 +2259,10 @@ def _index_candidates(spark, path, inc_feats, nb):
     inc_banded = inc_feats.select(
         F.col("id").alias("id_a"), F.posexplode("bnd").alias("band", "bh")
     )
-    # non-adaptive bounded collect (planutil.no_adaptive): <= nb ints
-    # through one Python pass + one distinct — AQE only adds stage-job
-    # barriers here (measured r16: 2 jobs -> 1, 1.09s -> 0.33s warm)
-    with no_adaptive(spark):
-        bkts = [
-            r["bkt"]
-            for r in inc_banded.select(
-                F.pmod(F.col("bh"), F.lit(nb)).cast("int").alias("bkt")
-            )
-            .distinct()
-            .collect()
-        ]
-    banded = _banded_relation(spark, path).filter(
-        F.col("bkt").isin(bkts) if bkts else F.lit(False)
+    # non-adaptive bounded collect: <= nb ints through one Python pass
+    # + one distinct (measured r16: 2 jobs -> 1, 1.09s -> 0.33s warm)
+    banded = _statically_pruned(
+        _banded_relation(spark, path), "bkt", inc_banded, F.pmod(F.col("bh"), F.lit(nb))
     )
     cand = (
         banded.join(F.broadcast(inc_banded), ["band", "bh"])
@@ -2298,42 +2290,32 @@ def dedup_index_candidates(
     return _index_candidates(spark, path, inc, m["num_buckets"])
 
 
-# DataFrames cached by the previous dedup_index_pairs call, released
-# at the start of the next one (deferred one-query lifecycle).
+# DataFrames cached by the previous dedup index query, released at
+# the start of the next one (deferred one-query lifecycle).
 _INDEX_QUERY_CACHES: list = []
 
 
-def dedup_index_pairs(
-    spark,
-    path: str,
-    increment: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    threshold: float = 0.8,
-) -> DataFrame:
-    """Near-dup pairs (id_a = increment doc, id_b = indexed corpus
-    doc, jaccard) of a fresh increment against a persisted dedup
-    index, exact-verified — equals
-    ``minhash_lsh_pairs_between(increment, corpus)`` with the index's
-    banding parameters, without touching the corpus text.
+def _index_pairs(spark, path, docs, text_col, key_col, threshold):
+    """The one query body behind :func:`dedup_index_pairs` and
+    :func:`dedup_index_pairs_batch`: exact-verified (id_a = ``docs``
+    key, id_b = indexed corpus doc, jaccard) pairs.
 
-    Scale shape: one feature pass over the INCREMENT only; the
-    corpus-side banded scan is pruned to the increment's bucket
-    directories (both bucket-list collects are bounded by
-    ``num_buckets`` BY CONSTRUCTION — ``% num_buckets`` values — not
-    by a guard); the increment's banded keys broadcast into the
-    pruned scan; exact verification joins feature rows only for the
-    surviving candidate ids, pruned the same way. The r15 zero-collect
-    DPP variant of this path was trialed and REVERTED on runtime scan
-    metrics — AQE silently drops the dynamic pruning and reads every
-    bucket directory (see _index_candidates for the full
-    adjudication); the two bounded driver collects are the design
-    that actually prunes at any scale.
+    Scale shape: one feature pass over ``docs`` only; the corpus-side
+    banded scan is pruned to the docs' bucket directories (both
+    bucket-list collects are bounded by ``num_buckets`` BY
+    CONSTRUCTION — ``% num_buckets`` values — not by a guard); the
+    docs' banded keys broadcast into the pruned scan; exact
+    verification joins feature rows only for the surviving candidate
+    ids, pruned the same way. The r15 zero-collect DPP variant was
+    trialed and REVERTED on runtime scan metrics — AQE silently drops
+    the dynamic pruning and reads every bucket directory (see
+    _index_candidates for the full adjudication); the two bounded
+    driver collects are the design that actually prunes at any scale.
 
     Cache lifecycle: ``inc``/``cand`` are cached (two consumers each:
     the bucket collects and the final join), and released at the START
-    of the NEXT call — the caller of this query can still materialize
-    its result from cache, and a long-lived query-many serving process
+    of the NEXT call — the caller can still materialize its result
+    from cache, and a long-lived query-many serving process
     accumulates at most one query's blocks instead of growing without
     bound."""
     while _INDEX_QUERY_CACHES:
@@ -2341,7 +2323,7 @@ def dedup_index_pairs(
     m = read_dedup_index_meta(spark, path)
     nb = m["num_buckets"]
     inc = _doc_lsh_features(
-        _widen(increment), text_col, id_col, m["n"], m["num_perm"], m["bands"]
+        _widen(docs), text_col, key_col, m["n"], m["num_perm"], m["bands"]
     ).cache()
     # no explicit materialize: the bucket collect inside
     # _index_candidates is the cache's first evaluation and fills it —
@@ -2349,20 +2331,11 @@ def dedup_index_pairs(
     # scheduler overhead is the serving wall's dominant term)
     cand = _index_candidates(spark, path, inc, nb).cache()
     _INDEX_QUERY_CACHES.extend([inc, cand])
-    # non-adaptive bounded collect: <= nb ints off the cached candidate
-    # frame (pruned scan + static broadcast join — nothing for AQE to
-    # re-plan; measured r16: 2 jobs -> 1, 0.58s -> 0.36s warm)
-    with no_adaptive(spark):
-        fbkts = [
-            r["fbkt"]
-            for r in cand.select(
-                F.pmod(F.xxhash64(F.col("id_b")), F.lit(nb)).cast("int").alias("fbkt")
-            )
-            .distinct()
-            .collect()
-        ]
-    feats = _features_relation(spark, path).filter(
-        F.col("fbkt").isin(fbkts) if fbkts else F.lit(False)
+    # bounded collect of <= nb ints off the cached candidate frame
+    # (measured r16 non-adaptive: 2 jobs -> 1, 0.58s -> 0.36s warm)
+    feats = _statically_pruned(
+        _features_relation(spark, path), "fbkt", cand,
+        F.pmod(F.xxhash64(F.col("id_b")), F.lit(nb)),
     )
     ha = inc.select(F.col("id").alias("id_a"), F.col("hs").alias("hs_a"))
     hb = feats.select(F.col("id").alias("id_b"), F.col("hs").alias("hs_b"))
@@ -2377,6 +2350,24 @@ def dedup_index_pairs(
     )
 
 
+def dedup_index_pairs(
+    spark,
+    path: str,
+    increment: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    threshold: float = 0.8,
+) -> DataFrame:
+    """Near-dup pairs (id_a = increment doc, id_b = indexed corpus
+    doc, jaccard) of a fresh increment against a persisted dedup
+    index, exact-verified — equals
+    ``minhash_lsh_pairs_between(increment, corpus)`` with the index's
+    banding parameters, without touching the corpus text. The batch
+    body (:func:`_index_pairs`) run on one increment keyed by its raw
+    doc id."""
+    return _index_pairs(spark, path, increment, text_col, id_col, threshold)
+
+
 def dedup_index_pairs_batch(
     spark,
     path: str,
@@ -2387,29 +2378,23 @@ def dedup_index_pairs_batch(
 ) -> DataFrame:
     """Near-dup pairs for a BATCH of increments against the persisted
     index in ONE pruned pass (VERDICT r8 #7 — the micro-batch serving
-    shape): ``increments`` maps increment_id -> DataFrame, the union
-    gets ONE feature pass, the corpus-side banded scan is pruned to the
-    union of all increments' buckets and read once, and exact
-    verification prunes the same way. Output: (increment_id, id_a,
-    id_b, jaccard) — per increment IDENTICAL to a
-    :func:`dedup_index_pairs` call on it alone (candidates and
-    verification are per-pair, so batching is semantically invisible;
-    the gate pins this). N increments cost one index read of their
-    combined buckets, not N round-trips of fixed job overhead.
+    shape): ``increments`` maps increment_id -> DataFrame, and the
+    union runs the same body as :func:`dedup_index_pairs` — ONE
+    feature pass, one corpus-side banded scan pruned to the union of
+    all increments' buckets, verification pruned the same way. Output:
+    (increment_id, id_a, id_b, jaccard). Candidates and verification
+    are per pair, so batching is semantically invisible; N increments
+    cost one index read of their combined buckets, not N round-trips
+    of fixed job overhead.
 
     Increments are independent documents: the composite (increment_id,
     doc id) key rides the feature pass as a struct, so the same doc id
     may appear in several increments (even with different text)
-    without conflation. Same deferred one-query cache lifecycle as the
-    single-increment path."""
+    without conflation."""
     from functools import reduce
 
-    while _INDEX_QUERY_CACHES:
-        _INDEX_QUERY_CACHES.pop().unpersist()
     if not increments:
         raise ValueError("increments must map increment_id -> DataFrame")
-    m = read_dedup_index_meta(spark, path)
-    nb = m["num_buckets"]
     parts = [
         df.select(
             F.struct(
@@ -2420,43 +2405,11 @@ def dedup_index_pairs_batch(
         for inc_id, df in increments.items()
     ]
     un = reduce(lambda a, b: a.unionByName(b), parts)
-    inc = _doc_lsh_features(
-        _widen(un), "__text", "__key", m["n"], m["num_perm"], m["bands"]
-    ).cache()
-    # cache fills on the bucket collect's first evaluation (see
-    # dedup_index_pairs) — no explicit materialize job; same static
-    # bounded-collect pruning as the single-increment path (the DPP
-    # variant was reverted on runtime metrics — see _index_candidates)
-    cand = _index_candidates(spark, path, inc, nb).cache()
-    _INDEX_QUERY_CACHES.extend([inc, cand])
-    # non-adaptive bounded collect — same rationale as dedup_index_pairs
-    with no_adaptive(spark):
-        fbkts = [
-            r["fbkt"]
-            for r in cand.select(
-                F.pmod(F.xxhash64(F.col("id_b")), F.lit(nb)).cast("int").alias("fbkt")
-            )
-            .distinct()
-            .collect()
-        ]
-    feats = _features_relation(spark, path).filter(
-        F.col("fbkt").isin(fbkts) if fbkts else F.lit(False)
-    )
-    ha = inc.select(F.col("id").alias("id_a"), F.col("hs").alias("hs_a"))
-    hb = feats.select(F.col("id").alias("id_b"), F.col("hs").alias("hs_b"))
-    inter = F.size(F.array_intersect(F.col("hs_a"), F.col("hs_b")))
-    union = F.size("hs_a") + F.size("hs_b") - inter
-    return (
-        cand.join(hb, "id_b")
-        .join(F.broadcast(ha), "id_a")
-        .withColumn("jaccard", F.round(inter / union, 4))
-        .filter(F.col("jaccard") >= threshold)
-        .select(
-            F.col("id_a.inc").alias("increment_id"),
-            F.col("id_a.id").alias("id_a"),
-            "id_b",
-            "jaccard",
-        )
+    return _index_pairs(spark, path, un, "__text", "__key", threshold).select(
+        F.col("id_a.inc").alias("increment_id"),
+        F.col("id_a.id").alias("id_a"),
+        "id_b",
+        "jaccard",
     )
 
 

@@ -72,10 +72,17 @@ def _bounded_query_rows(queries: DataFrame, cols, max_queries: int):
 
 
 def _collect_queries(
-    queries: DataFrame, vec_col: str, id_col: str, max_queries: int = MAX_QUERY_ROWS
+    queries: DataFrame,
+    vec_col: str,
+    id_col: str,
+    max_queries: int = MAX_QUERY_ROWS,
+    precollected: "tuple | None" = None,
 ):
     """(ids list, normalized float64 matrix) for the small query side.
-    Empty query sets return an empty matrix (callers emit nothing)."""
+    Empty query sets return an empty matrix (callers emit nothing). A
+    ``precollected`` pair (collect_query_side()) is returned as is."""
+    if precollected is not None:
+        return precollected
     rows = _bounded_query_rows(queries, (id_col, vec_col), max_queries)
     ids = [r[0] for r in rows]
     if not rows:
@@ -187,9 +194,7 @@ def cosine_topk(
     one query collect across several rankings of the same frame."""
     spark = corpus.sparkSession
     bq = spark.sparkContext.broadcast(
-        precollected
-        if precollected is not None
-        else _collect_queries(queries, vec_col, id_col, max_queries)
+        _collect_queries(queries, vec_col, id_col, max_queries, precollected)
     )
 
     def score(batches):
@@ -367,9 +372,7 @@ def sq8_topk(
     step = np.array([(s[1] - s[0]) / (levels - 1) for s in stats], dtype=np.float64)
     spark = codes.sparkSession
     bq = spark.sparkContext.broadcast(
-        precollected
-        if precollected is not None
-        else _collect_queries(queries, vec_col, id_col, max_queries)
+        _collect_queries(queries, vec_col, id_col, max_queries, precollected)
     )
 
     def score(batches):
@@ -424,11 +427,7 @@ def lsh_topk(
     weights = (1 << np.arange(planes_per_table)).astype(np.int64)
     flat = planes.reshape(num_tables * planes_per_table, dim)
 
-    q_ids, qm = (
-        precollected
-        if precollected is not None
-        else _collect_queries(queries, vec_col, id_col, max_queries)
-    )
+    q_ids, qm = _collect_queries(queries, vec_col, id_col, max_queries, precollected)
     probe_map: dict = {}
     for t in range(num_tables if q_ids else 0):
         b0 = (((qm @ planes[t].T) > 0) * weights).sum(axis=1).astype(np.int64)
@@ -544,11 +543,7 @@ def ivf_topk(
         else _train_centroids(corpus, vec_col, num_centroids, dim, seed)
     )
 
-    q_ids, qm = (
-        precollected
-        if precollected is not None
-        else _collect_queries(queries, vec_col, id_col, max_queries)
-    )
+    q_ids, qm = _collect_queries(queries, vec_col, id_col, max_queries, precollected)
     probe_map: dict = {}
     if q_ids:
         probe_idx = np.argsort(-(qm @ cent.T), axis=1)[:, :nprobe]
@@ -872,8 +867,10 @@ def ivf_index_topk(
     )
     if rerank_with is None:
         return _topk_window(part, k)
-    return _ivf_refine(
-        spark, part, q_ids, qm, depth, k, rerank_with, vec_col, id_col
+    # the FAISS refine stage: exact cosine on the depth survivors only
+    pruned = _topk_window(part, depth).drop("rank", "cosine")
+    return _refine_from_pruned(
+        spark, pruned, q_ids, qm, k, rerank_with, vec_col, id_col
     )
 
 
@@ -969,11 +966,7 @@ def _ivf_index_scored(
             np.array([(s[1] - s[0]) / 255.0 for s in stats], dtype=np.float64),
         )
     )
-    q_ids, qm = (
-        precollected
-        if precollected is not None
-        else _collect_queries(queries, vec_col, id_col, max_queries)
-    )
+    q_ids, qm = _collect_queries(queries, vec_col, id_col, max_queries, precollected)
     probe_map: dict = {}
     lut = None
     if books is not None and len(q_ids):
@@ -1048,15 +1041,6 @@ def _ivf_index_scored(
     return part, q_ids, qm
 
 
-def _ivf_refine(spark, part, q_ids, qm, depth, k, rerank_with, vec_col, id_col):
-    """The FAISS refine stage: exact cosine on the depth survivors
-    only, then the global top-k window."""
-    pruned = _topk_window(part, depth).drop("rank", "cosine")
-    return _refine_from_pruned(
-        spark, pruned, q_ids, qm, k, rerank_with, vec_col, id_col
-    )
-
-
 def _refine_from_pruned(spark, pruned, q_ids, qm, k, rerank_with, vec_col, id_col):
     """Exact-cosine rerank of an already depth-pruned (query_id,
     neighbor_id) frame against a full-precision vector table."""
@@ -1079,6 +1063,16 @@ def _refine_from_pruned(spark, pruned, q_ids, qm, k, rerank_with, vec_col, id_co
         "cosine", _cos("query_id", "__fv")
     ).drop("__fv")
     return _topk_window(scored, k)
+
+
+def _rrf(rrf_k: int):
+    """The fused score of a full-outer-joined (r_bm, r_cos) rank pair:
+    a ranker whose top-depth list misses the doc contributes 0."""
+    return F.round(
+        F.coalesce(1.0 / (rrf_k + F.col("r_bm")), F.lit(0.0))
+        + F.coalesce(1.0 / (rrf_k + F.col("r_cos")), F.lit(0.0)),
+        6,
+    ).alias("rrf")
 
 
 def hybrid_search_rrf(
@@ -1152,18 +1146,46 @@ def hybrid_search_rrf(
     cos_top = cos.orderBy(F.desc("cos"), F.asc("id")).limit(depth)  # TakeOrdered
     cos_r = _rank_local(cos_top, [F.desc("cos"), F.asc("id")], "r_cos")
 
-    fused = (
-        bm_r.join(cos_r, "id", "full_outer")
-        .select(
-            F.col("id").alias(doc_id_col),
-            F.round(
-                F.coalesce(1.0 / (rrf_k + F.col("r_bm")), F.lit(0.0))
-                + F.coalesce(1.0 / (rrf_k + F.col("r_cos")), F.lit(0.0)),
-                6,
-            ).alias("rrf"),
-        )
+    fused = bm_r.join(cos_r, "id", "full_outer").select(
+        F.col("id").alias(doc_id_col), _rrf(rrf_k)
     )
     return fused.orderBy(F.desc("rrf"), F.asc(doc_id_col)).limit(k)
+
+
+def _hybrid_index_fused(spark, text_path, ivf_path, queries, rrf_k, depth, nprobe):
+    """The one fusion body behind :func:`hybrid_index_rrf` and
+    :func:`hybrid_index_rrf_batch`: (query_id, doc_id, rrf) for every
+    doc in either ranker's top-``depth`` list of every query
+    (``queries``: query_id -> (terms, query_vec)). The lexical ranks
+    come from one pruned pass over the BM25 index (textindex), the
+    vector ranks from one batch probe of the IVF index — both ranked by
+    (rounded score desc, id asc) — and one full outer join applies the
+    RRF formula per query."""
+    from shc_spark.operators.textindex import _bm25_scores, _ranked
+
+    terms = {q: t for q, (t, _v) in queries.items()}
+    bm = _ranked(_bm25_scores(spark, text_path, terms), depth).select(
+        "query_id", "id", F.col("rank").alias("r_bm")
+    )
+    # vector query ids are negative ordinals: the top-k operators
+    # exclude self-matches by id equality, so a placeholder id that
+    # collides with a corpus id would silently drop that corpus vector
+    # from the ranking. The vectors are handed over precollected — no
+    # DataFrame round trip through Spark — and mapped back to query_id.
+    qorder = list(queries)
+    vids = [-(i + 1) for i in range(len(qorder))]
+    vmap = F.create_map(*[x for v, q in zip(vids, qorder) for x in (F.lit(v), F.lit(str(q)))])
+    vec = ivf_index_topk(
+        spark, ivf_path, None, k=depth, nprobe=nprobe,
+        precollected=(vids, _normalize_batch([queries[q][1] for q in qorder])),
+    ).select(
+        vmap[F.col("query_id")].alias("query_id"),
+        F.col("neighbor_id").alias("id"),
+        F.col("rank").alias("r_cos"),
+    )
+    return bm.join(vec, ["query_id", "id"], "full_outer").select(
+        "query_id", F.col("id").alias("doc_id"), _rrf(rrf_k)
+    )
 
 
 def hybrid_index_rrf(
@@ -1187,38 +1209,14 @@ def hybrid_index_rrf(
     top-``depth`` list with reproducible (rounded score, id) ranks.
 
     ``query_vec`` is the single query embedding as a plain list — the
-    one-request serving shape. With ``nprobe`` >= num_centroids the
-    vector ranking is exhaustive-exact and the whole result is
-    SQL-replayable (the driver gate pins exactly that)."""
-    from shc_spark.operators.textindex import text_index_topk
-
-    bm = text_index_topk(spark, text_path, terms, k=depth)
-    bm_r = (
-        bm.coalesce(1)
-        .sortWithinPartitions(F.desc("bm25"), F.asc("id"))
-        .select(
-            "id", (F.monotonically_increasing_id() + 1).cast("int").alias("r_bm")
-        )
+    one-request serving shape, run as the batch body on one query. With
+    ``nprobe`` >= num_centroids the vector ranking is exhaustive-exact
+    and the whole result is SQL-replayable (the driver gate pins
+    exactly that)."""
+    fused = _hybrid_index_fused(
+        spark, text_path, ivf_path, {"q": (terms, query_vec)}, rrf_k, depth, nprobe
     )
-    # query id -1: the top-k operators exclude self-matches by id
-    # equality, so a placeholder id that collides with a corpus id
-    # would silently drop that corpus vector from the ranking
-    qdf = spark.createDataFrame(
-        [(-1, [float(x) for x in query_vec])], "vec_id long, embedding array<double>"
-    )
-    vec = ivf_index_topk(spark, ivf_path, qdf, k=depth, nprobe=nprobe)
-    vec_r = vec.select(
-        F.col("neighbor_id").alias("id"), F.col("rank").alias("r_cos")
-    )
-    fused = bm_r.join(vec_r, "id", "full_outer").select(
-        F.col("id").alias("doc_id"),
-        F.round(
-            F.coalesce(1.0 / (rrf_k + F.col("r_bm")), F.lit(0.0))
-            + F.coalesce(1.0 / (rrf_k + F.col("r_cos")), F.lit(0.0)),
-            6,
-        ).alias("rrf"),
-    )
-    return fused.orderBy(F.desc("rrf"), F.asc("doc_id")).limit(k)
+    return fused.select("doc_id", "rrf").orderBy(F.desc("rrf"), F.asc("doc_id")).limit(k)
 
 
 def hybrid_index_rrf_batch(
@@ -1232,50 +1230,16 @@ def hybrid_index_rrf_batch(
     nprobe: int = 4,
 ) -> DataFrame:
     """Batched hybrid serving: ``queries`` maps query_id -> (terms,
-    query_vec). The lexical side answers ALL queries in one pruned
-    pass (textindex.text_index_topk_batch); the vector side probes the
-    IVF index with the whole query-vector batch at once
-    (ivf_index_topk is batch-native); RRF fuses per query. Per-query
-    results equal :func:`hybrid_index_rrf` run one by one — pinned by
-    test — at a fraction of the round-trips: the 1000-query serving
-    shape. Output: (query_id, doc_id, rrf, rank)."""
-    from shc_spark.operators.textindex import text_index_topk_batch
-
-    from pyspark.sql import Window
-
-    bm = text_index_topk_batch(
-        spark, text_path, {q: t for q, (t, _v) in queries.items()}, k=depth
-    ).select("query_id", "id", F.col("rank").alias("r_bm"))
-    # vector ids are negative ordinals so a corpus id can never
-    # self-exclude (see hybrid_index_rrf); map back to query_id after
-    qorder = sorted(queries)
-    qdf = spark.createDataFrame(
-        [(-(i + 1), [float(x) for x in queries[q][1]]) for i, q in enumerate(qorder)],
-        "vec_id long, embedding array<double>",
-    )
-    vmap = F.create_map(
-        *[x for i, q in enumerate(qorder) for x in (F.lit(-(i + 1)), F.lit(q))]
-    )
-    vec = (
-        ivf_index_topk(spark, ivf_path, qdf, k=depth, nprobe=nprobe)
-        .select(
-            vmap[F.col("query_id")].alias("query_id"),
-            F.col("neighbor_id").alias("id"),
-            F.col("rank").alias("r_cos"),
-        )
-    )
-    fused = bm.join(vec, ["query_id", "id"], "full_outer").select(
-        "query_id",
-        F.col("id").alias("doc_id"),
-        F.round(
-            F.coalesce(1.0 / (rrf_k + F.col("r_bm")), F.lit(0.0))
-            + F.coalesce(1.0 / (rrf_k + F.col("r_cos")), F.lit(0.0)),
-            6,
-        ).alias("rrf"),
-    )
+    query_vec), and all of them run the body of
+    :func:`hybrid_index_rrf` at once — the lexical side in one pruned
+    pass, the vector side in one IVF probe of the whole query-vector
+    batch — with a per-query window taking each top-k: the 1000-query
+    serving shape at a fraction of the round-trips. Output:
+    (query_id, doc_id, rrf, rank)."""
     w = Window.partitionBy("query_id").orderBy(F.desc("rrf"), F.asc("doc_id"))
     return (
-        fused.withColumn("rank", F.row_number().over(w))
+        _hybrid_index_fused(spark, text_path, ivf_path, queries, rrf_k, depth, nprobe)
+        .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("query_id", "doc_id", "rrf", "rank")
     )
@@ -1319,11 +1283,7 @@ def ivf_pq_topk(
 
     cent = _train_centroids(corpus, vec_col, num_centroids, dim, seed)
     books = quantize.train_pq(corpus, vec_col, id_col, m=m, k=num_codes)
-    q_ids, qm = (
-        precollected
-        if precollected is not None
-        else _collect_queries(queries, vec_col, id_col, max_queries)
-    )
+    q_ids, qm = _collect_queries(queries, vec_col, id_col, max_queries, precollected)
     probe_map: dict = {}
     lut = np.zeros((len(q_ids), m, num_codes))
     sub = dim // m

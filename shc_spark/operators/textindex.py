@@ -261,113 +261,57 @@ def delete_from_text_index(spark, path: str, ids) -> str:
     return path
 
 
-def text_index_topk(
-    spark,
-    path: str,
-    terms: list,
-    k: int = 20,
-    k1: float = 1.2,
-    b: float = 0.75,
+def _bm25_scores(
+    spark, path: str, queries: dict, k1: float = 1.2, b: float = 0.75
 ) -> DataFrame:
-    """BM25 top-k over the persisted index — value-identical to
-    ``text.bm25_search(corpus_minus_deleted, terms, ...)``. Reads ONLY
-    the |Q| query terms' posting buckets (partition pruning on tbkt +
-    a term predicate inside them); df comes from the pruned
-    candidates, dl rides each posting row (r15 denormalization — see
-    the module docstring for why the lengths join had to go: the DPP
-    it relied on is silently dropped by AQE at runtime), n_docs/avgdl
-    from the (correction-aware) stats rows — nothing corpus-sized
-    moves or is even scanned.
+    """The one BM25 query body behind :func:`text_index_topk` and
+    :func:`text_index_topk_batch`: (query_id, id, bm25) for every
+    candidate of every query in ``queries`` (query_id -> terms),
+    value-identical to ``text.bm25_search(corpus_minus_deleted, terms)``
+    per query. Reads ONLY the union of the queries' posting buckets
+    (partition pruning on tbkt + a term predicate inside them); df is
+    per (query_id, term) over that query's candidates, dl rides each
+    posting row (r15 denormalization — see the module docstring for
+    why the lengths join had to go: the DPP it relied on is silently
+    dropped by AQE at runtime), n_docs/avgdl come from the
+    (correction-aware) stats rows — nothing corpus-sized moves or is
+    even scanned.
 
     ZERO driver jobs before the action: term buckets come from the
-    Spark-identical driver-side XXH64 and the stats scalars ride a
-    broadcast single-row cross join instead of a collect — the whole
-    query is one Spark job at the caller's action, and every scan in
-    it is statically pruned."""
+    Spark-identical driver-side XXH64, the (term -> query ids) fan-out
+    is a map literal exploded on the pruned postings (no Python-side
+    DataFrame to ship), and the stats scalars ride a broadcast
+    single-row cross join instead of a collect."""
     from shc_spark.operators.idxcache import index_relation
     from shc_spark.operators.xxh import bucket_of_str
 
     nb = read_text_index_meta(spark, path)["num_buckets"]
-    terms = list(terms)
-    tbkts = sorted({bucket_of_str(t, nb) for t in terms})
+    qids_of: dict = {}
+    for qid, terms in queries.items():
+        for t in set(terms):
+            qids_of.setdefault(t, []).append(str(qid))
+    terms = sorted(qids_of)
     cand = index_relation(spark, path, "postings").filter(
-        F.col("tbkt").isin(tbkts) & F.col("term").isin(terms)
+        F.col("tbkt").isin(sorted({bucket_of_str(t, nb) for t in terms}))
+        & F.col("term").isin(terms)
     )
     if os.path.exists(os.path.join(path, "tombstones", "_SUCCESS")):
         cand = cand.join(
             index_relation(spark, path, "tombstones").select("id"), "id", "left_anti"
         )
+    # (typed so a query without terms still resolves: it matches nothing)
+    fan = F.create_map(
+        *[x for t in terms for x in (F.lit(t), F.array(*map(F.lit, qids_of[t])))]
+    ).cast("map<string,array<string>>")
     # NOT cached: the only double consumer is dfreq, and re-running
     # the tiny pruned postings scan twice inside the one job is
     # cheaper than a cache-materialization pass
-    stats = index_relation(spark, path, "stats").agg(
-        F.sum("n_docs").alias("n_docs"),
-        (F.sum("sum_dl") / F.sum("n_docs")).alias("avgdl"),
-    )
-    dfreq = cand.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    scored = (
-        cand.join(F.broadcast(dfreq), "term")
-        .crossJoin(F.broadcast(stats))
-        .withColumn(
-            "w",
-            F.log(1 + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5))
-            * (F.col("tf") * (k1 + 1))
-            / (F.col("tf") + k1 * (1 - b + b * F.col("dl") / F.col("avgdl"))),
-        )
-        .groupBy("id")
-        .agg(F.round(F.sum("w"), 4).alias("bm25"))
-    )
-    return scored.orderBy(F.desc("bm25"), F.asc("id")).limit(k)
-
-
-def text_index_topk_batch(
-    spark,
-    path: str,
-    queries: dict,
-    k: int = 20,
-    k1: float = 1.2,
-    b: float = 0.75,
-) -> DataFrame:
-    """BM25 top-k for a BATCH of queries — ``queries`` maps query_id
-    -> list of terms — in ONE pruned pass: the union of all queries'
-    posting buckets is read once, a broadcast (query_id, term) join
-    fans candidates out per query, and one window takes each query's
-    top-k. Per-query semantics are identical to :func:`text_index_topk`
-    (same rounding, same tie order); output is (query_id, id, bm25,
-    rank). This is the cluster-serving shape: 1000 queries cost one
-    index read of their combined term buckets, not 1000 round-trips."""
-    from shc_spark.operators.idxcache import index_relation
-    from shc_spark.operators.xxh import bucket_of_str
-
-    from pyspark.sql import Window
-
-    nb = read_text_index_meta(spark, path)["num_buckets"]
-    pairs = [(qid, t) for qid, terms in queries.items() for t in set(terms)]
-    if not pairs:
-        raise ValueError("queries must map query_id -> non-empty term list")
-    qdf = spark.createDataFrame(pairs, "query_id string, term string")
-    tbkts = sorted({bucket_of_str(t, nb) for _, t in pairs})
-    cand = index_relation(spark, path, "postings").filter(
-        F.col("tbkt").isin(tbkts)
-        & F.col("term").isin(sorted({t for _, t in pairs}))
-    )
-    if os.path.exists(os.path.join(path, "tombstones", "_SUCCESS")):
-        cand = cand.join(
-            index_relation(spark, path, "tombstones").select("id"), "id", "left_anti"
-        )
-    # fan out per query BEFORE df/score: df is per (query_id, term)
-    # over the query's candidate set — identical to the single-query
-    # operator run per query, in one plan. Uncached, same as the
-    # single-query path: zero pre-action jobs; dl rides each posting
-    # row (r15 denormalization — module docstring), so nothing
-    # corpus-sized is scanned.
-    cand = cand.join(F.broadcast(qdf), "term")
+    cand = cand.withColumn("query_id", F.explode(fan[F.col("term")]))
     stats = index_relation(spark, path, "stats").agg(
         F.sum("n_docs").alias("n_docs"),
         (F.sum("sum_dl") / F.sum("n_docs")).alias("avgdl"),
     )
     dfreq = cand.groupBy("query_id", "term").agg(F.count(F.lit(1)).alias("df"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("bm25"), F.asc("id"))
     return (
         cand.join(F.broadcast(dfreq), ["query_id", "term"])
         .crossJoin(F.broadcast(stats))
@@ -379,10 +323,61 @@ def text_index_topk_batch(
         )
         .groupBy("query_id", "id")
         .agg(F.round(F.sum("w"), 4).alias("bm25"))
-        .withColumn("rank", F.row_number().over(w))
+    )
+
+
+def _ranked(scored: DataFrame, k: int) -> DataFrame:
+    """Each query's top-k of a (query_id, id, bm25) frame with its
+    (bm25 desc, id asc) rank."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy("query_id").orderBy(F.desc("bm25"), F.asc("id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("query_id", "id", "bm25", "rank")
     )
+
+
+def text_index_topk(
+    spark,
+    path: str,
+    terms: list,
+    k: int = 20,
+    k1: float = 1.2,
+    b: float = 0.75,
+) -> DataFrame:
+    """BM25 top-k (id, bm25) over the persisted index — the batch body
+    (:func:`_bm25_scores`) run on one query, cut by a distributed
+    (bm25 desc, id asc) TakeOrdered. The whole query is one Spark job
+    at the caller's action, and every scan in it is statically pruned.
+    No terms -> an empty frame."""
+    return (
+        _bm25_scores(spark, path, {"q": terms}, k1, b)
+        .select("id", "bm25")
+        .orderBy(F.desc("bm25"), F.asc("id"))
+        .limit(k)
+    )
+
+
+def text_index_topk_batch(
+    spark,
+    path: str,
+    queries: dict,
+    k: int = 20,
+    k1: float = 1.2,
+    b: float = 0.75,
+) -> DataFrame:
+    """BM25 top-k for a BATCH of queries — ``queries`` maps query_id
+    -> list of terms — in ONE pruned pass of the same body as
+    :func:`text_index_topk`: the union of all queries' posting buckets
+    is read once, candidates fan out per query, and one window takes
+    each query's top-k. Output is (query_id, id, bm25, rank). This is
+    the cluster-serving shape: 1000 queries cost one index read of
+    their combined term buckets, not 1000 round-trips."""
+    if not any(queries.values()):
+        raise ValueError("queries must map query_id -> non-empty term list")
+    return _ranked(_bm25_scores(spark, path, queries, k1, b), k)
 
 
 def minor_compact_text_index(spark, path: str, threshold: int = 2) -> str:

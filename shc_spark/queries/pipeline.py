@@ -1835,10 +1835,10 @@ def _bm25_batch_oracle(queries: dict, k: int = 10) -> str:
 
 
 # Batched serving over the BM25 index: one pruned pass answers a whole
-# query batch (union of the queries' term buckets read once, broadcast
-# (query_id, term) fan-out, one per-query top-k window) — per-query
-# results identical to text_index_topk. The oracle replays every query
-# in one SQL statement.
+# query batch (union of the queries' term buckets read once, in-plan
+# (term -> query ids) fan-out, one per-query top-k window) — the same
+# body text_index_topk runs on one query. The oracle replays every
+# query in one SQL statement.
 @register("text_index_batch", _bm25_batch_oracle(_BATCH_QUERIES))
 def text_index_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     from shc_spark.operators import textindex
@@ -1912,8 +1912,8 @@ def _hybrid_batch_oracle(queries: dict, k: int = 10) -> str:
 
 # Batched hybrid serving (r8): lexical ranks for the whole batch from
 # ONE pruned BM25-index pass, vector ranks from ONE IVF batch probe,
-# RRF fused per query — per-query equal to sim_hybrid_index_rrf run
-# one at a time. Exhaustive probes make the whole batch SQL-replayable.
+# RRF fused per query — the body sim_hybrid_index_rrf runs on one
+# query. Exhaustive probes make the whole batch SQL-replayable.
 @register("sim_hybrid_index_batch", _hybrid_batch_oracle(_HYBRID_BATCH))
 def sim_hybrid_index_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     from shc_spark.operators import textindex

@@ -43,8 +43,11 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     Adapt to whatever the file declares so both Spark and the DuckDB
     oracle see identical values."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # memo-safe: this is the ONLY reader of events.parquet and always
-    # sets nanosAsLong first, so the memoized schema is conf-consistent
+    # memo-safe: session.load_tables also reads events.parquet through
+    # the memo without setting nanosAsLong. Its schema still cannot go
+    # stale: the conf stays set once this helper ran, and before that a
+    # NANOS file fails inference (nothing memoized) while a MICROS file
+    # infers the same schema under either setting
     df = read_parquet(spark, os.path.join(sf_dir, "events.parquet"))
     if isinstance(df.schema["ts"].dataType, T.LongType):
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))

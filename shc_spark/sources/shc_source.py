@@ -458,7 +458,6 @@ class ShcReader(DataSourceReader):
         token = self.options.get("_relation_token".lower())
         if not token:
             return
-        import sys
         import tempfile
 
         fp = hashlib.md5(
@@ -519,7 +518,7 @@ class ShcReader(DataSourceReader):
             log.debug("replan breadcrumb write failed for %s", marker, exc_info=True)
         if str(self.options.get("reuse_check", "")).lower() == "strict":
             raise RuntimeError(msg)
-        print("WARNING: " + msg, file=sys.stderr)
+        log.warning("%s", msg)
 
     # -- partition planning + pruning (S10) -------------------------------
     def partitions(self):

@@ -7,6 +7,16 @@ from dataclasses import dataclass
 from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import types as T
+from pyspark.sql.datasource import (
+    EqualTo,
+    GreaterThan,
+    GreaterThanOrEqual,
+    In,
+    LessThan,
+    LessThanOrEqual,
+    Not,
+    StringStartsWith,
+)
 
 from shc_spark.coders import get_coder
 from shc_spark.filters import (
@@ -84,55 +94,11 @@ def test_normalize_disjoint_sorted(specs):
 
 
 # --------------------------------------------------------------------------
-# Spark Filter translation (§2.2 zoo). Use simple stand-ins with the same
-# class names/attrs as pyspark.sql.datasource filters.
-
-
-@dataclass
-class EqualTo:
-    attribute: tuple
-    value: object
-
-
-@dataclass
-class GreaterThan:
-    attribute: tuple
-    value: object
-
-
-@dataclass
-class GreaterThanOrEqual:
-    attribute: tuple
-    value: object
-
-
-@dataclass
-class LessThan:
-    attribute: tuple
-    value: object
-
-
-@dataclass
-class LessThanOrEqual:
-    attribute: tuple
-    value: object
-
-
-@dataclass
-class In:
-    attribute: tuple
-    values: tuple
-
-
-@dataclass
-class StringStartsWith:
-    attribute: tuple
-    value: str
-
-
-@dataclass
-class Not:
-    child: object
+# Spark Filter translation (§2.2 zoo). The leaf filters are the real
+# pyspark.sql.datasource classes, so the tests see the exact shapes
+# Spark hands to DataSourceReader.pushFilters (In carries its values in
+# `value`). PySpark defines no And/Or filter classes, so those two stay
+# stand-ins: they exercise the translator's De Morgan / union handling.
 
 
 @dataclass
@@ -163,7 +129,7 @@ def evaluate(f, v) -> bool:
     if k == "LessThanOrEqual":
         return v <= f.value
     if k == "In":
-        return v in f.values
+        return v in f.value
     if k == "Not":
         return not evaluate(f.child, v)
     if k == "And":

@@ -2828,9 +2828,11 @@ def test_ivf_index_compaction(spark):
 
 def test_dedup_index_batch_equals_per_call(spark):
     """VERDICT r8 #7: N increments answered in one pruned pass must be
-    per-increment IDENTICAL to N separate dedup_index_pairs calls —
-    including when the SAME doc id appears in two increments with
-    different text (the composite struct key prevents conflation)."""
+    per-increment IDENTICAL to the inline bipartite operator
+    (minhash_lsh_pairs_between against the indexed corpus, same
+    banding) run on each increment — including when the SAME doc id
+    appears in two increments with different text (the composite
+    struct key prevents conflation)."""
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     corpus = docs.filter(F.col("doc_id") % 2 == 0)
     path = _dedup_index(spark, "batch", corpus)
@@ -2840,10 +2842,13 @@ def test_dedup_index_batch_equals_per_call(spark):
         got.setdefault(r["increment_id"], set()).add(
             (r["id_a"], r["id_b"], r["jaccard"])
         )
+    assert got
     for name, inc in incs.items():
         want = {
             (r["id_a"], r["id_b"], r["jaccard"])
-            for r in dedup.dedup_index_pairs(spark, path, inc).collect()
+            for r in dedup.minhash_lsh_pairs_between(
+                inc, corpus, "text", "doc_id", num_perm=64, bands=32, n=3
+            ).collect()
         }
         assert got.get(name, set()) == want, name
     # same id in two increments, different text: one matches the
@@ -3355,11 +3360,14 @@ def test_text_index_adversarial_corpus(spark):
 
 def test_text_index_batch_equals_per_query(spark):
     """Batched serving: each query's rows in text_index_topk_batch
-    must equal its standalone text_index_topk run (same scores, same
-    rank order)."""
+    must equal the inline text.bm25_search run on that query (same
+    scores, same rank order). Edge cases: a single query with no terms
+    is an empty result, a batch with no terms at all is an error."""
     import shutil
 
-    from shc_spark.operators import textindex
+    import pytest
+
+    from shc_spark.operators import text, textindex
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     p = "/tmp/shc_tidx_batch_t"
@@ -3371,18 +3379,25 @@ def test_text_index_batch_equals_per_query(spark):
     for r in out:
         by.setdefault(r["query_id"], []).append((r["id"], r["bm25"], r["rank"]))
     for qid, terms in Q.items():
-        single = [
+        ref = [
             (r["id"], r["bm25"], i + 1)
             for i, r in enumerate(
-                textindex.text_index_topk(spark, p, terms, k=10).collect()
+                text.bm25_search(docs, terms, "text", "doc_id", k=10).collect()
             )
         ]
-        assert sorted(by[qid], key=lambda t: t[2]) == single, qid
+        assert ref and sorted(by[qid], key=lambda t: t[2]) == ref, qid
+    assert textindex.text_index_topk(spark, p, [], k=10).collect() == []
+    with pytest.raises(ValueError, match="non-empty term list"):
+        textindex.text_index_topk_batch(spark, p, {"a": []}, k=10)
 
 
 def test_hybrid_index_batch_equals_per_query(spark):
-    """Batched hybrid serving == per-query hybrid_index_rrf for every
-    query in the batch (same fusion values, same rank order)."""
+    """Batched hybrid serving == RRF computed here from the two index
+    rankings (text_index_topk and an exhaustive ivf_index_topk, each
+    top-100) for every query in the batch (same fusion values, same
+    rank order)."""
+    from decimal import ROUND_HALF_UP, Decimal
+
     import os
     import shutil
 
@@ -3407,16 +3422,30 @@ def test_hybrid_index_batch_equals_per_query(spark):
     by: dict = {}
     for r in batch:
         by.setdefault(r["query_id"], []).append((r["doc_id"], r["rrf"], r["rank"]))
+
+    def rrf(*ranks):  # Spark's round(x, 6): HALF_UP on the double's decimal
+        x = sum(1.0 / (60 + r) for r in ranks if r is not None)
+        return float(Decimal(repr(x)).quantize(Decimal("1e-6"), ROUND_HALF_UP))
+
     for qid, (terms, qv) in Q.items():
-        single = [
-            (r["doc_id"], r["rrf"], i + 1)
+        r_bm = {
+            r["id"]: i + 1
             for i, r in enumerate(
-                similarity.hybrid_index_rrf(
-                    spark, tp, vp, terms, qv, k=10, nprobe=16
-                ).collect()
+                textindex.text_index_topk(spark, tp, terms, k=100).collect()
             )
-        ]
-        assert sorted(by[qid], key=lambda t: t[2]) == single, qid
+        }
+        qdf = spark.createDataFrame(
+            [(-1, [float(x) for x in qv])], "vec_id long, embedding array<double>"
+        )
+        r_cos = {
+            r["neighbor_id"]: r["rank"]
+            for r in similarity.ivf_index_topk(spark, vp, qdf, k=100, nprobe=16).collect()
+        }
+        fused = sorted(
+            ((-rrf(r_bm.get(d), r_cos.get(d)), d) for d in set(r_bm) | set(r_cos))
+        )[:10]
+        ref = [(d, -neg, i + 1) for i, (neg, d) in enumerate(fused)]
+        assert sorted(by[qid], key=lambda t: t[2]) == ref, qid
 
 
 def test_replace_subtree_swap_and_stale_bak(tmp_path):
@@ -5407,7 +5436,10 @@ def test_read_parquet_memo_identical_and_invalidates(spark, tmp_path):
     # the hit path must not run a schema-inference job
     sc = spark.sparkContext
     sc.setJobGroup("io-memo-hit", "io-memo-hit")
-    read_parquet(spark, p)
+    try:
+        read_parquet(spark, p)
+    finally:
+        sc.setJobGroup(None, None)
     assert len(sc.statusTracker().getJobIdsForGroup("io-memo-hit")) == 0
 
     # rewriting the file (new mtime/size) drops the memo: a CHANGED
@@ -5420,7 +5452,12 @@ def test_read_parquet_memo_identical_and_invalidates(spark, tmp_path):
     ).coalesce(1).write.parquet(p)
     fresh = read_parquet(spark, p)
     assert "s" in fresh.columns and "v" not in fresh.columns
-    assert any(k[0].endswith("t.parquet") for k in _SCHEMAS)
+    # the rewrite REPLACED the path's entry instead of adding one
+    import os
+
+    mine = [k for k in _SCHEMAS if k.startswith(os.path.realpath(tmp_path))]
+    assert mine == [os.path.realpath(p)]
+    assert _SCHEMAS[mine[0]][2] == fresh.schema
 
 
 def test_precollected_query_side_identical(spark):

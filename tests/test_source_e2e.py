@@ -298,6 +298,28 @@ def test_partition_pruning_effective(spark, basic_table, root):
     assert len(real) < len([p for p in all_parts if p.path])
 
 
+def test_key_in_pushdown_consumed_and_pruned(spark, basic_table, root):
+    """A key ``In`` in the shape Spark passes (pyspark.sql.datasource.In,
+    values in ``value``) is fully handled: pushFilters yields nothing
+    back for Spark to re-evaluate, and only the keys' regions are
+    planned (the multi-Get batch, HBaseFilter.scala:369-378)."""
+    from pyspark.sql.datasource import In
+
+    from shc_spark.sources.shc_source import ShcReader
+
+    reader = ShcReader(None, {"catalog": CAT_BASIC, "root": root})
+    assert list(reader.pushFilters([In(("col0",), ("row010", "row011"))])) == []
+    real = [p for p in reader.partitions() if p.path]
+    all_parts = ShcReader(None, {"catalog": CAT_BASIC, "root": root}).partitions()
+    assert 1 <= len(real) < len([p for p in all_parts if p.path])
+    got = read_table(spark, CAT_BASIC, root=basic_table).filter(
+        F.col("col0").isin("row010", "row011", "row200")
+    )
+    assert sorted(r["col0"] for r in got.select("col0").collect()) == [
+        "row010", "row011", "row200"
+    ]
+
+
 def test_phoenix_coder_composite(spark, root):
     """PhoenixType coder through the source: var-length dims with NUL
     separators (PhoenixCompositeKeySuite.scala:79-176 analog)."""
