@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from shc_spark.operators.planutil import no_adaptive
+from shc_spark.operators.similarity import _matrix, _unit
 from shc_spark.operators.text import shingles
 
 def exact_dedup(df: DataFrame, cols: list[str], id_col: str) -> DataFrame:
@@ -1250,10 +1251,7 @@ def embedding_near_dups(
     if not rows:
         return spark.createDataFrame([], schema)
     ids = np.array([r[0] for r in rows])
-    M = np.stack([np.asarray(r[1], dtype=np.float64) for r in rows])
-    nrm = np.linalg.norm(M, axis=1, keepdims=True)
-    nrm[nrm == 0] = 1.0
-    bc = spark.sparkContext.broadcast((ids, M / nrm))
+    bc = spark.sparkContext.broadcast((ids, _unit(_matrix([r[1] for r in rows]))))
 
     def gen(batches):
         c_ids, C = bc.value
@@ -1261,10 +1259,7 @@ def embedding_near_dups(
             if not len(pdf):
                 continue
             a_ids = pdf["__id"].to_numpy()
-            A = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["__vec"]])
-            an = np.linalg.norm(A, axis=1, keepdims=True)
-            an[an == 0] = 1.0
-            S = (A / an) @ C.T  # (batch, n)
+            S = _unit(_matrix(pdf["__vec"])) @ C.T  # (batch, n)
             # select a SUPERSET (threshold minus rounding slack) here;
             # the exact cut happens below on the F.round'ed value so
             # boundary pairs follow engine rounding semantics, not a
@@ -1346,11 +1341,7 @@ def embedding_near_dups_blocked(
             return pd.DataFrame({"id_a": [], "id_b": [], "cosine": []})
 
         def prep(part):
-            ids = part["__id"].to_numpy()
-            M = np.stack([np.asarray(v, dtype=np.float64) for v in part["__vec"]])
-            nrm = np.linalg.norm(M, axis=1, keepdims=True)
-            nrm[nrm == 0] = 1.0
-            return ids, M / nrm
+            return part["__id"].to_numpy(), _unit(_matrix(part["__vec"]))
 
         left = pdf[pdf["__b"] == i]
         right = pdf[pdf["__b"] == j] if i != j else left
@@ -1403,12 +1394,8 @@ def embedding_near_dups_blocked(
                     n, int(lens[0])
                 )
             else:  # ragged/null rows: same math, row at a time
-                M = np.stack(
-                    [np.asarray(v, dtype=np.float64) for v in vec.to_pylist()]
-                )
-            nrm = np.linalg.norm(M, axis=1, keepdims=True)
-            nrm[nrm == 0] = 1.0
-            return ids, M / nrm
+                M = _matrix(vec.to_pylist())
+            return ids, _unit(M)
 
         left = tbl.filter(pc.equal(tbl.column("__b"), i))
         right = tbl.filter(pc.equal(tbl.column("__b"), j)) if i != j else left

@@ -20,6 +20,14 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from shc_spark.operators.similarity import (
+    MAX_QUERY_ROWS,
+    _collect_queries,
+    _matrix,
+    _normalize_batch,
+    _pq_code_udf,
+)
+
 
 def dim_stats(df: DataFrame, vec_col: str = "embedding") -> list[tuple[float, float]]:
     """Per-dimension (min, max) over the corpus; driver materialization
@@ -89,12 +97,6 @@ def dequantize(
     return df.select(F.col(id_col), vec.alias(out_col))
 
 
-def _unit(M: "np.ndarray") -> "np.ndarray":
-    n = np.linalg.norm(M, axis=1, keepdims=True)
-    n[n == 0] = 1.0
-    return M / n
-
-
 # ---------------------------------------------------------------------------
 # product quantization (PQ): the billion-scale companion to SQ8 —
 # m subspace codebooks of k centroids give m log2(k)-bit codes per
@@ -124,9 +126,9 @@ def train_pq(
         .limit(sample_rows)
         .collect()
     )
-    X = np.array([list(r[0]) for r in rows], dtype=np.float64)
-    X = _unit(X)  # unit sphere: sq-euclidean == 2 - 2*cosine, so PQ
-    # ranks match the cosine searches elsewhere in the suite
+    # unit sphere: sq-euclidean == 2 - 2*cosine, so PQ ranks match the
+    # cosine searches elsewhere in the suite
+    X = _normalize_batch([r[0] for r in rows])
     n, dim = X.shape
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m={m}")
@@ -159,23 +161,7 @@ def pq_encode(
 ) -> DataFrame:
     """(id, codes array<int>) with codes[j] = argmin centroid of
     subspace j. Vectorized batch distance per subspace; map-only."""
-    books = np.asarray(codebooks, dtype=np.float64)
-    m, k, sub = books.shape
-
-    @F.pandas_udf("array<int>")
-    def _enc(col: pd.Series) -> pd.Series:
-        if col.empty:
-            return pd.Series([], dtype=object)
-        X = _unit(np.stack([np.asarray(v, dtype=np.float64) for v in col]))
-        codes = np.empty((len(X), m), dtype=np.int32)
-        for j in range(m):
-            S = X[:, j * sub : (j + 1) * sub]
-            c2 = (books[j] ** 2).sum(axis=1)
-            d = c2[None, :] - 2.0 * (S @ books[j].T)  # + |s|^2 (rank-invariant)
-            codes[:, j] = d.argmin(axis=1)
-        return pd.Series([row.tolist() for row in codes])
-
-    return df.select(F.col(id_col), _enc(F.col(vec_col)).alias("codes"))
+    return df.select(F.col(id_col), _pq_code_udf(codebooks)(F.col(vec_col)).alias("codes"))
 
 
 def pq_topk(
@@ -207,21 +193,15 @@ def pq_topk(
     instead of on raw code fidelity (measured on the near-isotropic
     synthetic embeddings — the adversarial case for PQ: 0.79 at R=10,
     0.93 at R=20, 0.98 at R=40; pinned by test)."""
-    from shc_spark.operators.similarity import MAX_QUERY_ROWS, _bounded_query_rows
-
     books = np.asarray(codebooks, dtype=np.float64)
     m, K, sub = books.shape
-    q_rows = _bounded_query_rows(
-        queries,
-        (id_col, vec_col),
-        MAX_QUERY_ROWS if max_queries is None else max_queries,
+    q_ids, qm = _collect_queries(
+        queries, vec_col, id_col, MAX_QUERY_ROWS if max_queries is None else max_queries
     )
-    q_ids = [r[0] for r in q_rows]
     lut = np.empty((len(q_ids), m, K))
-    for qi, r in enumerate(q_rows):
-        v = _unit(np.asarray(list(r[1]), dtype=np.float64)[None, :])[0]
+    for qi in range(len(q_ids)):
         for j in range(m):
-            diff = books[j] - v[j * sub : (j + 1) * sub][None, :]
+            diff = books[j] - qm[qi, j * sub : (j + 1) * sub][None, :]
             lut[qi, j] = (diff**2).sum(axis=1)
     spark = codes.sparkSession
     bc = spark.sparkContext.broadcast((q_ids, lut))
@@ -238,7 +218,7 @@ def pq_topk(
             if not len(pdf):
                 continue
             ids = pdf["__id"].to_numpy()
-            C = np.stack([np.asarray(c, dtype=np.int64) for c in pdf["__vec"]])
+            C = _matrix(pdf["__vec"], np.int64)
             # (nq, batch): sum over subspaces of lut[q, j, C[:, j]]
             D = lut_[:, jidx, C].sum(axis=2)
             top = min(depth + 1, D.shape[1])  # +1 absorbs a self-match
@@ -267,16 +247,14 @@ def pq_topk(
         return pruned
     if vectors is None:
         raise ValueError("rerank_factor requires the full-precision `vectors`")
-    qmap = {qid: _unit(np.asarray(list(r[1]), dtype=np.float64)[None, :])[0]
-            for qid, r in zip(q_ids, q_rows)}
-    bq = spark.sparkContext.broadcast(qmap)
+    bq = spark.sparkContext.broadcast({qid: qm[i] for i, qid in enumerate(q_ids)})
 
     @F.pandas_udf("double")
     def _cos(qid: pd.Series, vec: pd.Series) -> pd.Series:
         qm = bq.value
         if qid.empty:
             return pd.Series([], dtype=float)
-        M = _unit(np.stack([np.asarray(v, dtype=np.float64) for v in vec]))
+        M = _normalize_batch(vec)
         q = np.stack([qm[x] for x in qid])
         return pd.Series(np.round((M * q).sum(axis=1), 4))
 

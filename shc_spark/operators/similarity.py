@@ -1,31 +1,43 @@
 """Similarity search over embedding columns (array<float>).
 
-All three paths share one execution shape, the right one for a corpus
-that is huge and a query set that is small:
+Every vector top-k runs through one scoring core, `_scored`, the right
+shape for a corpus that is huge and a query set that is small:
 
-- the query side is collected into a numpy matrix and shipped to
-  executors via the UDF closure / Spark broadcast (exactly what a
-  broadcast hash join does with its build side);
-- the corpus NEVER shuffles: one `mapInPandas` pass computes, per
-  Arrow batch, the candidate set and its cosine scores as numpy
-  matmuls, and emits only the per-batch top-k per query;
+- the query side is collected into a numpy matrix (with whatever each
+  operator derives from it: LSH buckets, probed cells, PQ lookup
+  tables, labels) and shipped to executors as ONE Spark broadcast
+  (exactly what a broadcast hash join does with its build side);
+- the corpus NEVER shuffles: one `mapInPandas` pass asks the
+  operator's `score_batch(pdf, side)` for a (batch, nq) score matrix
+  and a (batch, nq) candidate mask (None = every row), and the shared
+  `_emit_topk` emits only the per-batch top-k per query;
 - the single shuffle in any plan is the final global top-k window,
   whose input is ~num_batches * nq * k rows, not |corpus| * nq.
+
+Users of the core: cosine_topk, sq8_topk, lsh_topk, ivf_topk,
+ivf_pq_topk, hard_negative_topk and the persisted-IVF search
+(ivf_index_topk, ivf_index_topk_with_refine, hybrid_index_rrf*).
+Their `queries` argument takes either a DataFrame or a
+collect_query_side() result, so several rankings of one query set
+share one driver collect.
 
 Partitioning comes from the source (a 100 TB corpus arrives with
 thousands of parquet splits); no repartition is forced — at bench
 scale a forced widen costs a full shuffle stage to parallelize
 microseconds of matmul.
 
-- cosine_topk: exact brute force — every corpus row is a candidate.
-- lsh_topk: multi-table random-hyperplane LSH. Bucket ids, probe
-  matching (exact bucket + 1-bit flips), scoring, and local top-k all
-  happen inside the one corpus pass; a corpus row's candidacy for all
-  tables is resolved in its own batch, so candidates are globally
-  unique without any dedup shuffle.
-- ivf_topk: IVF-style coarse quantization with deterministic seeded
-  centroids; each corpus row joins its single nearest centroid's
-  posting list, queries probe their nprobe nearest lists.
+- cosine_topk / sq8_topk: exact brute force (SQ8 dequantizes first) —
+  every corpus row is a candidate.
+- lsh_topk: multi-table random-hyperplane LSH. A row is a candidate
+  for a query when their buckets match in some table (or differ by
+  one bit, with multiprobe); a corpus row's candidacy for all tables
+  is resolved in its own batch, so candidates are globally unique
+  without any dedup shuffle.
+- ivf_topk / ivf_pq_topk / ivf_index_topk: IVF coarse quantization
+  with deterministic trained centroids; each corpus row joins its
+  single nearest centroid's posting list, queries probe their nprobe
+  nearest lists.
+- hard_negative_topk: the candidate mask is the label rule.
 
 Round-1 lesson baked in here: per-candidate `F.aggregate(zip_with())`
 dots are interpreted per row and made both ANN paths slower than the
@@ -71,26 +83,40 @@ def _bounded_query_rows(queries: DataFrame, cols, max_queries: int):
     return rows
 
 
+def _matrix(col, dtype=np.float64) -> np.ndarray:
+    """(n, dim) matrix of a non-empty sequence of vectors (a pandas
+    Series of arrays, or a list of lists from a collect)."""
+    return np.stack([np.asarray(v, dtype=dtype) for v in col])
+
+
+def _unit(M: np.ndarray) -> np.ndarray:
+    """Rows scaled to unit L2 norm; all-zero rows stay zero."""
+    n = np.linalg.norm(M, axis=1, keepdims=True)
+    n[n == 0] = 1.0
+    return M / n
+
+
+def _normalize_batch(vecs) -> np.ndarray:
+    return _unit(_matrix(vecs))
+
+
 def _collect_queries(
-    queries: DataFrame,
+    queries,
     vec_col: str,
     id_col: str,
     max_queries: int = MAX_QUERY_ROWS,
-    precollected: "tuple | None" = None,
+    extra: tuple = (),
 ):
-    """(ids list, normalized float64 matrix) for the small query side.
-    Empty query sets return an empty matrix (callers emit nothing). A
-    ``precollected`` pair (collect_query_side()) is returned as is."""
-    if precollected is not None:
-        return precollected
-    rows = _bounded_query_rows(queries, (id_col, vec_col), max_queries)
-    ids = [r[0] for r in rows]
-    if not rows:
-        return ids, np.zeros((0, 1), dtype=np.float64)
-    qm = np.stack([np.asarray(r[1], dtype=np.float64) for r in rows])
-    n = np.linalg.norm(qm, axis=1, keepdims=True)
-    n[n == 0] = 1.0
-    return ids, qm / n
+    """(ids list, normalized float64 matrix, *one object array per
+    ``extra`` column) for the small query side. Empty query sets
+    return an empty matrix (callers emit nothing). An already
+    collected side (a collect_query_side() tuple) is returned as is."""
+    if isinstance(queries, tuple):
+        return queries
+    rows = _bounded_query_rows(queries, (id_col, vec_col, *extra), max_queries)
+    qm = _normalize_batch([r[1] for r in rows]) if rows else np.zeros((0, 1))
+    cols = [np.asarray([r[i] for r in rows], dtype=object) for i in range(2, 2 + len(extra))]
+    return ([r[0] for r in rows], qm, *cols)
 
 
 def collect_query_side(
@@ -100,21 +126,14 @@ def collect_query_side(
     max_queries: int = MAX_QUERY_ROWS,
 ):
     """ONE bounded driver collect of the query side, reusable across
-    several top-k calls over the SAME query frame via their
-    ``precollected`` parameter. A gate that scores two rankings over
+    several top-k calls over the SAME query frame: pass the result as
+    their ``queries`` argument. A gate that scores two rankings over
     one query set (an index search judged against an exact or
     reference ranking) otherwise collects — and re-runs the query
     frame's upstream scan — once PER ranking; at any corpus scale
     that is duplicated driver ingress and a duplicated source job for
     byte-identical (ids, normalized matrix) output."""
     return _collect_queries(queries, vec_col, id_col, max_queries)
-
-
-def _normalize_batch(vecs) -> np.ndarray:
-    M = np.stack([np.asarray(v, dtype=np.float64) for v in vecs])
-    n = np.linalg.norm(M, axis=1, keepdims=True)
-    n[n == 0] = 1.0
-    return M / n
 
 
 # slack added to per-batch pruning cutoffs: any binary rounding of a
@@ -127,21 +146,15 @@ def _normalize_batch(vecs) -> np.ndarray:
 _ROUND_SLACK = 1e-4
 
 
-def _emit_topk(q_ids, ids, S, cand_lists, k):
+def _emit_topk(q_ids, ids, S, mask, k):
     """Per-batch candidate pruning per query: emit every row whose
     unrounded cosine is within _ROUND_SLACK of the batch's kth-best —
     a superset of any batch rows the global window (rounded cosine
-    desc, id asc) could rank in its top k. ``cand_lists[j]`` holds the
-    batch-row indices that are candidates for query j (None = all).
+    desc, id asc) could rank in its top k. ``mask[:, j]`` marks the
+    batch rows that are candidates for query j (None = all).
     Yields pandas DataFrames."""
     for j, qid in enumerate(q_ids):
-        rows = cand_lists[j] if cand_lists is not None else None
-        if rows is None:
-            rows = np.arange(len(ids))
-        elif len(rows) == 0:
-            continue
-        else:
-            rows = np.asarray(rows)
+        rows = np.arange(len(ids)) if mask is None else np.flatnonzero(mask[:, j])
         rows = rows[ids[rows] != qid]  # self-matches excluded
         if not len(rows):
             continue
@@ -169,46 +182,76 @@ def _topk_window(part: DataFrame, k: int) -> DataFrame:
     )
 
 
-def _run(corpus: DataFrame, vec_col: str, id_col: str, k: int, score_fn) -> DataFrame:
-    id_type = corpus.schema[id_col].dataType.simpleString()
-    part = corpus.select(
-        F.col(id_col).alias("__id"), F.col(vec_col).alias("__vec")
-    ).mapInPandas(score_fn, f"query_id {id_type}, neighbor_id {id_type}, cosine double")
-    return _topk_window(part, k)
+def _scored(frame: DataFrame, cols, side: tuple, score_batch, k: int) -> DataFrame:
+    """The one scoring pass behind every vector top-k. ``side`` (a
+    tuple whose first item is the query id list) is broadcast once;
+    ``cols`` = (id, payload[, aux]) of ``frame`` stream through one
+    mapInPandas as ``__id``, ``__vec`` and ``__aux``. Per Arrow batch,
+    ``score_batch(pdf, side)`` returns the (batch, nq) score matrix
+    and the (batch, nq) boolean candidate mask (None = every row), and
+    _emit_topk keeps each query's per-batch top-``k`` superset.
+    Output: (query_id, neighbor_id, cosine), unrounded and unranked."""
+    bc = frame.sparkSession.sparkContext.broadcast(side)
+    id_type = frame.schema[cols[0]].dataType.simpleString()
+
+    def score(batches):
+        side_ = bc.value
+        if not len(side_[0]):
+            return
+        for pdf in batches:
+            if len(pdf):
+                S, mask = score_batch(pdf, side_)
+                yield from _emit_topk(side_[0], pdf["__id"].to_numpy(), S, mask, k)
+
+    return frame.select(
+        *[F.col(c).alias(a) for c, a in zip(cols, ("__id", "__vec", "__aux"))]
+    ).mapInPandas(score, f"query_id {id_type}, neighbor_id {id_type}, cosine double")
+
+
+def _probe(qm: np.ndarray, cent: np.ndarray, nprobe: int) -> np.ndarray:
+    """(nq, nprobe) cells each query scans: its nprobe nearest
+    centroids."""
+    if not len(qm):
+        return np.zeros((0, nprobe), dtype=np.int64)
+    return np.argsort(-(qm @ cent.T), axis=1)[:, :nprobe]
+
+
+def _routed(cells: np.ndarray, probe: np.ndarray) -> np.ndarray:
+    """(batch, nq) candidate mask: row i is a candidate for query j
+    when its cell ``probe[i]`` is one of the cells query j scans."""
+    mask = np.zeros((len(probe), len(cells)), dtype=bool)
+    for c in cells.T:
+        mask |= probe[:, None] == c[None, :]
+    return mask
+
+
+def _dequant(stats: list, levels: int = 256):
+    """Decoder of an SQ8 codes column to unit float64 vectors under
+    per-dimension (mn, mx) stats: one affine op, mn + code * step."""
+    mn = np.array([s[0] for s in stats], dtype=np.float64)
+    step = np.array([(s[1] - s[0]) / (levels - 1) for s in stats], dtype=np.float64)
+    return lambda col: _unit(mn + _matrix(col) * step)
 
 
 def cosine_topk(
-    queries: DataFrame,
+    queries: "DataFrame | tuple",
     corpus: DataFrame,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     k: int = 5,
     max_queries: int = MAX_QUERY_ROWS,
-    precollected: "tuple | None" = None,
 ) -> DataFrame:
     """Exact cosine top-k of corpus for each query vector.
 
     Output: query_id, neighbor_id, cosine (4dp), rank. Ties broken by
     neighbor id -> fully deterministic. Self-matches excluded.
-    ``precollected`` accepts a collect_query_side() result to share
-    one query collect across several rankings of the same frame."""
-    spark = corpus.sparkSession
-    bq = spark.sparkContext.broadcast(
-        _collect_queries(queries, vec_col, id_col, max_queries, precollected)
-    )
+    ``queries`` is a DataFrame or a collect_query_side() result."""
 
-    def score(batches):
-        q_ids, q_mat = bq.value
-        if not q_ids:
-            return
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf["__id"].to_numpy()
-            S = _normalize_batch(pdf["__vec"]) @ q_mat.T  # (batch, nq)
-            yield from _emit_topk(q_ids, ids, S, None, k)
+    def score_batch(pdf, side):
+        return _normalize_batch(pdf["__vec"]) @ side[1].T, None
 
-    return _run(corpus, vec_col, id_col, k, score)
+    side = _collect_queries(queries, vec_col, id_col, max_queries)
+    return _topk_window(_scored(corpus, (id_col, vec_col), side, score_batch, k), k)
 
 
 def semantic_contamination(
@@ -349,7 +392,7 @@ def mmr_rerank(
 
 
 def sq8_topk(
-    queries: DataFrame,
+    queries: "DataFrame | tuple",
     codes: DataFrame,
     stats: list,
     codes_col: str = "codes",
@@ -358,7 +401,6 @@ def sq8_topk(
     k: int = 5,
     levels: int = 256,
     max_queries: int = MAX_QUERY_ROWS,
-    precollected: "tuple | None" = None,
 ) -> DataFrame:
     """Cosine top-k over an SQ8-COMPRESSED corpus (see
     operators/quantize.py): the scan reads int8-range codes — 4x less
@@ -368,33 +410,17 @@ def sq8_topk(
     stay full-precision. At 255 levels the score error per dim is
     <= span/510, so recall@k is near-exact (pinned by test); pair with
     exact re-ranking of the union top-k' when exactness matters."""
-    mn = np.array([s[0] for s in stats], dtype=np.float64)
-    step = np.array([(s[1] - s[0]) / (levels - 1) for s in stats], dtype=np.float64)
-    spark = codes.sparkSession
-    bq = spark.sparkContext.broadcast(
-        _collect_queries(queries, vec_col, id_col, max_queries, precollected)
-    )
+    decode = _dequant(stats, levels)
 
-    def score(batches):
-        q_ids, q_mat = bq.value
-        if not q_ids:
-            return
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf["__id"].to_numpy()
-            C = np.stack([np.asarray(c, dtype=np.float64) for c in pdf["__vec"]])
-            M = mn + C * step
-            n = np.linalg.norm(M, axis=1, keepdims=True)
-            n[n == 0] = 1.0
-            S = (M / n) @ q_mat.T
-            yield from _emit_topk(q_ids, ids, S, None, k)
+    def score_batch(pdf, side):
+        return decode(pdf["__vec"]) @ side[1].T, None
 
-    return _run(codes, codes_col, id_col, k, score)
+    side = _collect_queries(queries, vec_col, id_col, max_queries)
+    return _topk_window(_scored(codes, (id_col, codes_col), side, score_batch, k), k)
 
 
 def lsh_topk(
-    queries: DataFrame,
+    queries: "DataFrame | tuple",
     corpus: DataFrame,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
@@ -405,7 +431,6 @@ def lsh_topk(
     multiprobe: bool = True,
     seed: int = 7,
     max_queries: int = MAX_QUERY_ROWS,
-    precollected: "tuple | None" = None,
 ) -> DataFrame:
     """Approximate top-k via multi-table sign-LSH.
 
@@ -417,56 +442,38 @@ def lsh_topk(
     ~= 28% of the corpus; the fraction shrinks geometrically with
     planes_per_table as the corpus grows — tune both up at scale.
 
-    The probe map {(table, bucket) -> query rows} is built driver-side
-    (nq * tables * (1+planes) entries) and rides the UDF closure;
-    bucketing (sign-LSH is scale-invariant — raw vectors hash
-    directly), candidate masking, scoring, and local top-k all run in
-    the single corpus pass."""
+    The query buckets, an (nq, tables) array, are computed driver-side
+    and ride the broadcast; bucketing (sign-LSH is scale-invariant —
+    raw vectors hash directly), the per-table bucket match (XOR of the
+    two bucket ids is 0, or a power of two with ``multiprobe``),
+    scoring, and local top-k all run in the single corpus pass."""
     rng = np.random.RandomState(seed)
     planes = rng.standard_normal((num_tables, planes_per_table, dim))
     weights = (1 << np.arange(planes_per_table)).astype(np.int64)
     flat = planes.reshape(num_tables * planes_per_table, dim)
 
-    q_ids, qm = _collect_queries(queries, vec_col, id_col, max_queries, precollected)
-    probe_map: dict = {}
-    for t in range(num_tables if q_ids else 0):
-        b0 = (((qm @ planes[t].T) > 0) * weights).sum(axis=1).astype(np.int64)
-        for qi in range(len(q_ids)):
-            cand_bkts = [int(b0[qi])]
-            if multiprobe:
-                cand_bkts += [int(b0[qi]) ^ (1 << p) for p in range(planes_per_table)]
-            for b in cand_bkts:
-                probe_map.setdefault((t, b), []).append(qi)
-    spark = corpus.sparkSession
-    bc = spark.sparkContext.broadcast((q_ids, qm, probe_map))
+    def score_batch(pdf, side):
+        _ids, qm, qb = side
+        M = _normalize_batch(pdf["__vec"])
+        # (batch, tables) bucket ids — normalization doesn't change
+        # signs, so hashing the normalized matrix is equivalent
+        signs = ((M @ flat.T) > 0).reshape(len(M), num_tables, planes_per_table)
+        bkts = (signs * weights).sum(axis=2)
+        mask = np.zeros((len(M), len(qb)), dtype=bool)
+        for t in range(num_tables):
+            x = bkts[:, t, None] ^ qb[None, :, t]
+            mask |= ((x & (x - 1)) == 0) if multiprobe else (x == 0)
+        return M @ qm.T, mask
 
-    def score(batches):
-        qids_, qm_, pmap = bc.value
-        if not qids_:
-            return
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf["__id"].to_numpy()
-            M = _normalize_batch(pdf["__vec"])
-            # (batch, tables) bucket ids — normalization doesn't change
-            # signs, so hashing the normalized matrix is equivalent
-            signs = (M @ flat.T) > 0
-            bkts = (
-                signs.reshape(len(M), num_tables, planes_per_table) * weights
-            ).sum(axis=2)
-            cand = [set() for _ in qids_]
-            for t in range(num_tables):
-                col = bkts[:, t]
-                for i in range(len(ids)):
-                    for qi in pmap.get((t, int(col[i])), ()):
-                        cand[qi].add(i)
-            S = M @ qm_.T
-            yield from _emit_topk(
-                qids_, ids, S, [sorted(c) for c in cand], k
-            )
-
-    return _run(corpus, vec_col, id_col, k, score)
+    q_ids, qm = _collect_queries(queries, vec_col, id_col, max_queries)
+    qb = np.zeros((0, num_tables), dtype=np.int64)  # (nq, tables) query buckets
+    if q_ids:
+        qb = np.stack(
+            [(((qm @ planes[t].T) > 0) * weights).sum(axis=1) for t in range(num_tables)],
+            axis=1,
+        )
+    side = (q_ids, qm, qb)
+    return _topk_window(_scored(corpus, (id_col, vec_col), side, score_batch, k), k)
 
 
 def _train_centroids(
@@ -487,7 +494,7 @@ def _train_centroids(
     hyperplane centroids when the sample is smaller than the
     codebook."""
     sample = [
-        np.asarray(r[0], dtype=np.float64)
+        r[0]
         for r in corpus.select(vec_col)
         .orderBy(F.xxhash64(F.col(vec_col)))
         .limit(sample_rows)
@@ -497,10 +504,7 @@ def _train_centroids(
     if len(sample) < num_centroids:
         cent = rng.standard_normal((num_centroids, dim))
         return cent / np.linalg.norm(cent, axis=1, keepdims=True)
-    X = np.stack(sample)
-    n = np.linalg.norm(X, axis=1, keepdims=True)
-    n[n == 0] = 1.0
-    X = X / n
+    X = _normalize_batch(sample)
     cent = X[rng.choice(len(X), num_centroids, replace=False)]
     for _ in range(iters):
         assign = np.argmax(X @ cent.T, axis=1)
@@ -515,7 +519,7 @@ def _train_centroids(
 
 
 def ivf_topk(
-    queries: DataFrame,
+    queries: "DataFrame | tuple",
     corpus: DataFrame,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
@@ -526,7 +530,6 @@ def ivf_topk(
     seed: int = 11,
     max_queries: int = MAX_QUERY_ROWS,
     centroids=None,
-    precollected: "tuple | None" = None,
 ) -> DataFrame:
     """IVF ANN with a spherical-k-means coarse quantizer trained on a
     bounded corpus sample: corpus rows attach to their single nearest
@@ -543,34 +546,14 @@ def ivf_topk(
         else _train_centroids(corpus, vec_col, num_centroids, dim, seed)
     )
 
-    q_ids, qm = _collect_queries(queries, vec_col, id_col, max_queries, precollected)
-    probe_map: dict = {}
-    if q_ids:
-        probe_idx = np.argsort(-(qm @ cent.T), axis=1)[:, :nprobe]
-        for qi in range(len(q_ids)):
-            for c in probe_idx[qi]:
-                probe_map.setdefault(int(c), []).append(qi)
-    spark = corpus.sparkSession
-    bc = spark.sparkContext.broadcast((q_ids, qm, probe_map))
+    def score_batch(pdf, side):
+        _ids, qm, cells = side
+        M = _normalize_batch(pdf["__vec"])
+        return M @ qm.T, _routed(cells, np.argmax(M @ cent.T, axis=1))
 
-    def score(batches):
-        qids_, qm_, pmap = bc.value
-        if not qids_:
-            return
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf["__id"].to_numpy()
-            M = _normalize_batch(pdf["__vec"])
-            cid = np.argmax(M @ cent.T, axis=1)
-            cand = [[] for _ in qids_]
-            for i in range(len(ids)):
-                for qi in pmap.get(int(cid[i]), ()):
-                    cand[qi].append(i)
-            S = M @ qm_.T
-            yield from _emit_topk(qids_, ids, S, cand, k)
-
-    return _run(corpus, vec_col, id_col, k, score)
+    q_ids, qm = _collect_queries(queries, vec_col, id_col, max_queries)
+    side = (q_ids, qm, _probe(qm, cent, nprobe))
+    return _topk_window(_scored(corpus, (id_col, vec_col), side, score_batch, k), k)
 
 
 # On-disk layout version of the persisted IVF index (centroids/ +
@@ -834,7 +817,7 @@ def delete_from_ivf_index(spark, path: str, ids) -> str:
 def ivf_index_topk(
     spark,
     path: str,
-    queries: DataFrame,
+    queries: "DataFrame | tuple",
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     k: int = 5,
@@ -842,7 +825,6 @@ def ivf_index_topk(
     max_queries: int = MAX_QUERY_ROWS,
     rerank_with: DataFrame | None = None,
     rerank_factor: int = 20,
-    precollected: "tuple | None" = None,
 ) -> DataFrame:
     """Search a persisted IVF index (build_ivf_index): probe lists are
     chosen against the tiny centroids table, and the postings scan is
@@ -859,11 +841,11 @@ def ivf_index_topk(
     squared-L2 and cosine are affine twins). Pass ``rerank_with`` (a
     full-precision (id_col, vec_col) table, e.g. the corpus) to get
     the FAISS refine stage: PQ prunes to ``rerank_factor * k``
-    survivors per query and only those join back for exact cosines."""
+    survivors per query and only those join back for exact cosines.
+    ``queries`` is a DataFrame or a collect_query_side() result."""
     depth = max(k * rerank_factor, k) if rerank_with is not None else k
     part, q_ids, qm = _ivf_index_scored(
-        spark, path, queries, vec_col, id_col, nprobe, max_queries, depth,
-        precollected=precollected,
+        spark, path, queries, vec_col, id_col, nprobe, max_queries, depth
     )
     if rerank_with is None:
         return _topk_window(part, k)
@@ -877,7 +859,7 @@ def ivf_index_topk(
 def ivf_index_topk_with_refine(
     spark,
     path: str,
-    queries: DataFrame,
+    queries: "DataFrame | tuple",
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     k: int = 5,
@@ -885,7 +867,6 @@ def ivf_index_topk_with_refine(
     max_queries: int = MAX_QUERY_ROWS,
     rerank_with: DataFrame | None = None,
     rerank_factor: int = 20,
-    precollected: "tuple | None" = None,
 ) -> "tuple[DataFrame, DataFrame]":
     """(approx_topk, refined_topk) from ONE pruned postings scan.
 
@@ -906,8 +887,7 @@ def ivf_index_topk_with_refine(
     execute once (ReusedExchange — pinned by tests/test_plans.py)."""
     depth = max(k * rerank_factor, k)
     part, q_ids, qm = _ivf_index_scored(
-        spark, path, queries, vec_col, id_col, nprobe, max_queries, depth,
-        precollected=precollected,
+        spark, path, queries, vec_col, id_col, nprobe, max_queries, depth
     )
     # r15: pin the depth-ranked frame (bounded: nq x depth rows) so
     # the postings scan + Python scoring pass execute exactly ONCE no
@@ -941,13 +921,12 @@ def ivf_index_topk_with_refine(
 def _ivf_index_scored(
     spark,
     path: str,
-    queries: DataFrame,
+    queries,
     vec_col: str,
     id_col: str,
     nprobe: int,
     max_queries: int,
     depth: int,
-    precollected: "tuple | None" = None,
 ):
     """The shared body of the persisted-IVF search: probe selection
     against the saved centroids, pruned postings scan, storage-tier
@@ -958,16 +937,8 @@ def _ivf_index_scored(
     cent = read_ivf_centroids(spark, path)
     stats = read_ivf_quant(spark, path)
     books = read_ivf_pq(spark, path)
-    dq = (
-        None
-        if stats is None
-        else (
-            np.array([s[0] for s in stats], dtype=np.float64),
-            np.array([(s[1] - s[0]) / 255.0 for s in stats], dtype=np.float64),
-        )
-    )
-    q_ids, qm = _collect_queries(queries, vec_col, id_col, max_queries, precollected)
-    probe_map: dict = {}
+    q_ids, qm = _collect_queries(queries, vec_col, id_col, max_queries)
+    cells = _probe(qm, cent, nprobe)
     lut = None
     if books is not None and len(q_ids):
         # fp32 LUTs (VERDICT r10 #7): halves the broadcast and the ADC
@@ -979,65 +950,33 @@ def _ivf_index_scored(
         qr = qm.reshape(len(q_ids), m, 1, sub)  # (Q, m, 1, sub)
         diff = books[None, :, :, :] - qr  # (Q, m, K, sub)
         lut = np.einsum("qmks,qmks->qmk", diff, diff).astype(np.float32)
-    if q_ids:
-        probe_idx = np.argsort(-(qm @ cent.T), axis=1)[:, :nprobe]
-        for qi in range(len(q_ids)):
-            for c in probe_idx[qi]:
-                probe_map.setdefault(int(c), []).append(qi)
-    bc = spark.sparkContext.broadcast((q_ids, qm, probe_map, dq, lut))
+    decode = _normalize_batch if stats is None else _dequant(stats)
+
+    def score_batch(pdf, side):
+        _ids, qm_, cells_, lut_ = side
+        mask = _routed(cells_, pdf["__aux"].to_numpy())
+        if lut_ is None:  # float or SQ8 postings
+            return decode(pdf["__vec"]) @ qm_.T, mask
+        # PQ postings: ADC — D[q, i] = sum_j lut[q, j, code_ij];
+        # report 1 - D/2 (the unit-sphere cosine equivalent)
+        C = _matrix(pdf["__vec"], np.int64)
+        return 1.0 - lut_[:, np.arange(C.shape[1]), C].sum(axis=2).T / 2.0, mask
 
     from shc_spark.operators.idxcache import index_relation
 
+    probed = list(dict.fromkeys(int(c) for c in cells.ravel()))
     postings = index_relation(spark, path, "postings").filter(
-        F.col("cid").isin(*[int(c) for c in probe_map]) if probe_map else F.lit(False)
+        F.col("cid").isin(*probed) if probed else F.lit(False)
     )
     if os.path.exists(os.path.join(path, "tombstones", "_SUCCESS")):
         tomb = index_relation(spark, path, "tombstones")
         postings = postings.join(
             tomb.select(F.col("id").alias(id_col)), id_col, "left_anti"
         )
-    id_type = postings.schema[id_col].dataType.simpleString()
     payload_col = "codes" if (stats is not None or books is not None) else vec_col
-
-    def score(batches):
-        qids_, qm_, pmap, dq_, lut_ = bc.value
-        if not qids_:
-            return
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf["__id"].to_numpy()
-            cid = pdf["__cid"].to_numpy()
-            cand = [[] for _ in qids_]
-            for i in range(len(ids)):
-                for qi in pmap.get(int(cid[i]), ()):
-                    cand[qi].append(i)
-            if lut_ is not None:
-                # PQ postings: ADC — D[q, i] = sum_j lut[q, j, code_ij];
-                # report 1 - D/2 (the unit-sphere cosine equivalent)
-                C = np.stack([np.asarray(c, dtype=np.int64) for c in pdf["__vec"]])
-                D = lut_[:, np.arange(C.shape[1]), C].sum(axis=2)
-                S = 1.0 - D.T / 2.0
-            elif dq_ is not None:
-                # SQ8 postings: one affine reconstruction (mn + code *
-                # step — the sq8_topk formula) before normalization
-                mn_, step_ = dq_
-                C = np.stack([np.asarray(c, dtype=np.float64) for c in pdf["__vec"]])
-                M = mn_ + C * step_
-                n = np.linalg.norm(M, axis=1, keepdims=True)
-                n[n == 0] = 1.0
-                M = M / n
-                S = M @ qm_.T
-            else:
-                M = _normalize_batch(pdf["__vec"])
-                S = M @ qm_.T
-            yield from _emit_topk(qids_, ids, S, cand, depth)
-
-    part = postings.select(
-        F.col(id_col).alias("__id"),
-        F.col(payload_col).alias("__vec"),
-        F.col("cid").alias("__cid"),
-    ).mapInPandas(score, f"query_id {id_type}, neighbor_id {id_type}, cosine double")
+    part = _scored(
+        postings, (id_col, payload_col, "cid"), (q_ids, qm, cells, lut), score_batch, depth
+    )
     return part, q_ids, qm
 
 
@@ -1106,7 +1045,11 @@ def hybrid_search_rrf(
     lists see a single-partition rank window, so nothing about this
     plan degrades at a billion corpus rows. The cosine expression
     here is the interpreted-HOF form — fine for one query vector; for
-    query BATCHES use lsh_topk/ivf_topk's vectorized matmul path."""
+    query BATCHES use lsh_topk/ivf_topk's vectorized matmul path.
+
+    It stays outside the `_scored` core on purpose: its ranks run over
+    6-dp cosines and keep the query vector itself (rank 1), while the
+    core's window rounds to 4 dp and excludes self-matches."""
     from shc_spark.operators.text import bm25_search
 
     def _rank_local(top, sort_cols, name):
@@ -1170,15 +1113,14 @@ def _hybrid_index_fused(spark, text_path, ivf_path, queries, rrf_k, depth, nprob
     # vector query ids are negative ordinals: the top-k operators
     # exclude self-matches by id equality, so a placeholder id that
     # collides with a corpus id would silently drop that corpus vector
-    # from the ranking. The vectors are handed over precollected — no
-    # DataFrame round trip through Spark — and mapped back to query_id.
+    # from the ranking. The vectors are handed over as the collected
+    # query side — no DataFrame round trip through Spark — and mapped
+    # back to query_id.
     qorder = list(queries)
     vids = [-(i + 1) for i in range(len(qorder))]
     vmap = F.create_map(*[x for v, q in zip(vids, qorder) for x in (F.lit(v), F.lit(str(q)))])
-    vec = ivf_index_topk(
-        spark, ivf_path, None, k=depth, nprobe=nprobe,
-        precollected=(vids, _normalize_batch([queries[q][1] for q in qorder])),
-    ).select(
+    side = (vids, _normalize_batch([queries[q][1] for q in qorder]))
+    vec = ivf_index_topk(spark, ivf_path, side, k=depth, nprobe=nprobe).select(
         vmap[F.col("query_id")].alias("query_id"),
         F.col("neighbor_id").alias("id"),
         F.col("rank").alias("r_cos"),
@@ -1246,7 +1188,7 @@ def hybrid_index_rrf_batch(
 
 
 def ivf_pq_topk(
-    queries: DataFrame,
+    queries: "DataFrame | tuple",
     corpus: DataFrame,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
@@ -1259,7 +1201,6 @@ def ivf_pq_topk(
     rerank_factor: int = 20,
     seed: int = 11,
     max_queries: int = MAX_QUERY_ROWS,
-    precollected: "tuple | None" = None,
 ) -> DataFrame:
     """The full billion-scale ANN recipe in one operator — IVF routing
     x PQ asymmetric-distance scoring x exact re-rank (the FAISS
@@ -1283,53 +1224,37 @@ def ivf_pq_topk(
 
     cent = _train_centroids(corpus, vec_col, num_centroids, dim, seed)
     books = quantize.train_pq(corpus, vec_col, id_col, m=m, k=num_codes)
-    q_ids, qm = _collect_queries(queries, vec_col, id_col, max_queries, precollected)
-    probe_map: dict = {}
-    lut = np.zeros((len(q_ids), m, num_codes))
+    q_ids, qm = _collect_queries(queries, vec_col, id_col, max_queries)
     sub = dim // m
+    lut = None  # (nq, m, K) per-query subspace lookup tables
     if q_ids:
-        probe_idx = np.argsort(-(qm @ cent.T), axis=1)[:, :nprobe]
-        for qi in range(len(q_ids)):
-            for c in probe_idx[qi]:
-                probe_map.setdefault(int(c), []).append(qi)
-            for j in range(m):
-                diff = books[j] - qm[qi, j * sub : (j + 1) * sub][None, :]
-                lut[qi, j] = (diff**2).sum(axis=1)
-    spark = corpus.sparkSession
-    bc = spark.sparkContext.broadcast((q_ids, probe_map, lut, books))
+        lut = np.stack(
+            [
+                ((books[j][None] - qm[:, None, j * sub : (j + 1) * sub]) ** 2).sum(axis=2)
+                for j in range(m)
+            ],
+            axis=1,
+        )
     depth = max(k * rerank_factor, k)
 
-    def score(batches):
-        qids_, pmap, lut_, books_ = bc.value
-        if not qids_:
-            return
-        jidx = np.arange(m)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf["__id"].to_numpy()
-            M = _normalize_batch(pdf["__vec"])
-            cid = np.argmax(M @ cent.T, axis=1)
-            cand = [[] for _ in qids_]
-            for i in range(len(ids)):
-                for qi in pmap.get(int(cid[i]), ()):
-                    cand[qi].append(i)
-            # on-the-fly PQ encode of the batch (production stores the
-            # codes; the math is identical): argmin subspace centroid
-            C = np.empty((len(ids), m), dtype=np.int64)
-            for j in range(m):
-                S_ = M[:, j * sub : (j + 1) * sub]
-                d = ((S_[:, None, :] - books_[j][None, :, :]) ** 2).sum(axis=2)
-                C[:, j] = d.argmin(axis=1)
-            D = lut_[:, jidx, C].sum(axis=2)  # (nq, batch)
-            # negative adist as the pruning score: _emit_topk keeps the
-            # per-batch top-`depth` candidates per query
-            yield from _emit_topk(q_ids, ids, -D.T, cand, depth)
+    def score_batch(pdf, side):
+        _ids, cells, lut_, books_ = side
+        M = _normalize_batch(pdf["__vec"])
+        # on-the-fly PQ encode of the batch (production stores the
+        # codes; the math is identical): argmin subspace centroid
+        C = np.empty((len(M), m), dtype=np.int64)
+        for j in range(m):
+            S_ = M[:, j * sub : (j + 1) * sub]
+            d = ((S_[:, None, :] - books_[j][None, :, :]) ** 2).sum(axis=2)
+            C[:, j] = d.argmin(axis=1)
+        D = lut_[:, np.arange(m), C].sum(axis=2)  # (nq, batch)
+        # negative adist as the pruning score: _emit_topk keeps the
+        # per-batch top-`depth` candidates per query
+        return -D.T, _routed(cells, np.argmax(M @ cent.T, axis=1))
 
-    id_type = corpus.schema[id_col].dataType.simpleString()
-    part = corpus.select(
-        F.col(id_col).alias("__id"), F.col(vec_col).alias("__vec")
-    ).mapInPandas(score, f"query_id {id_type}, neighbor_id {id_type}, cosine double")
+    side = (q_ids, _probe(qm, cent, nprobe), lut, books)
+    part = _scored(corpus, (id_col, vec_col), side, score_batch, depth)
+    # the depth cut ranks the UNROUNDED -adist (no 4dp window)
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
     pruned = (
         part.withColumn("rank", F.row_number().over(w))
@@ -1337,25 +1262,9 @@ def ivf_pq_topk(
         .drop("rank", "cosine")
     )
     # exact re-rank on the survivors only
-    qmap = {qid: qm[i] for i, qid in enumerate(q_ids)}
-    bq = spark.sparkContext.broadcast(qmap)
-
-    @F.pandas_udf("double")
-    def _cos(qid: pd.Series, vec: pd.Series) -> pd.Series:
-        qm_ = bq.value
-        if qid.empty:
-            return pd.Series([], dtype=float)
-        M = _normalize_batch(vec)
-        q = np.stack([qm_[x] for x in qid])
-        return pd.Series((M * q).sum(axis=1))
-
-    vecs = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__fv")
+    return _refine_from_pruned(
+        corpus.sparkSession, pruned, q_ids, qm, k, corpus, vec_col, id_col
     )
-    scored = pruned.join(vecs, "neighbor_id").withColumn(
-        "cosine", _cos("query_id", "__fv")
-    ).drop("__fv")
-    return _topk_window(scored, k)
 
 
 def hard_negative_topk(
@@ -1378,45 +1287,15 @@ def hard_negative_topk(
     labels follow SQL three-valued semantics (``c.label != q.label``
     is NULL, not true): a NULL-labeled corpus row is never a
     negative, a NULL-labeled query mines nothing."""
-    spark = corpus.sparkSession
-    rows = _bounded_query_rows(queries, (id_col, vec_col, label_col), max_queries)
-    q_ids = [r[0] for r in rows]
-    if rows:
-        qm = np.stack([np.asarray(r[1], dtype=np.float64) for r in rows])
-        n = np.linalg.norm(qm, axis=1, keepdims=True)
-        n[n == 0] = 1.0
-        qm = qm / n
-        q_labels = np.asarray([r[2] for r in rows], dtype=object)
-    else:
-        qm = np.zeros((0, 1), dtype=np.float64)
-        q_labels = np.asarray([], dtype=object)
-    bq = spark.sparkContext.broadcast((q_ids, qm, q_labels))
 
-    def score(batches):
-        ids_q, q_mat, labs_q = bq.value
-        if not ids_q:
-            return
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf["__id"].to_numpy()
-            labs = pdf["__lab"].to_numpy()
-            notnull = pd.notna(labs)
-            S = _normalize_batch(pdf["__vec"]) @ q_mat.T
-            cand = [
-                np.nonzero((labs != labs_q[j]) & notnull)[0]
-                if pd.notna(labs_q[j])
-                else np.array([], dtype=np.int64)
-                for j in range(len(ids_q))
-            ]
-            yield from _emit_topk(ids_q, ids, S, cand, k)
+    def score_batch(pdf, side):
+        _ids, qm, q_labs = side
+        labs = pdf["__aux"].to_numpy()
+        mask = (labs[:, None] != q_labs[None, :]) & pd.notna(labs)[:, None]
+        return _normalize_batch(pdf["__vec"]) @ qm.T, mask & pd.notna(q_labs)[None, :]
 
-    id_type = corpus.schema[id_col].dataType.simpleString()
-    part = corpus.select(
-        F.col(id_col).alias("__id"),
-        F.col(vec_col).alias("__vec"),
-        F.col(label_col).alias("__lab"),
-    ).mapInPandas(score, f"query_id {id_type}, neighbor_id {id_type}, cosine double")
+    side = _collect_queries(queries, vec_col, id_col, max_queries, extra=(label_col,))
+    part = _scored(corpus, (id_col, vec_col, label_col), side, score_batch, k)
     return _topk_window(part, k)
 
 

@@ -279,27 +279,21 @@ def _ann_exact(spark, sf_dir):
     # approx ranking (each operator otherwise collects — and re-runs
     # the query frame's source scan for — the identical 8-row set)
     qc = similarity.collect_query_side(queries, "embedding", "vec_id")
-    exact = similarity.cosine_topk(
-        queries, emb, "embedding", "vec_id", k=5, precollected=qc
-    )
-    return queries, emb, qc, exact
+    exact = similarity.cosine_topk(qc, emb, "embedding", "vec_id", k=5)
+    return emb, qc, exact
 
 
 @register("sim_topk_lsh", _ANN_VERDICT_SQL)
 def sim_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    queries, emb, qc, exact = _ann_exact(spark, sf_dir)
-    approx = similarity.lsh_topk(
-        queries, emb, "embedding", "vec_id", k=5, dim=64, precollected=qc
-    )
+    emb, qc, exact = _ann_exact(spark, sf_dir)
+    approx = similarity.lsh_topk(qc, emb, "embedding", "vec_id", k=5, dim=64)
     return _ann_recall_verdict(approx, exact, k=5, min_hits_q=1, min_total=18)
 
 
 @register("sim_topk_ivf", _ANN_VERDICT_SQL)
 def sim_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    queries, emb, qc, exact = _ann_exact(spark, sf_dir)
-    approx = similarity.ivf_topk(
-        queries, emb, "embedding", "vec_id", k=5, dim=64, precollected=qc
-    )
+    emb, qc, exact = _ann_exact(spark, sf_dir)
+    approx = similarity.ivf_topk(qc, emb, "embedding", "vec_id", k=5, dim=64)
     return _ann_recall_verdict(approx, exact, k=5, min_hits_q=1, min_total=14)
 
 
@@ -341,12 +335,8 @@ def sim_topk_ivf_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not os.path.exists(os.path.join(path, "postings", "_SUCCESS")):
         similarity.build_ivf_index(emb, path, "embedding", "vec_id", dim=64)
     qc = similarity.collect_query_side(queries, "embedding", "vec_id")
-    idx = similarity.ivf_index_topk(
-        spark, path, queries, k=5, nprobe=4, precollected=qc
-    )
-    direct = similarity.ivf_topk(
-        queries, emb, "embedding", "vec_id", k=5, dim=64, precollected=qc
-    )
+    idx = similarity.ivf_index_topk(spark, path, qc, k=5, nprobe=4)
+    direct = similarity.ivf_topk(qc, emb, "embedding", "vec_id", k=5, dim=64)
     return _identity_verdict(idx, direct)
 
 
@@ -357,7 +347,7 @@ def sim_topk_ivf_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 # exact top-k, same contract as sim_topk_ivf.
 @register("sim_topk_ivf_index_sq8", _ANN_VERDICT_SQL)
 def sim_topk_ivf_index_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
-    queries, emb, qc, exact = _ann_exact(spark, sf_dir)
+    emb, qc, exact = _ann_exact(spark, sf_dir)
     path = _gate_index_path(
         "shc_ivf_index_sq8", sf_dir, similarity.IVF_INDEX_LAYOUT,
         dim=64, storage="sq8",
@@ -366,9 +356,7 @@ def sim_topk_ivf_index_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
         similarity.build_ivf_index(
             emb, path, "embedding", "vec_id", dim=64, storage="sq8"
         )
-    approx = similarity.ivf_index_topk(
-        spark, path, queries, k=5, nprobe=4, precollected=qc
-    )
+    approx = similarity.ivf_index_topk(spark, path, qc, k=5, nprobe=4)
     return _ann_recall_verdict(approx, exact, k=5, min_hits_q=1, min_total=14)
 
 
@@ -413,14 +401,13 @@ def sim_topk_ivf_index_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     qc = similarity.collect_query_side(queries, "embedding", "vec_id")
     with no_adaptive(spark):
         ref = similarity.ivf_index_topk(
-            spark, fpath, queries, k=5, nprobe=4, precollected=qc
+            spark, fpath, qc, k=5, nprobe=4
         ).coalesce(1).localCheckpoint(eager=True)
     # r15 optimization: ADC ranking and refined ranking from ONE
     # pruned postings scan + ONE scoring pass (value-identical to the
     # two standalone calls — see ivf_index_topk_with_refine)
     adc, refined = similarity.ivf_index_topk_with_refine(
-        spark, ppath, queries, k=5, nprobe=4, rerank_with=emb,
-        rerank_factor=20, precollected=qc,
+        spark, ppath, qc, k=5, nprobe=4, rerank_with=emb, rerank_factor=20
     )
     v_adc = _ann_recall_verdict(adc, ref, k=5, min_hits_q=1, min_total=20)
     v_ref = _ann_recall_verdict(refined, ref, k=5, min_hits_q=4, min_total=36)
@@ -2817,10 +2804,10 @@ def text_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sim_topk_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
     from shc_spark.operators import quantize
 
-    queries, emb, qc, exact = _ann_exact(spark, sf_dir)
+    emb, qc, exact = _ann_exact(spark, sf_dir)
     stats = quantize.dim_stats(emb, "embedding")
     codes = quantize.quantize_embeddings(emb, "embedding", "vec_id", stats=stats)
-    approx = similarity.sq8_topk(queries, codes, stats, k=5, precollected=qc)
+    approx = similarity.sq8_topk(qc, codes, stats, k=5)
     return _ann_recall_verdict(approx, exact, k=5, min_hits_q=4, min_total=36)
 
 
@@ -3043,12 +3030,10 @@ def text_shard_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sim_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     from shc_spark.operators import quantize
 
-    queries, emb, qc, exact = _ann_exact(spark, sf_dir)
+    emb, qc, exact = _ann_exact(spark, sf_dir)
     books = quantize.train_pq(emb, "embedding", "vec_id", m=8, k=16)
     codes = quantize.pq_encode(emb, books, "embedding", "vec_id")
-    approx = quantize.pq_topk(
-        queries, codes, books, k=5, rerank_factor=20, vectors=emb
-    )
+    approx = quantize.pq_topk(qc, codes, books, k=5, rerank_factor=20, vectors=emb)
     return _ann_recall_verdict(approx, exact, k=5, min_hits_q=3, min_total=30)
 
 
@@ -4189,10 +4174,9 @@ def text_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sim_topk_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     from shc_spark.operators import similarity
 
-    queries, emb, qc, exact = _ann_exact(spark, sf_dir)
+    emb, qc, exact = _ann_exact(spark, sf_dir)
     approx = similarity.ivf_pq_topk(
-        queries, emb, k=5, dim=64, num_centroids=16, nprobe=8,
-        rerank_factor=40, precollected=qc,
+        qc, emb, k=5, dim=64, num_centroids=16, nprobe=8, rerank_factor=40
     )
     return _ann_recall_verdict(approx, exact, k=5, min_hits_q=3, min_total=28)
 

@@ -5460,28 +5460,124 @@ def test_read_parquet_memo_identical_and_invalidates(spark, tmp_path):
     assert _SCHEMAS[mine[0]][2] == fresh.schema
 
 
-def test_precollected_query_side_identical(spark):
-    from shc_spark.operators import similarity
+def test_precollected_query_side_identical(spark, tmp_path):
+    """A collect_query_side() result passed as ``queries`` ranks exactly
+    like the query frame itself, and an empty query frame yields zero
+    rows without raising."""
+    from shc_spark.operators import quantize
 
     emb = spark.createDataFrame(
-        [(i, [float((i * 7 + j * 3) % 11) - 5.0 for j in range(8)]) for i in range(40)],
-        "vec_id long, embedding array<double>",
+        [
+            (i, [float((i * 7 + j * 3) % 11) - 5.0 for j in range(8)], i % 3)
+            for i in range(40)
+        ],
+        "vec_id long, embedding array<double>, label long",
     )
     queries = emb.filter("vec_id < 4")
     qc = similarity.collect_query_side(queries, "embedding", "vec_id")
+    stats = quantize.dim_stats(emb)
+    codes = quantize.quantize_embeddings(emb, stats=stats)
+    fpath, ppath = str(tmp_path / "f"), str(tmp_path / "p")
+    similarity.build_ivf_index(emb, fpath, dim=8, num_centroids=4)
+    similarity.build_ivf_index(
+        emb, ppath, dim=8, num_centroids=4, storage="pq", pq_m=2, pq_codes=8
+    )
 
     for fn in (
-        lambda pc: similarity.cosine_topk(
-            queries, emb, "embedding", "vec_id", k=3, precollected=pc
+        lambda q: similarity.cosine_topk(q, emb, "embedding", "vec_id", k=3),
+        lambda q: similarity.lsh_topk(q, emb, "embedding", "vec_id", k=3, dim=8),
+        lambda q: similarity.ivf_topk(
+            q, emb, "embedding", "vec_id", k=3, dim=8, num_centroids=4
         ),
-        lambda pc: similarity.lsh_topk(
-            queries, emb, "embedding", "vec_id", k=3, dim=8, precollected=pc
+        lambda q: similarity.sq8_topk(q, codes, stats, k=3),
+        lambda q: similarity.ivf_pq_topk(
+            q, emb, k=3, dim=8, num_centroids=4, nprobe=2, m=2, num_codes=4
         ),
-        lambda pc: similarity.ivf_topk(
-            queries, emb, "embedding", "vec_id", k=3, dim=8,
-            num_centroids=4, precollected=pc,
+        lambda q: similarity.ivf_index_topk(spark, fpath, q, k=3, nprobe=2),
+        lambda q: similarity.ivf_index_topk(
+            spark, ppath, q, k=3, nprobe=2, rerank_with=emb, rerank_factor=2
         ),
     ):
-        a = sorted(map(tuple, fn(None).collect()))
+        a = sorted(map(tuple, fn(queries).collect()))
         b = sorted(map(tuple, fn(qc).collect()))
         assert a == b and len(a) > 0
+
+    none = emb.filter("vec_id < 0")
+    for df in (
+        similarity.cosine_topk(none, emb, k=3),
+        similarity.ivf_index_topk(spark, fpath, none, k=3),
+        similarity.hard_negative_topk(none, emb, k=3),
+    ):
+        assert df.collect() == []
+
+
+def test_ivf_routing_mask_matches_probe_dict():
+    """_routed's (batch, nq) mask marks exactly the rows that a
+    {cell -> query rows} probe dict over _probe's cells routes to each
+    query."""
+    import numpy as np
+
+    rng = np.random.RandomState(3)
+    qm, cent = rng.standard_normal((6, 8)), rng.standard_normal((5, 8))
+    cells = similarity._probe(qm, cent, 2)
+    probe = {}
+    for qi in range(6):
+        for c in cells[qi]:
+            probe.setdefault(int(c), []).append(qi)
+    cid = rng.randint(0, 5, 50)
+    expect = np.zeros((50, 6), dtype=bool)
+    for i in range(50):
+        for qi in probe.get(int(cid[i]), ()):
+            expect[i, qi] = True
+    assert (similarity._routed(cells, cid) == expect).all()
+    assert similarity._probe(qm[:0], cent, 2).shape == (0, 2)
+
+
+def test_lsh_candidates_are_bucket_matches(spark):
+    """With k >= |corpus| every candidate is emitted, so lsh_topk's
+    output IS its candidate set: the rows whose bucket equals the
+    query's in some table, or (multiprobe) differs from it by one bit.
+    The expected set is built here from a {(table, bucket) -> queries}
+    probe dict."""
+    import numpy as np
+
+    dim, tables, planes_per_table, seed = 8, 4, 3, 7
+    rng = np.random.RandomState(1)
+    vecs = rng.standard_normal((40, dim))
+    emb = spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
+        "vec_id long, embedding array<double>",
+    )
+    queries = emb.filter("vec_id < 5")
+
+    planes = np.random.RandomState(seed).standard_normal(
+        (tables, planes_per_table, dim)
+    )
+    weights = 1 << np.arange(planes_per_table)
+    unit = vecs / np.linalg.norm(vecs, axis=1, keepdims=True)
+
+    def expected(multiprobe):
+        probe = {}
+        for t in range(tables):
+            for qi in range(5):
+                b = int((((unit[qi] @ planes[t].T) > 0) * weights).sum())
+                flips = [b ^ (1 << p) for p in range(planes_per_table)]
+                for bb in [b] + (flips if multiprobe else []):
+                    probe.setdefault((t, bb), set()).add(qi)
+        out = set()
+        for i in range(len(vecs)):
+            for t in range(tables):
+                b = int((((unit[i] @ planes[t].T) > 0) * weights).sum())
+                out |= {(qi, i) for qi in probe.get((t, b), ()) if qi != i}
+        return out
+
+    got = {}
+    for mp in (True, False):
+        rows = similarity.lsh_topk(
+            queries, emb, k=40, dim=dim, num_tables=tables,
+            planes_per_table=planes_per_table, multiprobe=mp, seed=seed,
+        ).collect()
+        got[mp] = {(r["query_id"], r["neighbor_id"]) for r in rows}
+        assert got[mp] == expected(mp), mp
+    # both rules are exercised: the 1-bit probes add candidates
+    assert got[False] and got[False] < got[True]
