@@ -39,7 +39,7 @@ def _stack(col: pd.Series) -> np.ndarray:
 def seed_centroids(df: DataFrame, vec_col: str, id_col: str, k: int) -> np.ndarray:
     """Deterministic seeds: the k vectors with the smallest ids.
     Driver-side materialization is exactly k rows — bounded by
-    construction (same pattern as similarity._train_centroids)."""
+    construction (same pattern as similarity._corpus_sample)."""
     rows = df.select(id_col, vec_col).orderBy(id_col).limit(k).collect()
     if len(rows) < k:
         raise ValueError(f"k={k} exceeds corpus size {len(rows)}")

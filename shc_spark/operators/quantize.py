@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from shc_spark.operators.similarity import (
     MAX_QUERY_ROWS,
     _collect_queries,
+    _corpus_sample,
     _matrix,
     _normalize_batch,
     _pq_code_udf,
@@ -115,20 +116,19 @@ def train_pq(
     iters: int = 8,
 ) -> "np.ndarray":
     """(m, k, dim/m) PQ codebooks via per-subspace Lloyd's on a
-    bounded DETERMINISTIC corpus sample (top-N by content hash — the
-    same pattern as similarity._train_centroids: the quantizer trains
-    on a sample, the full corpus only gets ASSIGNED, so driver cost is
-    independent of corpus size). Seeds are the first k sample rows per
-    subspace; fixed iterations, no RNG."""
-    rows = (
-        df.select(vec_col)
-        .orderBy(F.xxhash64(F.col(vec_col)))
-        .limit(sample_rows)
-        .collect()
-    )
+    bounded DETERMINISTIC corpus sample (similarity._corpus_sample:
+    top-N by content hash — the quantizer trains on a sample, the full
+    corpus only gets ASSIGNED, so driver cost is independent of corpus
+    size)."""
+    return _train_pq(_corpus_sample(df, vec_col, sample_rows), m, k, iters)
+
+
+def _train_pq(sample: list, m: int = 8, k: int = 16, iters: int = 8) -> "np.ndarray":
+    """``train_pq`` on an already collected corpus sample. Seeds are
+    the first k sample rows per subspace; fixed iterations, no RNG."""
     # unit sphere: sq-euclidean == 2 - 2*cosine, so PQ ranks match the
     # cosine searches elsewhere in the suite
-    X = _normalize_batch([r[0] for r in rows])
+    X = _normalize_batch(sample)
     n, dim = X.shape
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m={m}")
@@ -176,8 +176,6 @@ def pq_topk(
     vectors: DataFrame | None = None,
     max_queries: int | None = None,  # None -> similarity.MAX_QUERY_ROWS
 ) -> DataFrame:
-    from pyspark.sql import Window
-
     """Asymmetric-distance top-k: each query precomputes an (m, K)
     lookup table of subspace squared distances; a code's approximate
     distance is the sum of m table entries — one fancy-index + sum per
@@ -193,6 +191,8 @@ def pq_topk(
     instead of on raw code fidelity (measured on the near-isotropic
     synthetic embeddings — the adversarial case for PQ: 0.79 at R=10,
     0.93 at R=20, 0.98 at R=40; pinned by test)."""
+    from pyspark.sql import Window
+
     books = np.asarray(codebooks, dtype=np.float64)
     m, K, sub = books.shape
     q_ids, qm = _collect_queries(

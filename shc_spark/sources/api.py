@@ -6,12 +6,16 @@ re-expressed Spark-first.
   analog of `Bytes.split` pre-splitting, HBaseRelation.scala:124-175),
   sort within partitions, write through the "shc" data source.
 - ``read_table(spark, catalog, ...)`` = S1 + S14/S15: returns a
-  DataFrame with the catalog schema; time-travel options
-  (timestamp/minStamp/maxStamp, HBaseRelation.scala:77-81) and version
-  semantics (maxVersions × mergeToLatest, MaxVersionsSuite.scala:45-98)
-  are DataFrame aggregations ABOVE the source, so Catalyst pushes
-  rowkey predicates through them into the scan (filter pushdown +
-  region pruning live in ShcReader).
+  DataFrame with the catalog schema. Every catalog — the writer's own,
+  or a renamed, subset, version-map or dynamic-family view — resolves
+  against the stored writer catalog into one column plan, and one
+  pipeline applies version semantics (time-travel options
+  timestamp/minStamp/maxStamp, HBaseRelation.scala:77-81; maxVersions
+  × mergeToLatest, MaxVersionsSuite.scala:45-98). A plain
+  merge-to-latest read of flat cells merges inside the source;
+  everything else runs as DataFrame steps ABOVE the source, so
+  Catalyst pushes rowkey predicates through them into the scan (filter
+  pushdown + region pruning live in ShcReader).
 
 Divergences from the reference, on purpose (SURVEY.md §4.3):
 - version-exploded reads keep multiset semantics (the reference's
@@ -23,18 +27,27 @@ Divergences from the reference, on purpose (SURVEY.md §4.3):
 
 from __future__ import annotations
 
+import json
 import os
 import time
 import uuid
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from shc_spark.catalog import Catalog, parse_catalog
 from shc_spark.coders import get_coder
-from shc_spark.sources.shc_source import ROWKEY_COL, TS_COL, ShcDataSource
+from shc_spark.sources.shc_source import (
+    DEL_COL,
+    ROWKEY_COL,
+    TS_COL,
+    ShcDataSource,
+    merge_is_noop,
+    table_path,
+    table_state,
+)
 
 DEFAULT_ROOT = "/tmp/shc_tables"
 
@@ -299,8 +312,8 @@ def _expand_version_maps(df: DataFrame, catalog: str, write_ts: int):
     entry — the map key is the cell timestamp — while the other
     columns write once at the call's timestamp. The STORED catalog
     declares the column as plain ``T`` (that is what each cell holds);
-    reading back through the original map-typed catalog goes through
-    the cross-catalog version-map path and rebuilds ts -> value maps,
+    reading back through the original map-typed catalog plans it as a
+    version map (``_column_plan``) and rebuilds ts -> value maps,
     so maxVersions / timestamp / merge semantics all apply to the
     fanned-out versions. Keys whose only content is an empty map write
     nothing (a Put with no cells creates no row)."""
@@ -376,12 +389,10 @@ def write_table(
         # appends may narrow the catalog, but the SALT is part of the
         # physical key encoding: a mismatched append would interleave
         # keys salted two different ways into one table
-        stored = _stored_catalog_json(path)
+        stored = table_state(path)[0]
         if stored is not None:
-            import json as _json
-
             stored_salt = int(
-                _json.loads(stored).get("table", {}).get("saltBuckets", 0) or 0
+                json.loads(stored).get("table", {}).get("saltBuckets", 0) or 0
             )
             if stored_salt != cat.salt_buckets:
                 raise ValueError(
@@ -497,51 +508,161 @@ def _any_live_cell(col_names: list):
     return reduce(lambda a, b: a | b, [F.col(c).isNotNull() for c in col_names])
 
 
-def _merge_is_noop(table_path: str) -> bool:
-    """True when every region file has unique keys (writer-recorded)
-    and region key ranges are pairwise disjoint — then one row per key
-    exists and merge-to-latest is the identity."""
-    import json as _json
-    import os as _os
-
-    meta = _os.path.join(table_path, "_regions.json")
-    if not _os.path.exists(meta):
-        return False
-    regions = _json.load(open(meta))
-    if not regions or not all(r.get("unique") for r in regions):
-        return False
-    spans = sorted(
-        ((r["start"] or "", r["end"] or "") for r in regions), key=lambda x: x[0]
-    )
-    for (s1, e1), (s2, e2) in zip(spans, spans[1:]):
-        if s2 <= e1:  # hex strings compare like the underlying bytes
-            return False
-    return True
-
-
-def _stored_catalog_json(table_dir: str) -> str | None:
-    import os as _os
-
-    p = _os.path.join(table_dir, "_catalog.json")
-    if not _os.path.exists(p):
-        return None
-    with open(p) as fh:
-        return fh.read()
-
-
 def _same_catalog(a: str, b: str) -> bool:
-    import json as _json
-
-    da, db = _json.loads(a), _json.loads(b)
+    da, db = json.loads(a), json.loads(b)
     salt = lambda d: int(d.get("table", {}).get("saltBuckets", 0) or 0)  # noqa: E731
     # saltBuckets is part of the PHYSICAL key encoding: a catalog that
-    # differs only there must NOT take the same-catalog fast path (its
-    # unexpanded ranges would silently miss salted keys)
+    # differs only there is another catalog (its unexpanded ranges
+    # would silently miss salted keys)
     return (
         da.get("columns") == db.get("columns")
         and da.get("rowkey") == db.get("rowkey")
         and salt(da) == salt(db)
     )
+
+
+def _is_vmap_type(dt) -> bool:
+    return isinstance(dt, T.MapType) and isinstance(dt.keyType, T.LongType)
+
+
+def _column_plan(rcat: Catalog, wcat: Catalog, restrictive: str) -> tuple:
+    """Resolve every read value field against the writer catalog by
+    (column family, qualifier) — one physical table, many catalogs
+    (DynamicColumnSuite.scala:151-248). Returns ``(plans, needed)``:
+    one ``(kind, read_field, source)`` per read value field, and the
+    writer columns those plans read, in first-use order.
+
+    - ``static``: the writer cell with the same (cf, qualifier), cast
+      when typed differently; a missing cell reads NULL. A writer cell
+      of the SAME type always passes through as static, so the
+      writer's own catalog (or any catalog before the first write
+      stores one) maps every column to itself;
+    - ``vmap``: ``map<long, V>`` with a qualifier — the ts -> value
+      version map of that cell (keepVersions, HBaseTableScan.scala:
+      107-110);
+    - ``dyn``: a map with ``"col": ""`` — every family cell not
+      declared elsewhere in the read catalog, keyed by qualifier;
+      ``map<string, map<long, W>>`` nests a version map per qualifier
+      (HBaseRecordDynamic.col7 shape). ``restrictive`` (COLUMN/FAMILY/
+      NONE, HBaseRelation.scala:348-352): COLUMN fetches only declared
+      cells, so a dynamic map captures nothing (scan.addColumn,
+      HBaseTableScan.scala:406-411); FAMILY and NONE capture the whole
+      family. This columnar backend never fetches families outside
+      the catalog, so NONE's extra I/O has no analog.
+    """
+    mode = (restrictive or "column").lower()
+    if mode not in ("column", "family", "none"):
+        raise ValueError(f"restrictive must be COLUMN, FAMILY, or NONE, got {restrictive!r}")
+    rkeys, wkeys = rcat.rowkey_fields(), wcat.rowkey_fields()
+    if len(rkeys) != len(wkeys) or any(
+        rf.dt != wf.dt or rf.coder != wf.coder for rf, wf in zip(rkeys, wkeys)
+    ):
+        raise ValueError(
+            "read catalog rowkey is incompatible with the stored catalog "
+            f"(stored dims: {[(f.col_name, f.type_str) for f in wkeys]})"
+        )
+    wmap = {(f.cf, f.col): f for f in wcat.value_fields()}
+    declared = {(f.cf, f.col) for f in rcat.value_fields() if f.col != ""}
+    plans, needed = [], []
+    for f in rcat.value_fields():
+        wf = wmap.get((f.cf, f.col))
+        if wf is not None and wf.dt == f.dt:
+            plan = ("static", f, wf)
+        elif f.col == "" and isinstance(f.dt, T.MapType):
+            fams = [] if mode == "column" else [
+                w
+                for w in wcat.value_fields()
+                if w.cf == f.cf and (w.cf, w.col) not in declared and w.avro_schema is None
+            ]
+            plan = ("dyn", f, fams)
+        else:
+            plan = ("vmap" if _is_vmap_type(f.dt) else "static", f, wf)
+        plans.append(plan)
+        srcs = plan[2] if plan[0] == "dyn" else [wf] if wf is not None else []
+        needed += [w.col_name for w in srcs if w.col_name not in needed]
+    return plans, needed
+
+
+def _cast(c, src: T.DataType, dt: T.DataType):
+    return c.cast(dt) if src != dt else c
+
+
+def _latest(name: str):
+    """Per-cell latest-non-null merge (buildRow, HBaseTableScan.scala:
+    114-175): max_by ignores rows whose ordering key is null, so a
+    newer version with a null cell does NOT shadow an older value —
+    HBase "nulls are not stored"."""
+    return F.expr(f"max_by(`{name}`, CASE WHEN `{name}` IS NOT NULL THEN `{TS_COL}` END)")
+
+
+def _overlay_maps(wf):
+    """Per-qualifier overlay of a map cell's versions
+    (``merge_dynamic_maps``, HBaseTableScan.scala:139-151): fold the
+    version maps in ts order, newer keys shadowing older ones. Maps are
+    not orderable but entry arrays are, so (ts, entries) structs sort by
+    ts; keys leave the accumulator before map_concat, so no dedup
+    policy is needed."""
+    dt_sql = wf.dt.simpleString()
+    return F.expr(
+        f"aggregate("
+        f"  array_sort(collect_list(struct(`{TS_COL}` AS ts,"
+        f"    map_entries(coalesce(`{wf.col_name}`, cast(map() AS {dt_sql}))) AS e))),"
+        f"  cast(map() AS {dt_sql}),"
+        f"  (acc, x) -> map_concat("
+        f"    map_filter(acc, (k, v) -> NOT array_contains(transform(x.e, p -> p.key), k)),"
+        f"    map_from_entries(x.e)))"
+    )
+
+
+def _empty_map(dt: T.MapType):
+    return F.map_from_entries(
+        F.array().cast(
+            f"array<struct<key:{dt.keyType.simpleString()},value:{dt.valueType.simpleString()}>>"
+        )
+    )
+
+
+def _version_map(wf, vt: T.DataType, grouped: bool):
+    """ts -> value map of one cell (null cells are 'not stored').
+    Grouped: across the key's versions, entries sorted by ts; duplicate
+    timestamps (two generations written with the same explicit ts) keep
+    the LAST entry after the (ts, value) sort — the max value, a
+    deterministic stand-in for HBase's same-coordinate overwrite —
+    instead of tripping Spark's duplicate-map-key error. Not grouped
+    (one version per key): a one-entry map per row, no shuffle."""
+    entry = F.struct(F.col(TS_COL).alias("key"), _cast(F.col(wf.col_name), wf.dt, vt).alias("value"))
+    if not grouped:
+        return F.when(
+            F.col(wf.col_name).isNotNull(), F.map_from_entries(F.array(entry))
+        ).otherwise(_empty_map(T.MapType(T.LongType(), vt)))
+    sorted_e = F.array_sort(F.collect_list(F.when(F.col(wf.col_name).isNotNull(), entry)))
+    init = F.expr(f"cast(array() as array<struct<key:bigint,value:{vt.simpleString()}>>)")
+
+    def merge(acc, x):
+        return F.when(
+            (F.size(acc) > 0) & (F.element_at(acc, -1)["key"] == x["key"]),
+            F.concat(F.slice(acc, F.lit(1), F.size(acc) - 1), F.array(x)),
+        ).otherwise(F.concat(acc, F.array(x)))
+
+    return F.map_from_entries(F.aggregate(sorted_e, init, merge))
+
+
+def _dyn_map(f, fams: list, grouped: bool):
+    """Qualifier-keyed map over the captured family cells; inner
+    version maps when the value type is ``map<long, W>``."""
+    vt = f.dt.valueType
+    if not fams:
+        return _empty_map(f.dt)
+    if _is_vmap_type(vt):
+        value = lambda wf: _version_map(wf, vt.valueType, grouped)  # noqa: E731
+        live = lambda x: F.size(F.map_keys(x.getField("value"))) > 0  # noqa: E731
+    else:
+        value = lambda wf: _cast(  # noqa: E731
+            _latest(wf.col_name) if grouped else F.col(wf.col_name), wf.dt, vt
+        )
+        live = lambda x: x.getField("value").isNotNull()  # noqa: E731
+    entries = [F.struct(F.lit(wf.col).alias("key"), value(wf).alias("value")) for wf in fams]
+    return F.map_from_entries(F.filter(F.array(*entries), live))
 
 
 def read_table(
@@ -577,156 +698,124 @@ def read_table(
     pruning (see ShcReader.pushFilters). Each call here builds a fresh
     relation, which is always safe.
 
-    When ``catalog`` differs from the catalog the table was written
-    with, the read goes through the cross-catalog path (multiple
-    catalogs viewing one physical table, DynamicColumnSuite.scala:
-    151-248): columns are matched by (column family, qualifier),
-    ``map<long,T>`` columns materialize ts->value version maps
-    (keepVersions, HBaseTableScan.scala:107-110), dynamic ``col:""``
-    map columns capture whole families, and ``restrictive``
-    (COLUMN/FAMILY/NONE, HBaseRelation.scala:348-352) governs what a
-    dynamic map may capture.
+    One read path serves every catalog, as in the reference, where
+    every view of a table goes through one relation and one row
+    builder. ``catalog`` is resolved against the table's stored writer
+    catalog into a column plan (``_column_plan``: columns match by
+    column family and qualifier; ``map<long,T>`` columns read ts->value
+    version maps; dynamic ``col:""`` maps capture families as
+    ``restrictive`` allows). The writer's own catalog is the plan that
+    maps every column to itself. The scan reads the writer columns the
+    plan needs, and one pipeline follows: tombstone mask -> TTL nulling
+    -> time range -> per-cell ``max_versions`` -> merge -> Avro decode
+    -> TTL live-row filter -> select.
+
+    Merge rule: a plain merge-to-latest read of flat cells (no version
+    map, time range, ``max_versions``, TTL or ``merge_dynamic_maps``)
+    merges inside the source (the LSM merge-read, no shuffle); a table
+    whose regions prove one version per key skips the merge; any other
+    merge is a per-key Spark aggregation.
     """
     register(spark)
-    cat = parse_catalog(catalog)
-
-    import os as _os
-
-    table_dir = _os.path.join(root, f"{cat.namespace}.{cat.name}")
-    stored = _stored_catalog_json(table_dir)
+    rcat = parse_catalog(catalog)
+    stored, regions = table_state(table_path(root, rcat))
+    wcat = parse_catalog(stored) if stored is not None else rcat
+    other = stored is not None and not _same_catalog(stored, catalog)
     # TTL is a property of the PHYSICAL table (HBase sets it on the
     # column family descriptor, not on the reader): when a stored
     # catalog exists its ttl is authoritative — INCLUDING "no ttl"
     # (a reader-side catalog must not conjure expiry onto a TTL-free
     # table). The reader's ttl applies only before the first write
     # records the catalog.
-    _ttl = parse_catalog(stored).ttl if stored is not None else cat.ttl
-    if _ttl:
-        _ttl_cut = {
-            cf: (ttl_now_ms if ttl_now_ms is not None else int(time.time() * 1000))
-            - int(secs) * 1000
-            for cf, secs in _ttl.items()
-        }
-    if stored is not None and not _same_catalog(stored, catalog):
-        if _ttl:
-            raise ValueError(
-                "TTL-bearing tables do not support cross-catalog reads yet; "
-                "read with the stored catalog"
-            )
-        if merge_dynamic_maps:
-            raise ValueError(
-                "merge_dynamic_maps applies to same-catalog map columns; "
-                "cross-catalog dynamic capture always overlays per cell"
-            )
-        return _read_cross_catalog(
-            spark,
-            catalog,
-            stored,
-            root=root,
-            table_dir=table_dir,
-            timestamp=timestamp,
-            min_stamp=min_stamp,
-            max_stamp=max_stamp,
-            max_versions=max_versions,
-            merge_to_latest=merge_to_latest,
-            restrictive=restrictive,
-            reader_options=reader_options,
-            keep_internal=keep_internal,
+    ttl = wcat.ttl
+    if other and ttl:
+        raise ValueError(
+            "TTL-bearing tables do not support cross-catalog reads yet; "
+            "read with the stored catalog"
         )
-
-    # shuffle-free merge for appended tables: when no time-travel /
-    # version options interfere and every cell is a flat type arrow can
-    # hash-aggregate, the source itself merges overlapping generations
-    # per key sub-range (LSM merge-read) and the groupBy below is
-    # skipped — a plain read of an appended table never shuffles.
-    value_fields_ = [f for f in cat.fields.values() if not f.is_rowkey]
-    in_source_merge = (
+    if other and merge_dynamic_maps:
+        raise ValueError(
+            "merge_dynamic_maps applies to same-catalog map columns; "
+            "cross-catalog dynamic capture always overlays per cell"
+        )
+    plans, needed = _column_plan(rcat, wcat, restrictive)
+    has_versions = any(
+        kind == "vmap" or (kind == "dyn" and _is_vmap_type(f.dt.valueType))
+        for kind, f, _ in plans
+    )
+    time_opts = any(o is not None for o in (timestamp, min_stamp, max_stamp, max_versions))
+    noop = merge_is_noop(regions)
+    in_source = (
         merge_to_latest
-        and not _ttl  # expiry must null cells BEFORE version merge
-        and max_versions is None
-        and timestamp is None
-        and min_stamp is None
-        and max_stamp is None
-        and not merge_dynamic_maps
+        # TTL: expiry must null cells BEFORE the version merge
+        and not (has_versions or time_opts or ttl or merge_dynamic_maps or noop)
         and all(
-            f.avro_schema is not None
-            or not isinstance(f.dt, (T.MapType, T.ArrayType, T.StructType))
-            for f in value_fields_
+            wcat.fields[c].avro_schema is not None
+            or not isinstance(wcat.fields[c].dt, (T.MapType, T.ArrayType, T.StructType))
+            for c in needed
         )
-        and not _merge_is_noop(table_dir)
+    )
+    grouped = (has_versions or merge_to_latest) and not (noop or in_source)
+    # Tombstones for a Spark-side merge: the raw scan hides tombstone
+    # ROWS but leaves live the older versions they mask, so without
+    # this a deleted row RESURRECTS on the merged view (the in-source
+    # merge masks by itself). Explicit time-travel / version reads and
+    # raw history reads still see pre-delete history
+    # (KEEP_DELETED_CELLS=true semantics).
+    mask_dels = (
+        merge_to_latest
+        and not (time_opts or in_source)
+        and any(r.get("tombstones") for r in regions)
     )
 
-    # Tombstone masking for the Spark-side groupBy merge fallback
-    # (complex-typed columns, merge_dynamic_maps): the in-source LSM
-    # merge applies delete masking itself (shc_source._read_merge), but
-    # the fallback runs above a RAW scan that hides tombstone ROWS
-    # while leaving the older versions they mask live — without this a
-    # deleted row RESURRECTS on the default merged view. Same manifest
-    # gate and masking rule as _read_cross_catalog; explicit
-    # time-travel / version reads still see pre-delete history
-    # (KEEP_DELETED_CELLS=true semantics).
-    _mask_dels = False
-    if (
-        merge_to_latest
-        and not in_source_merge
-        and all(o is None for o in (timestamp, min_stamp, max_stamp, max_versions))
-    ):
-        from shc_spark.sources.shc_source import _load_regions as _lr
-
-        try:
-            _mask_dels = any(r.get("tombstones") for r in _lr(table_dir))
-        except FileNotFoundError:
-            _mask_dels = False
-
+    # the physical scan goes through the writer catalog pruned to the
+    # needed columns (avro schema refs and table/rowkey spec intact),
+    # so only those parquet columns decode
+    scan_cat = json.loads(stored if stored is not None else catalog)
+    wkeys = [f.col_name for f in wcat.rowkey_fields()]
+    scan_cat["columns"] = {
+        k: v for k, v in scan_cat["columns"].items() if k in wkeys or k in needed
+    }
     reader = (
         spark.read.format("shc")
-        .option("catalog", catalog)
+        .option("catalog", json.dumps(scan_cat))
         .option("root", root)
     )
-    if in_source_merge:
+    if in_source:
         reader = reader.option("merge", "latest")
-        merge_to_latest = False  # the source already merged
-    if _mask_dels:
+    if mask_dels:
         reader = reader.option("includeDeletes", "true")
     if key_ranges:
-        import json as _json
-
-        reader = reader.option(
-            "keyranges", _json.dumps([[lo, hi] for lo, hi in key_ranges])
-        )
+        reader = reader.option("keyranges", json.dumps([[lo, hi] for lo, hi in key_ranges]))
     for k, v in (reader_options or {}).items():
         reader = reader.option(k, v)
     df = reader.load()
-    if _mask_dels:
-        from pyspark.sql import Window as _W
 
-        from shc_spark.sources.shc_source import DEL_COL as _DC
-
-        _kn = [f.col_name for f in cat.rowkey_fields()]
-        _tomb = F.max(F.when(F.col(_DC) == 1, F.col(TS_COL))).over(
-            _W.partitionBy(*_kn)
+    if mask_dels:
+        # a tombstone at ts T masks every version of its row with
+        # ts <= T (itself included); a newer put resurrects the row
+        tomb = F.max(F.when(F.col(DEL_COL) == 1, F.col(TS_COL))).over(
+            Window.partitionBy(*wkeys)
         )
         df = (
-            df.withColumn("__tomb", _tomb)
+            df.withColumn("__tomb", tomb)
             .filter(
-                (F.col(_DC).isNull() | (F.col(_DC) != 1))
+                (F.col(DEL_COL).isNull() | (F.col(DEL_COL) != 1))
                 & (F.col("__tomb").isNull() | (F.col(TS_COL) > F.col("__tomb")))
             )
-            .drop(_DC, "__tomb")
+            .drop(DEL_COL, "__tomb")
         )
-    # Per-family TTL (HColumnDescriptor.setTimeToLive): a cell older
-    # than now - ttl(family) is GONE — null it before any version
-    # merge, so max_by falls through to ... nothing (an older version
-    # is older still, hence also expired; expiry is monotone in ts).
-    # Rowkey dimensions never expire.
-    if _ttl:
-        for f in cat.fields.values():
-            if not f.is_rowkey and f.cf in _ttl_cut:
-                df = df.withColumn(
-                    f.col_name,
-                    F.when(F.col(TS_COL) >= _ttl_cut[f.cf], F.col(f.col_name)),
-                )
-
+    if ttl:
+        # Per-family TTL (HColumnDescriptor.setTimeToLive): a cell older
+        # than now - ttl(family) is GONE — null it before any version
+        # merge, so max_by falls through to nothing (an older version is
+        # older still; expiry is monotone in ts). Rowkeys never expire.
+        now = ttl_now_ms if ttl_now_ms is not None else int(time.time() * 1000)
+        for c in needed:
+            cf = wcat.fields[c].cf
+            if cf in ttl:
+                cut = now - int(ttl[cf]) * 1000
+                df = df.withColumn(c, F.when(F.col(TS_COL) >= cut, F.col(c)))
     # S15 time semantics (handleTimeSemantics, HBaseTableScan.scala:496-516)
     if timestamp is not None:
         df = df.filter(F.col(TS_COL) == timestamp)
@@ -734,429 +823,63 @@ def read_table(
         df = df.filter(F.col(TS_COL) >= min_stamp)
     if max_stamp is not None:
         df = df.filter(F.col(TS_COL) < max_stamp)  # half-open, like Scan.setTimeRange
-
-    key_names = [f.col_name for f in cat.rowkey_fields()]
-    value_fields = [f for f in cat.fields.values() if not f.is_rowkey]
-
-    if merge_to_latest and max_versions is None and _merge_is_noop(table_dir):
-        # single write, every file's keys unique, files key-disjoint:
-        # each key exists exactly once, so merge-to-latest is the
-        # identity — skip the groupBy entirely. At 100 TB this turns
-        # every plain read into a shuffle-FREE scan.
-        merge_to_latest = False
-
     if max_versions is not None:
-        # per-CELL maxVersions (HBase grants each column its own
-        # version budget): rank every value column's non-null cells
-        # per key by ts desc, null out the over-budget ones, and drop
-        # rows left with no live cell. For homogeneous rows (all cells
-        # written together) this equals the per-row cap; for
-        # heterogeneous rows (version-map fan-out, narrow-catalog
-        # appends) it is the correct granularity. Rowkey predicates
-        # still push through — partition keys are grouping columns.
-        from pyspark.sql import Window as W
-
+        # per-CELL maxVersions (HBase grants each column its own version
+        # budget): rank every needed column's non-null cells per key by
+        # ts desc, null out the over-budget ones, and drop rows left
+        # with no live cell. For homogeneous rows (all cells written
+        # together) this equals the per-row cap; for heterogeneous rows
+        # (version-map fan-out, narrow-catalog appends) it is the
+        # correct granularity. Rowkey predicates still push through —
+        # partition keys are grouping columns.
         w = (
-            W.partitionBy(*key_names)
+            Window.partitionBy(*wkeys)
             .orderBy(F.col(TS_COL).desc())
-            .rowsBetween(W.unboundedPreceding, W.currentRow)
+            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
         )
-        for f in value_fields:
-            rank = F.count(F.when(F.col(f.col_name).isNotNull(), 1)).over(w)
-            df = df.withColumn(
-                f.col_name,
-                F.when(
-                    F.col(f.col_name).isNotNull() & (rank <= max_versions),
-                    F.col(f.col_name),
-                ),
-            )
-        if value_fields:
-            df = df.filter(_any_live_cell([f.col_name for f in value_fields]))
+        for c in needed:
+            rank = F.count(F.when(F.col(c).isNotNull(), 1)).over(w)
+            df = df.withColumn(c, F.when(F.col(c).isNotNull() & (rank <= max_versions), F.col(c)))
+        if needed:
+            df = df.filter(_any_live_cell(needed))
 
-    if merge_to_latest:
-        # per-cell latest-non-null merge (buildRow, HBaseTableScan.scala:114-175):
-        # max_by ignores rows whose ordering key is null, so a newer
-        # version with a null cell does NOT shadow an older value —
-        # matching HBase "nulls are not stored" semantics
-        aggs = []
-        for f in value_fields:
-            if merge_dynamic_maps and isinstance(f.dt, T.MapType):
-                # per-qualifier overlay (HBase dynamic-column merge,
-                # HBaseTableScan.scala:139-151): fold version maps in
-                # ts order, newer keys shadowing older ones; keys are
-                # removed from the accumulator before map_concat so no
-                # dedup policy is needed
-                dt_sql = f.dt.simpleString()
-                # maps aren't orderable, entry arrays are: sort (ts,
-                # entries) structs by ts, fold newer-shadows-older
-                aggs.append(
-                    F.expr(
-                        f"aggregate("
-                        f"  array_sort(collect_list(struct(`{TS_COL}` AS ts,"
-                        f"    map_entries(coalesce(`{f.col_name}`, cast(map() AS {dt_sql}))) AS e))),"
-                        f"  cast(map() AS {dt_sql}),"
-                        f"  (acc, x) -> map_concat("
-                        f"    map_filter(acc, (k, v) -> NOT array_contains(transform(x.e, p -> p.key), k)),"
-                        f"    map_from_entries(x.e)))"
-                    ).alias(f.col_name)
-                )
-            else:
-                aggs.append(
-                    F.expr(
-                        f"max_by(`{f.col_name}`, CASE WHEN `{f.col_name}` IS NOT NULL "
-                        f"THEN `{TS_COL}` END)"
-                    ).alias(f.col_name)
-                )
+    out = []
+    for kind, f, src in plans:
+        if kind == "dyn":
+            e = _dyn_map(f, src, grouped)
+        elif src is None:
+            e = _empty_map(f.dt) if kind == "vmap" else F.lit(None).cast(f.dt)
+        elif kind == "vmap":
+            e = _version_map(src, f.dt.valueType, grouped)
+        elif grouped and merge_dynamic_maps and isinstance(f.dt, T.MapType):
+            e = _overlay_maps(src)
+        else:
+            e = _cast(_latest(src.col_name) if grouped else F.col(src.col_name), src.dt, f.dt)
+        out.append(e.alias(f.col_name))
+    rkeys = [f.col_name for f in rcat.rowkey_fields()]
+    keys = [F.col(w).alias(r) for w, r in zip(wkeys, rkeys)]
+    if grouped:
         keep = [F.max(TS_COL).alias(TS_COL)] if keep_internal else []
-        df = df.groupBy(*key_names).agg(*aggs, *keep)
-        cols = key_names + [f.col_name for f in value_fields]
+        df = df.groupBy(*keys).agg(*out, *keep)
     else:
-        cols = key_names + [f.col_name for f in value_fields]
-    if keep_internal:
-        cols = cols + [TS_COL]
+        df = df.select(*keys, *out, *([TS_COL] if keep_internal else []))
     # Avro cells travel as binary through filter/merge (pushdown and
     # max_by never look inside); decode to the logical struct last, on
     # the merged row count. Rowkey dims can be Avro-coded too
-    # (AvroSourceKeySuite) — the key groups/merges as binary above and
-    # decodes here with the value cells.
-    for f in cat.fields.values():
-        if f.avro_schema is not None:
-            df = df.withColumn(f.col_name, _avro_decode_expr(f))
-    # HBase rows are their cells: when TTL expired EVERY cell of a key
-    # (all its families), the row does not exist — drop it. Only
-    # active with TTL so all-null value rows written by users keep
-    # their existing (row-granular) visibility.
-    if _ttl and value_fields:
-        df = df.filter(_any_live_cell([f.col_name for f in value_fields]))
-    return df.select(*cols)
-
-
-def _read_cross_catalog(
-    spark: SparkSession,
-    read_catalog: str,
-    stored_catalog: str,
-    root: str,
-    table_dir: str,
-    timestamp: int | None,
-    min_stamp: int | None,
-    max_stamp: int | None,
-    max_versions: int | None,
-    merge_to_latest: bool,
-    restrictive: str,
-    reader_options: dict | None,
-    keep_internal: bool = False,
-) -> DataFrame:
-    """One physical table viewed through a different catalog.
-
-    Columns resolve by (cf, qualifier) against the stored writer
-    catalog; the physical scan uses a pruned writer-shaped catalog so
-    only needed parquet columns decode, and rowkey filter pushdown
-    keeps working (renames are projections above the scan).
-
-    Field interpretations (reference DynamicColumnSuite semantics):
-    - static column: the writer cell with the same (cf, qualifier),
-      cast to the declared type; NULL column if the cell doesn't exist;
-    - ``map<long, V>`` with a qualifier: ts -> value version map of
-      that cell (HBaseTableScan.scala:107-110) — unless the writer
-      stored exactly that map type, which passes through as static;
-    - ``map<string, V>`` with ``"col": ""``: dynamic capture of every
-      family cell not declared elsewhere in the read catalog, keyed by
-      qualifier; ``V = map<long, W>`` nests a version map per
-      qualifier (HBaseRecordDynamic.col7 shape);
-    - ``restrictive``: COLUMN (default) fetches only declared cells, so
-      a dynamic map captures nothing (scan.addColumn semantics,
-      HBaseTableScan.scala:406-411); FAMILY and NONE let dynamic maps
-      capture their whole family. This columnar backend never fetches
-      families outside the catalog, so NONE's extra I/O has no analog
-      (an improvement, like prefix->range in filters.py).
-
-    Version maps are built with a per-key aggregation when the table
-    has multiple generations; single-write tables with unique keys
-    build single-entry maps per row and stay shuffle-FREE
-    (_merge_is_noop). When any version map is requested, static
-    columns merge to latest regardless of merge_to_latest.
-    """
-    import json as _json
-
-    mode = (restrictive or "column").lower()
-    if mode not in ("column", "family", "none"):
-        raise ValueError(f"restrictive must be COLUMN, FAMILY, or NONE, got {restrictive!r}")
-
-    rcat = parse_catalog(read_catalog)
-    wcat = parse_catalog(stored_catalog)
-    rkeys, wkeys = rcat.rowkey_fields(), wcat.rowkey_fields()
-    if len(rkeys) != len(wkeys) or any(
-        rf.dt != wf.dt or rf.coder != wf.coder for rf, wf in zip(rkeys, wkeys)
-    ):
-        raise ValueError(
-            "read catalog rowkey is incompatible with the stored catalog "
-            f"(stored dims: {[(f.col_name, f.type_str) for f in wkeys]})"
-        )
-
-    wmap = {(f.cf, f.col): f for f in wcat.value_fields()}
-    declared = {(f.cf, f.col) for f in rcat.value_fields() if f.col != ""}
-
-    def _is_vmap_type(dt) -> bool:
-        return isinstance(dt, T.MapType) and isinstance(dt.keyType, T.LongType)
-
-    # resolve each read field to a plan over writer columns
-    plans = []  # (kind, read_field, payload)
-    needed: list = []
-
-    def _need(wf):
-        if wf.col_name not in needed:
-            needed.append(wf.col_name)
-
-    for f in rcat.value_fields():
-        if f.col == "" and isinstance(f.dt, T.MapType):
-            fams = []
-            if mode != "column":
-                fams = [
-                    wf
-                    for wf in wcat.value_fields()
-                    if wf.cf == f.cf and (wf.cf, wf.col) not in declared
-                    and wf.avro_schema is None
-                ]
-            for wf in fams:
-                _need(wf)
-            plans.append(("dyn", f, fams))
-        elif _is_vmap_type(f.dt) and f.col != "":
-            wf = wmap.get((f.cf, f.col))
-            if wf is not None and wf.dt == f.dt:
-                plans.append(("static", f, wf))  # stored map passes through
-            else:
-                plans.append(("vmap", f, wf))
-            if wf is not None:
-                _need(wf)
-        else:
-            wf = wmap.get((f.cf, f.col))
-            if wf is not None:
-                _need(wf)
-            plans.append(("static", f, wf))
-
-    # physical scan through a pruned writer-shaped catalog (keeps avro
-    # schema refs and table/rowkey spec intact)
-    sj = _json.loads(stored_catalog)
-    keep_cols = {kf.col_name for kf in wkeys} | set(needed)
-    sj["columns"] = {k: v for k, v in sj["columns"].items() if k in keep_cols}
-    scan_catalog = _json.dumps(sj)
-
-    # tombstone masking (manifest-gated: only when some generation
-    # actually carries deletes): the cross-catalog merge runs in Spark
-    # above a RAW scan, which hides tombstone ROWS but not the older
-    # versions they mask — without this a deleted row would resurrect.
-    # Same visibility rule as the same-catalog path: explicit
-    # time-travel / version options see pre-delete history
-    # (KEEP_DELETED_CELLS=true), the default view applies deletes.
-    from shc_spark.sources.shc_source import DEL_COL, _load_regions
-
-    try:
-        _has_tombs = any(r.get("tombstones") for r in _load_regions(table_dir))
-    except FileNotFoundError:
-        _has_tombs = False
-    # Masking applies to MERGED views only (one visibility contract
-    # with the same-catalog path): merge_to_latest=False is a raw
-    # history read and shows pre-delete versions with tombstone rows
-    # hidden, exactly like the same-catalog raw scan.
-    _mask_dels = (
-        _has_tombs
-        and merge_to_latest
-        and all(o is None for o in (timestamp, min_stamp, max_stamp, max_versions))
-    )
-
-    reader = (
-        spark.read.format("shc").option("catalog", scan_catalog).option("root", root)
-    )
-    if _mask_dels:
-        reader = reader.option("includeDeletes", "true")
-    for k, v in (reader_options or {}).items():
-        reader = reader.option(k, v)
-    df = reader.load()
-    if _mask_dels:
-        from pyspark.sql import Window as _W
-
-        _wk = [f.col_name for f in wkeys]
-        _tomb = F.max(F.when(F.col(DEL_COL) == 1, F.col(TS_COL))).over(
-            _W.partitionBy(*_wk)
-        )
-        df = (
-            df.withColumn("__tomb", _tomb)
-            .filter(
-                (F.col(DEL_COL).isNull() | (F.col(DEL_COL) != 1))
-                & (F.col("__tomb").isNull() | (F.col(TS_COL) > F.col("__tomb")))
-            )
-            .drop(DEL_COL, "__tomb")
-        )
-
-    if timestamp is not None:
-        df = df.filter(F.col(TS_COL) == timestamp)
-    if min_stamp is not None:
-        df = df.filter(F.col(TS_COL) >= min_stamp)
-    if max_stamp is not None:
-        df = df.filter(F.col(TS_COL) < max_stamp)
-
-    wkey_names = [f.col_name for f in wkeys]
-    if max_versions is not None:
-        # per-CELL maxVersions (HBase semantics, HBaseTableScan's
-        # maxVersions applies to each column's versions independently):
-        # rank every column's non-null values per key by ts desc and
-        # null out anything beyond the budget. For homogeneous rows
-        # (all cells written together) this degenerates to the old
-        # per-row cap; for heterogeneous rows (write-side version-map
-        # fan-out, narrow-catalog appends) it is the correct cell
-        # granularity. Rows left with no live cell disappear.
-        from pyspark.sql import Window as W
-
-        w = (
-            W.partitionBy(*wkey_names)
-            .orderBy(F.col(TS_COL).desc())
-            .rowsBetween(W.unboundedPreceding, W.currentRow)
-        )
-        for cname in needed:
-            rank = F.count(F.when(F.col(cname).isNotNull(), 1)).over(w)
-            df = df.withColumn(
-                cname,
-                F.when(
-                    F.col(cname).isNotNull() & (rank <= max_versions), F.col(cname)
-                ),
-            )
-        if needed:
-            df = df.filter(_any_live_cell(list(needed)))
-
-    has_versions = any(
-        k == "vmap" or (k == "dyn" and _is_vmap_type(f.dt.valueType))
-        for k, f, _ in plans
-    )
-    noop = _merge_is_noop(table_dir)
-    grouped = (has_versions or merge_to_latest) and not noop
-
-    def _vcast(wf, vt):
-        c = F.col(wf.col_name)
-        return c.cast(vt) if wf.dt != vt else c
-
-    def _vmap_agg(wf, vt):
-        """ts -> value map across this key's versions (null cells are
-        'not stored'); entries sorted by ts for determinism. Duplicate
-        timestamps (two generations written with the same explicit ts)
-        keep the LAST entry after the (ts, value) sort — the max value,
-        a deterministic rule standing in for HBase's same-coordinate
-        overwrite — instead of tripping Spark's duplicate-map-key
-        error."""
-        entry = F.when(
-            F.col(wf.col_name).isNotNull(),
-            F.struct(F.col(TS_COL).alias("key"), _vcast(wf, vt).alias("value")),
-        )
-        sorted_e = F.array_sort(F.collect_list(entry))
-        init = F.expr(
-            f"cast(array() as array<struct<key:bigint,value:{vt.simpleString()}>>)"
-        )
-
-        def merge(acc, x):
-            return F.when(
-                (F.size(acc) > 0) & (F.element_at(acc, -1)["key"] == x["key"]),
-                F.concat(F.slice(acc, F.lit(1), F.size(acc) - 1), F.array(x)),
-            ).otherwise(F.concat(acc, F.array(x)))
-
-        return F.map_from_entries(F.aggregate(sorted_e, init, merge))
-
-    def _vmap_row(wf, vt):
-        """single-version table: one-entry map built per row, no shuffle"""
-        return F.when(
-            F.col(wf.col_name).isNotNull(),
-            F.map_from_entries(
-                F.array(F.struct(F.col(TS_COL).alias("key"), _vcast(wf, vt).alias("value")))
-            ),
-        ).otherwise(F.map_from_entries(F.array().cast(f"array<struct<key:long,value:{vt.simpleString()}>>")))
-
-    def _empty_map(dt):
-        return F.map_from_entries(
-            F.array().cast(
-                f"array<struct<key:{dt.keyType.simpleString()},value:{dt.valueType.simpleString()}>>"
-            )
-        )
-
-    def _static_merge(wf, vt):
-        return F.expr(
-            f"max_by(`{wf.col_name}`, CASE WHEN `{wf.col_name}` IS NOT NULL "
-            f"THEN `{TS_COL}` END)"
-        ).cast(vt) if wf.dt != vt else F.expr(
-            f"max_by(`{wf.col_name}`, CASE WHEN `{wf.col_name}` IS NOT NULL "
-            f"THEN `{TS_COL}` END)"
-        )
-
-    def _dyn_expr(f, fams, agg: bool):
-        """qualifier-keyed map over the family's cells; inner version
-        maps when the value type is map<long, W>."""
-        vt = f.dt.valueType
-        if _is_vmap_type(vt):
-            inner = vt.valueType
-            mk = (lambda wf: _vmap_agg(wf, inner)) if agg else (lambda wf: _vmap_row(wf, inner))
-            entries = [
-                F.struct(F.lit(wf.col).alias("key"), mk(wf).alias("value")) for wf in fams
-            ]
-            if not entries:
-                return _empty_map(f.dt)
-            return F.map_from_entries(
-                F.filter(
-                    F.array(*entries),
-                    lambda x: F.size(F.map_keys(x.getField("value"))) > 0,
-                )
-            )
-        mk = (lambda wf: _static_merge(wf, vt)) if agg else (lambda wf: _vcast(wf, vt))
-        entries = [
-            F.struct(F.lit(wf.col).alias("key"), mk(wf).alias("value")) for wf in fams
-        ]
-        if not entries:
-            return _empty_map(f.dt)
-        return F.map_from_entries(
-            F.filter(F.array(*entries), lambda x: x.getField("value").isNotNull())
-        )
-
-    out_exprs = []
-    for kind, f, payload in plans:
-        if kind == "static":
-            wf = payload
-            if wf is None:
-                e = F.lit(None).cast(f.dt)
-            elif grouped:
-                e = _static_merge(wf, f.dt)
-            else:
-                e = _vcast(wf, f.dt)
-        elif kind == "vmap":
-            wf = payload
-            if wf is None:
-                e = _empty_map(f.dt)
-            elif grouped:
-                e = _vmap_agg(wf, f.dt.valueType)
-            else:
-                e = _vmap_row(wf, f.dt.valueType)
-        else:  # dyn
-            e = _dyn_expr(f, payload, grouped)
-        out_exprs.append(e.alias(f.col_name))
-
-    rkey_names = [f.col_name for f in rkeys]
-    if grouped:
-        keep = [F.max(TS_COL).alias(TS_COL)] if keep_internal else []
-        df = df.groupBy(
-            *[F.col(w).alias(r) for w, r in zip(wkey_names, rkey_names)]
-        ).agg(*out_exprs, *keep)
-    else:
-        keep = [F.col(TS_COL)] if keep_internal else []
-        df = df.select(
-            *[F.col(w).alias(r) for w, r in zip(wkey_names, rkey_names)],
-            *out_exprs,
-            *keep,
-        )
-
-    # Avro-coded read fields decode last, on merged rows (rowkey dims
-    # included — they group/merge as binary above)
+    # (AvroSourceKeySuite) — the key groups/merges as binary above.
     for f in rcat.fields.values():
         if f.avro_schema is not None:
             df = df.withColumn(f.col_name, _avro_decode_expr(f))
-    cols = [f.col_name for f in rcat.fields.values()]
-    if keep_internal:
-        cols.append(TS_COL)
-    return df.select(*cols)
+    values = [f.col_name for f in rcat.value_fields()]
+    # HBase rows are their cells: when TTL expired EVERY cell of a key,
+    # the row does not exist. Only with TTL, so all-null value rows
+    # written by users keep their (row-granular) visibility.
+    if ttl and values:
+        df = df.filter(_any_live_cell(values))
+    # the writer's own catalog reads keys first (rowkey order); another
+    # catalog reads in its declared column order
+    cols = [f.col_name for f in rcat.fields.values()] if other else rkeys + values
+    return df.select(*cols, *([TS_COL] if keep_internal else []))
 
 
 def read_stream_table(
@@ -1240,15 +963,11 @@ def scan_aggregate(
     TTL tables and cross-catalog reads are not supported — use
     ``read_table(...).groupBy(...)`` for those.
     """
-    import json as _json
-    import os as _os
-
     from shc_spark.sources.shc_source import agg_out_name
 
     register(spark)
     cat = parse_catalog(catalog)
-    table_dir = _os.path.join(root, f"{cat.namespace}.{cat.name}")
-    stored = _stored_catalog_json(table_dir)
+    stored, regions = table_state(table_path(root, cat))
     if stored is not None and not _same_catalog(stored, catalog):
         raise ValueError(
             "scan_aggregate requires the stored catalog; cross-catalog "
@@ -1276,21 +995,21 @@ def scan_aggregate(
                 phys.append((fn, col))
             requested.append(agg_out_name(fn, col))
 
-    spec = _json.dumps({"groupBy": list(group_by), "aggs": [list(p) for p in phys]})
+    spec = json.dumps({"groupBy": list(group_by), "aggs": [list(p) for p in phys]})
     reader = (
         spark.read.format("shc")
         .option("catalog", catalog)
         .option("root", root)
         .option("aggregate", spec)
     )
-    if not _merge_is_noop(table_dir):
+    if not merge_is_noop(regions):
         # overlapping generations / tombstones: aggregate AFTER the
         # in-source latest-wins merge (disjoint sub-ranges, so the
         # per-partition merge is complete)
         reader = reader.option("merge", "latest")
     if key_ranges:
         reader = reader.option(
-            "keyranges", _json.dumps([[lo, hi] for lo, hi in key_ranges])
+            "keyranges", json.dumps([[lo, hi] for lo, hi in key_ranges])
         )
     for k, v in (reader_options or {}).items():
         reader = reader.option(k, v)
@@ -1721,18 +1440,13 @@ def count_rows(
     data scanned — counting a 100 TB table costs one small JSON file.
     Appended/deleted tables fall back to the distributed merge-read
     count (still one job, no collect)."""
-    import json as _json
-    import os as _os
-
     cat = parse_catalog(catalog)
-    path = _os.path.join(root, f"{cat.namespace}.{cat.name}")
-    stored = _stored_catalog_json(path)
+    stored, regions = table_state(table_path(root, cat))
     has_ttl = bool(parse_catalog(stored).ttl if stored is not None else cat.ttl)
-    if _merge_is_noop(path) and not has_ttl:
-        regions = _json.load(open(_os.path.join(path, "_regions.json")))
+    if merge_is_noop(regions) and not has_ttl:
         # A single-generation table can still carry tombstones (a CDC
         # feed of inserts + deletes over disjoint unique keys passes
-        # _merge_is_noop): recorded region row counts INCLUDE the
+        # merge_is_noop): recorded region row counts INCLUDE the
         # tombstone rows, which are not live — only the tombstone-free
         # (and TTL-free: expiry is evaluated at read time) case may
         # answer from metadata.

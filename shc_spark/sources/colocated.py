@@ -45,6 +45,7 @@ from shc_spark.sources.shc_source import (
     _load_regions,
     internal_schema,
     table_path,
+    table_state,
 )
 
 
@@ -267,15 +268,10 @@ def colocated_join(
     # TTL tables are refused: the in-source merge has no expiry
     # horizon, so joining one here would silently resurrect expired
     # cells (same explicit-error stance as cross-catalog TTL reads).
-    import os as _os
-
-    from shc_spark.catalog import parse_catalog as _pc
-    from shc_spark.sources.api import _stored_catalog_json as _scj
-
     for c, r in ((catalog_a, root), (catalog_b, root_b or root)):
-        cat = _pc(c)
-        stored = _scj(_os.path.join(r, f"{cat.namespace}.{cat.name}"))
-        if _pc(stored).ttl if stored is not None else cat.ttl:
+        cat = parse_catalog(c)
+        stored = table_state(table_path(r, cat))[0]
+        if parse_catalog(stored).ttl if stored is not None else cat.ttl:
             raise ValueError(
                 "colocated_join does not support TTL tables; read them "
                 "through read_table (which applies expiry) and join"

@@ -69,7 +69,9 @@ from shc_spark.sources.shc_source import (
     _parse_agg_spec,
     aggregate_partial_schema,
     internal_schema,
+    merge_is_noop,
     table_path,
+    table_state,
 )
 
 
@@ -79,6 +81,32 @@ def _b64(b: bytes) -> str:
 
 def _unb64(s: str) -> bytes:
     return base64.b64decode(s)
+
+
+def _encoded_rows(batch, value_fields):
+    """(key bytes, ts, {b"cf:qual": cell bytes}) per row of a scanned
+    batch — the region-server row shape. Cells encode through the
+    catalog coders (an Avro cell already is its blob); null cells are
+    absent (HBase: nulls are not stored)."""
+    keys = batch.column(ROWKEY_COL).to_pylist()
+    tss = batch.column(TS_COL).to_pylist()
+    cols = [
+        (
+            f"{f.cf}:{f.col}".encode(),
+            f,
+            None if f.avro_schema is not None else get_coder(f.coder),
+            batch.column(f.col_name).to_pylist(),
+        )
+        for f in value_fields
+        if f.col_name in batch.schema.names
+    ]
+    for i, key in enumerate(keys):
+        cells = {}
+        for name, f, coder, vals in cols:
+            v = vals[i]
+            if v is not None:
+                cells[name] = bytes(v) if coder is None else coder.to_bytes(v, f.dt)
+        yield bytes(key), int(tss[i]), cells
 
 
 # ---------------------------------------------------------------------
@@ -108,18 +136,23 @@ class _TableService:
         self._mono[table] = ts
         return ts
 
-    def _reader(self, table: str, ranges: list[ScanRange] | None,
-                raw: bool = False) -> tuple:
+    def _state(self, table: str) -> tuple:
+        """(table dir, stored catalog JSON, region list) of one table;
+        a table without a stored catalog does not exist."""
         import os
 
         path = os.path.join(self.root, table)
-        with open(os.path.join(path, "_catalog.json")) as fh:
-            cat_json = fh.read()
+        cat_json, regions = table_state(path)
+        if cat_json is None:
+            raise FileNotFoundError(os.path.join(path, "_catalog.json"))
+        return path, cat_json, regions
+
+    def _reader(self, table: str, ranges: list[ScanRange] | None,
+                raw: bool = False) -> tuple:
+        _, cat_json, regions = self._state(table)
         cat = parse_catalog(cat_json)
         opts = {"catalog": cat_json, "root": self.root}
-        from shc_spark.sources.api import _merge_is_noop
-
-        if not raw and not _merge_is_noop(path):
+        if not raw and not merge_is_noop(regions):
             opts["merge"] = "latest"
         rdr = ShcReader(None, opts)
         if ranges:
@@ -220,27 +253,9 @@ class _TableService:
 
         for part in sorted(rdr.partitions(), key=_part_start):
             for batch in rdr.read(part):
-                keys = batch.column(ROWKEY_COL).to_pylist()
-                tss = batch.column(TS_COL).to_pylist()
-                cols = {
-                    f.col_name: batch.column(f.col_name).to_pylist()
-                    for f in value_fields
-                    if f.col_name in batch.schema.names
-                }
-                for i, key in enumerate(keys):
-                    cells = {}
-                    for f in value_fields:
-                        v = cols.get(f.col_name, [None] * len(keys))[i]
-                        if v is None:
-                            continue  # HBase: nulls are not stored
-                        if f.avro_schema is not None:
-                            enc = bytes(v)  # already the Avro blob
-                        else:
-                            enc = get_coder(f.coder).to_bytes(v, f.dt)
-                        cells[f"{f.cf}:{f.col}".encode()] = enc
-                    if scvfs and not _passes(cells):
-                        continue
-                    yield bytes(key), int(tss[i]), cells
+                for key, ts, cells in _encoded_rows(batch, value_fields):
+                    if not scvfs or _passes(cells):
+                        yield key, ts, cells
 
     def scan_versions(self, table: str, start: bytes | None, stop: bytes | None,
                       max_versions: int):
@@ -284,27 +299,8 @@ class _TableService:
         by_key: dict = {}
         for part in rdr.partitions():
             for batch in rdr.read(part):
-                keys = batch.column(ROWKEY_COL).to_pylist()
-                tss = batch.column(TS_COL).to_pylist()
-                cols = {
-                    f.col_name: batch.column(f.col_name).to_pylist()
-                    for f in value_fields
-                    if f.col_name in batch.schema.names
-                }
-                for i, key in enumerate(keys):
-                    versions = by_key.setdefault(bytes(key), [])
-                    cells = {}
-                    for f in value_fields:
-                        v = cols.get(f.col_name, [None] * len(keys))[i]
-                        if v is None:
-                            continue
-                        enc = (
-                            bytes(v)
-                            if f.avro_schema is not None
-                            else get_coder(f.coder).to_bytes(v, f.dt)
-                        )
-                        cells[f"{f.cf}:{f.col}".encode()] = enc
-                    versions.append((int(tss[i]), cells))
+                for key, ts, cells in _encoded_rows(batch, value_fields):
+                    by_key.setdefault(key, []).append((ts, cells))
         for key in sorted(by_key):
             cell_list = []
             per_col: dict = {}
@@ -335,39 +331,20 @@ class _TableService:
         rows included with a del flag) — the WAL-tailing feed a
         streaming consumer replays; offsets are region-entry counts,
         append-only hence monotonic."""
-        import os
-
         from shc_spark.sources.shc_source import DEL_COL
 
-        path = os.path.join(self.root, table)
-        with open(os.path.join(path, "_catalog.json")) as fh:
-            cat_json = fh.read()
+        _, cat_json, regions = self._state(table)
         cat = parse_catalog(cat_json)
-        regs = {r["id"]: r for r in _load_regions(path)}
-        reg = regs[gen_id]
+        reg = {r["id"]: r for r in regions}[gen_id]
         rdr = ShcReader(None, {"catalog": cat_json, "root": self.root,
                                "includeDeletes": "true"})
         want = to_arrow_schema(internal_schema(cat, include_deletes=True))
         value_fields = [f for f in cat.fields.values() if not f.is_rowkey]
         ranges = ((None, True, None, True),)
         for batch in rdr._scan_file(reg["path"], ranges, want):
-            keys = batch.column(ROWKEY_COL).to_pylist()
-            tss = batch.column(TS_COL).to_pylist()
             dels = batch.column(DEL_COL).to_pylist()
-            cols = {
-                f.col_name: batch.column(f.col_name).to_pylist()
-                for f in value_fields
-                if f.col_name in batch.schema.names
-            }
-            for i, key in enumerate(keys):
-                cells = {}
-                for f in value_fields:
-                    v = cols.get(f.col_name, [None] * len(keys))[i]
-                    if v is None:
-                        continue
-                    enc = bytes(v) if f.avro_schema is not None else get_coder(f.coder).to_bytes(v, f.dt)
-                    cells[f"{f.cf}:{f.col}".encode()] = enc
-                yield bytes(key), int(tss[i]), cells, bool(dels[i] == 1)
+            for (key, ts, cells), d in zip(_encoded_rows(batch, value_fields), dels):
+                yield key, ts, cells, bool(d == 1)
 
     # -- write path (Put batching -> one generation per flush) --------
 
@@ -404,14 +381,12 @@ class _TableService:
         import os
 
         from shc_spark.sources.shc_source import (
-            _REGION_CACHE,
             _RegionFile,
+            _replace_file,
             _store_catalog,
         )
 
-        path = os.path.join(self.root, table)
-        with open(os.path.join(path, "_catalog.json")) as fh:
-            cat_json = fh.read()
+        path, cat_json, regions = self._state(table)
         cat = parse_catalog(cat_json)
         if not rows:
             return {"rows": 0}
@@ -456,13 +431,9 @@ class _TableService:
         rf = _RegionFile(gen_dir)
         rf.add(t)
         info = rf.close()
-        regions = _load_regions(path)
         info["id"] = len(regions)
         regions.append(info)
-        meta = os.path.join(path, "_regions.json")
-        with open(meta, "w") as fh:
-            json.dump(regions, fh)
-        _REGION_CACHE.pop(meta, None)
+        _replace_file(path, "_regions.json", json.dumps(regions))
         _store_catalog(path, cat_json, overwrite=False)
         return {"rows": len(rows)}
 
@@ -471,11 +442,7 @@ class _TableService:
     # exactly the atomicity a region server provides per row.
 
     def _cell_field(self, table: str, column: bytes):
-        import os
-
-        path = os.path.join(self.root, table)
-        with open(os.path.join(path, "_catalog.json")) as fh:
-            cat = parse_catalog(fh.read())
+        cat = parse_catalog(self._state(table)[1])
         for f in cat.fields.values():
             if not f.is_rowkey and f"{f.cf}:{f.col}".encode() == column:
                 return f

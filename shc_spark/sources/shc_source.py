@@ -27,10 +27,14 @@ Physical layout of a table at ``<root>/<namespace>.<name>/``:
 
 Each parquet file carries the catalog's typed columns PLUS
 ``__rowkey`` (binary, encoded composite key) and ``__ts`` (long,
-cell-version timestamp). Version semantics (merge-to-latest,
-time-travel, explode) are applied ABOVE the source with DataFrame
-aggregations (see api.read_table) so Catalyst can push rowkey filters
-through them down to this scan.
+cell-version timestamp). ``api.read_table`` applies version
+semantics in one pipeline for every catalog: a plain merge-to-latest
+read asks this source for its in-scan LSM merge (``merge=latest``);
+time-travel, version limits, version maps and TTL run as DataFrame
+steps above the scan, so Catalyst still pushes rowkey filters down to
+it. ``table_state`` gives callers one snapshot of a table's metadata
+(stored catalog + region list); ``_replace_file`` is the one writer of
+the metadata files, atomic by rename.
 """
 
 from __future__ import annotations
@@ -208,6 +212,53 @@ def _load_regions(path: str) -> list[dict]:
     while len(_REGION_CACHE) > _REGION_CACHE_MAX:
         _REGION_CACHE.popitem(last=False)
     return [dict(r) for r in regions]
+
+
+def table_state(path: str) -> tuple:
+    """One metadata snapshot of the table at ``path``: (stored writer
+    catalog JSON or None, region list — [] before the first commit).
+    The region list comes through the mtime-checked ``_REGION_CACHE``."""
+    try:
+        with open(os.path.join(path, "_catalog.json")) as fh:
+            stored = fh.read()
+    except FileNotFoundError:
+        stored = None
+    try:
+        regions = _load_regions(path)
+    except FileNotFoundError:
+        regions = []
+    return stored, regions
+
+
+def merge_is_noop(regions: list) -> bool:
+    """True when every region file has unique keys (writer-recorded)
+    and region key ranges are pairwise disjoint — then one row per key
+    exists and merge-to-latest is the identity."""
+    if not regions or not all(r.get("unique") for r in regions):
+        return False
+    spans = sorted((r["start"] or "", r["end"] or "") for r in regions)
+    # hex strings compare like the underlying bytes
+    return all(s2 > e1 for (_, e1), (s2, _) in zip(spans, spans[1:]))
+
+
+def _replace_file(path: str, name: str, text: str) -> None:
+    """Atomically replace ``<path>/<name>`` with ``text``: write a temp
+    file in the same directory, then ``os.replace`` it into place, so a
+    crash leaves the old file or the new one, never a torn one. Drops
+    the metadata cache entry, since mtime+size can miss a same-second
+    same-size rewrite. No lock: concurrent committers can still lose an
+    update."""
+    dest = os.path.join(path, name)
+    tmp = os.path.join(path, f"{name}.{uuid.uuid4().hex[:12]}.tmp")
+    try:
+        with open(tmp, "w") as fh:
+            fh.write(text)
+        os.replace(tmp, dest)
+    except BaseException:
+        if os.path.exists(tmp):
+            os.remove(tmp)
+        raise
+    _REGION_CACHE.pop(dest, None)
 
 
 def _dim_to_key_ranges(hrf: HRF, fixed_first_width: int | None, single_dim: bool) -> HRF:
@@ -925,8 +976,7 @@ def _store_catalog(path: str, cat_json: str, overwrite: bool) -> None:
             if k not in ("table", "rowkey", "columns") and k not in stored:
                 stored[k] = v  # e.g. avro schema refs
         cat_json = json.dumps(stored)
-    with open(stored_p, "w") as fh:
-        fh.write(cat_json)
+    _replace_file(path, "_catalog.json", cat_json)
 
 
 class ShcWriter(DataSourceArrowWriter):
@@ -983,9 +1033,7 @@ class ShcWriter(DataSourceArrowWriter):
         return ShcCommit([i for i in infos if i])
 
     def commit(self, messages):
-        regions = []
-        if not self.overwrite and os.path.exists(os.path.join(self.path, "_regions.json")):
-            regions = _load_regions(self.path)
+        regions = [] if self.overwrite else table_state(self.path)[1]
         new = []
         for m in messages:
             if m and m.info:
@@ -994,13 +1042,7 @@ class ShcWriter(DataSourceArrowWriter):
         for i, info in enumerate(sorted(new, key=lambda x: x["start"] or "")):
             info["id"] = base + i
             regions.append(info)
-        meta = os.path.join(self.path, "_regions.json")
-        with open(meta, "w") as fh:
-            json.dump(regions, fh)
-        # drop the metadata cache entry explicitly — mtime+size usually
-        # invalidates it, but same-second same-size rewrites must not
-        # serve the pre-commit region list in this process
-        _REGION_CACHE.pop(meta, None)
+        _replace_file(self.path, "_regions.json", json.dumps(regions))
         _store_catalog(self.path, self.options["catalog"], self.overwrite)
         if self.overwrite:
             # vacuum: prior generations are unreachable after an
@@ -1032,10 +1074,11 @@ class ShcStreamWriter(DataSourceStreamArrowWriter):
     Exactly-once via manifest commit (the Delta/Iceberg pattern applied
     to this backend's `_regions.json`): tasks stage sorted region files
     under a per-task ``gen=stream-*`` dir and return their stats;
-    ``commit(messages, batchId)`` first REMOVES any manifest entries
-    (and files) already recorded for the same batchId — a restarted
-    micro-batch replaces its own output instead of duplicating it —
-    then appends the new entries tagged ``batch=batchId``. Staged files
+    ``commit(messages, batchId)`` drops any manifest entries already
+    recorded for the same batchId — a restarted micro-batch replaces
+    its own output instead of duplicating it — appends the new entries
+    tagged ``batch=batchId``, replaces the manifest, and only then
+    deletes the dropped entries' files. Staged files
     of an attempt that never commits are invisible to readers (the
     manifest drives partition planning) and are deleted by ``abort``.
 
@@ -1091,17 +1134,14 @@ class ShcStreamWriter(DataSourceStreamArrowWriter):
 
     def commit(self, messages, batchId: int) -> None:
         os.makedirs(self.path, exist_ok=True)
-        meta = os.path.join(self.path, "_regions.json")
-        regions = _load_regions(self.path) if os.path.exists(meta) else []
+        regions = table_state(self.path)[1]
 
         def _stale(r):
             # only entries of THIS query's txn are replaceable; legacy
             # entries (no txn tag) or another query's batches stay
             return r.get("batch") == batchId and r.get("txn") == self.txn
 
-        for r in regions:
-            if _stale(r) and os.path.exists(r["path"]):
-                os.remove(r["path"])
+        stale = [r for r in regions if _stale(r)]
         regions = [r for r in regions if not _stale(r)]
         for info in sorted(self._new_infos(messages), key=lambda x: x["start"] or ""):
             info["batch"] = batchId
@@ -1109,10 +1149,12 @@ class ShcStreamWriter(DataSourceStreamArrowWriter):
             regions.append(info)
         for i, r in enumerate(regions):
             r["id"] = i
-        with open(meta, "w") as fh:
-            json.dump(regions, fh)
-        _REGION_CACHE.pop(meta, None)
+        _replace_file(self.path, "_regions.json", json.dumps(regions))
         _store_catalog(self.path, self.options["catalog"], overwrite=False)
+        # the replaced attempt's files go only once no manifest lists them
+        for r in stale:
+            if os.path.exists(r["path"]):
+                os.remove(r["path"])
 
     def abort(self, messages, batchId: int) -> None:
         for info in self._new_infos(messages):

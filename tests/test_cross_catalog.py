@@ -107,8 +107,9 @@ def test_dynamic_family_capture(spark, wide_table):
 def test_restrictive_column_captures_nothing(spark, wide_table):
     got = read_table(spark, DYN, root=ROOT, restrictive="column").collect()
     assert all(r["cfa_map"] == {} for r in got)
-    with pytest.raises(ValueError):
-        read_table(spark, DYN, root=ROOT, restrictive="bogus")
+    for cat in (DYN, WIDE):  # validated for the writer's own catalog too
+        with pytest.raises(ValueError, match="restrictive"):
+            read_table(spark, cat, root=ROOT, restrictive="bogus")
 
 
 def test_dynamic_skips_explicitly_declared(spark, wide_table):
@@ -173,6 +174,38 @@ def test_pushdown_through_cross_catalog(spark, wide_table):
     )
     rows = read_table(spark, sub, root=ROOT).filter(F.col("ck").between(5, 9)).collect()
     assert sorted(r["ck"] for r in rows) == [5, 6, 7, 8, 9]
+
+
+def test_key_ranges_prune_cross_catalog(spark):
+    """``key_ranges`` reaches the scan for every catalog: a subset
+    catalog over a bulk-loaded 4-region table plans fewer scan
+    partitions with a range than without."""
+    import shutil
+
+    root = ROOT + "_kr"
+    shutil.rmtree(root, ignore_errors=True)
+    df = spark.createDataFrame([(i, f"n{i}", i) for i in range(40)], "k long, name string, nk int")
+    wcat = _cat(
+        "kr",
+        {
+            "k": {"cf": "rowkey", "col": "key", "type": "bigint"},
+            "name": {"cf": "cfa", "col": "nm", "type": "string"},
+            "nk": {"cf": "cfb", "col": "nk", "type": "int"},
+        },
+    )
+    write_table(df, wcat, root=root, num_regions=4, mode="overwrite", timestamp=1000)
+    sub = _cat(
+        "kr",
+        {
+            "ck": {"cf": "rowkey", "col": "key", "type": "bigint"},
+            "nm": {"cf": "cfa", "col": "nm", "type": "string"},
+        },
+    )
+    full = read_table(spark, sub, root=root)
+    ranged = read_table(spark, sub, root=root, key_ranges=[(0, 9)])
+    assert ranged.rdd.getNumPartitions() < full.rdd.getNumPartitions()
+    got = ranged.filter(F.col("ck") <= 9).collect()
+    assert sorted((r["ck"], r["nm"]) for r in got) == [(i, f"n{i}") for i in range(10)]
 
 
 def test_reader_batch_size_equivalent(spark, wide_table):
@@ -261,6 +294,22 @@ def test_appended_table_merge_shuffle_free(spark):
     # pushdown composes with merge partitions
     got = read_table(spark, cat, root=root).filter(F.col("k").between(10, 20))
     assert sorted(r["k"] for r in got.collect()) == list(range(10, 21))
+
+    # another catalog (renamed subset) over flat cells takes the same
+    # in-source merge as the writer's catalog
+    sub = _cat(
+        "lsm",
+        {
+            "key": {"cf": "rowkey", "col": "key", "type": "bigint"},
+            "alpha": {"cf": "cfa", "col": "a", "type": "string"},
+        },
+    )
+    fast = read_table(spark, sub, root=root)
+    assert "Exchange" not in fast._jdf.queryExecution().executedPlan().toString()
+    slow = read_table(spark, sub, root=root, min_stamp=0)
+    a = sorted(map(tuple, fast.collect()))
+    assert a == sorted(map(tuple, slow.collect())) and len(a) == 100
+    assert dict(a)[3] == "a3:2"
 
 
 def test_append_subset_catalog_preserves_stored(spark):

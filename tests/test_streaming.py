@@ -200,6 +200,92 @@ def test_stream_sink_datasource_roundtrip(spark, tmp_path):
     assert read_table(spark, cat, root=root).count() == n_expected
 
 
+def test_manifest_commit_survives_torn_write(tmp_path, monkeypatch):
+    """A manifest write that fails part-way leaves the table on its old
+    manifest: the batch commit and a replayed stream batch (whose
+    commit replaces the batch's earlier files) both keep every listed
+    file on disk and readable. In-process, no Spark session."""
+    import os
+
+    import pyarrow as pa
+    import pytest
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from shc_spark.catalog import parse_catalog
+    from shc_spark.sources import shc_source as src
+
+    cat = json.dumps(
+        {
+            "table": {"namespace": "s", "name": "torn", "tableCoder": "OrderedType", "version": "2.0"},
+            "rowkey": "key",
+            "columns": {
+                "k": {"cf": "rowkey", "col": "key", "type": "bigint"},
+                "v": {"cf": "cf", "col": "v", "type": "string"},
+            },
+        }
+    )
+    schema = to_arrow_schema(src.internal_schema(parse_catalog(cat)))
+
+    def batch(lo, hi):
+        ks = list(range(lo, hi))
+        return pa.RecordBatch.from_arrays(
+            [pa.array(ks, pa.int64()), pa.array([f"v{k}" for k in ks]),
+             pa.array([k.to_bytes(8, "big") for k in ks], pa.binary()),
+             pa.array([1000] * len(ks), pa.int64())],
+            schema=schema,
+        )
+
+    class TornFile:
+        def __init__(self, fh):
+            self.fh = fh
+
+        def write(self, text):
+            self.fh.write(text[: len(text) // 2])
+            raise OSError("injected: disk full mid-write")
+
+        def __enter__(self):
+            return self
+
+        def __exit__(self, *exc):
+            self.fh.close()
+
+    def torn_open(file, mode="r", *args, **kwargs):
+        fh = open(file, mode, *args, **kwargs)
+        if "w" in mode and "_regions" in os.path.basename(str(file)):
+            return TornFile(fh)
+        return fh
+
+    def committed(path):
+        src._REGION_CACHE.pop(os.path.join(path, "_regions.json"), None)
+        return src._load_regions(path)
+
+    cases = (
+        ("batch", lambda p: src.ShcWriter(None, {"catalog": cat, "path": p}, False),
+         lambda w, msg: w.commit([msg])),
+        ("stream", lambda p: src.ShcStreamWriter(None, {"catalog": cat, "path": p, "txnid": "t"}, False),
+         lambda w, msg: w.commit([msg], 0)),
+    )
+    for name, make, commit in cases:
+        path = str(tmp_path / name)
+        w = make(path)
+        commit(w, w.write(iter([batch(0, 10)])))
+        before = committed(path)
+        # a second generation (batch) / a replay of batch 0 (stream)
+        msg = make(path).write(iter([batch(5, 15)]))
+        with monkeypatch.context() as m:
+            m.setattr(src, "open", torn_open, raising=False)
+            with pytest.raises(OSError, match="injected"):
+                commit(w, msg)
+        after = committed(path)
+        assert after == before, name
+        assert all(os.path.exists(r["path"]) for r in after), name
+        assert not [n for n in os.listdir(path) if n.endswith(".tmp")], name
+        # the same commit without the fault goes through
+        commit(w, msg)
+        assert len(committed(path)) == (2 if name == "batch" else 1)
+        assert all(os.path.exists(r["path"]) for r in committed(path)), name
+
+
 def test_stream_sink_fresh_query_never_clobbers(spark, tmp_path):
     """A NEW streaming query into the same table (fresh/temp checkpoint
     ⇒ batchIds restart at 0) must NOT replace the previous query's
