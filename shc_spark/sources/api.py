@@ -33,6 +33,7 @@ import time
 import uuid
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -44,6 +45,8 @@ from shc_spark.sources.shc_source import (
     ROWKEY_COL,
     TS_COL,
     ShcDataSource,
+    ShcReader,
+    internal_schema,
     merge_is_noop,
     table_path,
     table_state,
@@ -389,16 +392,12 @@ def write_table(
         # appends may narrow the catalog, but the SALT is part of the
         # physical key encoding: a mismatched append would interleave
         # keys salted two different ways into one table
-        stored = table_state(path)[0]
-        if stored is not None:
-            stored_salt = int(
-                json.loads(stored).get("table", {}).get("saltBuckets", 0) or 0
+        stored = table_state(path).catalog
+        if stored is not None and stored.salt_buckets != cat.salt_buckets:
+            raise ValueError(
+                f"append saltBuckets={cat.salt_buckets} does not match "
+                f"the table's saltBuckets={stored.salt_buckets}"
             )
-            if stored_salt != cat.salt_buckets:
-                raise ValueError(
-                    f"append saltBuckets={cat.salt_buckets} does not match "
-                    f"the table's saltBuckets={stored_salt}"
-                )
 
     register(df.sparkSession)
     encode, key_names = _rowkey_encoder(cat)
@@ -716,10 +715,39 @@ def read_table(
     whose regions prove one version per key skips the merge; any other
     merge is a per-key Spark aggregation.
     """
-    register(spark)
-    rcat = parse_catalog(catalog)
-    stored, regions = table_state(table_path(root, rcat))
-    wcat = parse_catalog(stored) if stored is not None else rcat
+    return _read_table(
+        spark, catalog, parse_catalog(catalog), None, root=root, timestamp=timestamp,
+        min_stamp=min_stamp, max_stamp=max_stamp, max_versions=max_versions,
+        merge_to_latest=merge_to_latest, merge_dynamic_maps=merge_dynamic_maps,
+        keep_internal=keep_internal, restrictive=restrictive,
+        reader_options=reader_options, ttl_now_ms=ttl_now_ms, key_ranges=key_ranges,
+    )
+
+
+def _read_table(
+    spark: SparkSession,
+    catalog: str,
+    rcat: Catalog,
+    get_keys: list | None,
+    root: str = DEFAULT_ROOT,
+    timestamp: int | None = None,
+    min_stamp: int | None = None,
+    max_stamp: int | None = None,
+    max_versions: int | None = None,
+    merge_to_latest: bool = True,
+    merge_dynamic_maps: bool = False,
+    keep_internal: bool = False,
+    restrictive: str = "column",
+    reader_options: dict | None = None,
+    ttl_now_ms: int | None = None,
+    key_ranges: list | None = None,
+) -> DataFrame:
+    """``read_table`` on the parsed read catalog ``rcat``. With
+    ``get_keys`` None the scan is a Spark read of the shc data source;
+    a list of leading writer-key values reads just their point
+    partitions in the driver instead (``_multi_get``)."""
+    stored, wcat, regions = table_state(table_path(root, rcat))
+    wcat = wcat or rcat
     other = stored is not None and not _same_catalog(stored, catalog)
     # TTL is a property of the PHYSICAL table (HBase sets it on the
     # column family descriptor, not on the reader): when a stored
@@ -776,20 +804,19 @@ def read_table(
     scan_cat["columns"] = {
         k: v for k, v in scan_cat["columns"].items() if k in wkeys or k in needed
     }
-    reader = (
-        spark.read.format("shc")
-        .option("catalog", json.dumps(scan_cat))
-        .option("root", root)
-    )
+    opts = {"catalog": json.dumps(scan_cat), "root": root}
     if in_source:
-        reader = reader.option("merge", "latest")
+        opts["merge"] = "latest"
     if mask_dels:
-        reader = reader.option("includeDeletes", "true")
+        opts["includeDeletes"] = "true"
     if key_ranges:
-        reader = reader.option("keyranges", json.dumps([[lo, hi] for lo, hi in key_ranges]))
-    for k, v in (reader_options or {}).items():
-        reader = reader.option(k, v)
-    df = reader.load()
+        opts["keyranges"] = json.dumps([[lo, hi] for lo, hi in key_ranges])
+    opts.update(reader_options or {})
+    if get_keys is None:
+        register(spark)
+        df = spark.read.format("shc").options(**opts).load()
+    else:
+        df = _multi_get(spark, opts, wkeys[0], get_keys)
 
     if mask_dels:
         # a tombstone at ts T masks every version of its row with
@@ -967,13 +994,13 @@ def scan_aggregate(
 
     register(spark)
     cat = parse_catalog(catalog)
-    stored, regions = table_state(table_path(root, cat))
+    stored, wcat, regions = table_state(table_path(root, cat))
     if stored is not None and not _same_catalog(stored, catalog):
         raise ValueError(
             "scan_aggregate requires the stored catalog; cross-catalog "
             "aggregate scans are not supported"
         )
-    if parse_catalog(stored).ttl if stored is not None else cat.ttl:
+    if (wcat or cat).ttl:
         raise ValueError(
             "scan_aggregate does not support TTL tables (expiry must "
             "null cells before aggregation); use read_table().groupBy()"
@@ -1035,6 +1062,26 @@ def scan_aggregate(
     return out.select(*group_by, *requested)
 
 
+def _multi_get(spark: SparkSession, opts: dict, key: str, keys: list) -> DataFrame:
+    """Client-side multi-Get: the shc reader, built from the scan
+    options ``opts``, plans the point partitions of ``keys`` (values of
+    the leading writer key ``key``) and reads them here in the driver —
+    no Spark job, no Python planner or worker round trip. The rows
+    become a local relation with the scan's schema."""
+    from pyspark.sql.datasource import In
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.readwriter import to_str
+
+    # as Spark hands options to a data source: lowercased keys, strings
+    reader = ShcReader(None, {k.lower(): to_str(v) for k, v in opts.items()})
+    list(reader.pushFilters([In((key,), tuple(keys))]))
+    if keys and any(r.start is None and r.end is None for r in reader.hrf.ranges):
+        raise ValueError(f"bulk_get: not every key encodes as a value of rowkey {key!r}")
+    schema = internal_schema(reader.cat, reader.include_deletes)
+    batches = [b for p in reader.partitions() for b in reader.read(p)]
+    return spark.createDataFrame(pa.Table.from_batches(batches, to_arrow_schema(schema)), schema)
+
+
 def bulk_get(
     spark: SparkSession,
     catalog: str,
@@ -1042,15 +1089,32 @@ def bulk_get(
     root: str = DEFAULT_ROOT,
     **read_opts,
 ) -> DataFrame:
-    """BulkGet (S11, HBaseTableScan.scala:424-447): point lookups for a
-    list of first-dimension key values. The IN-list pushes down to
-    point ranges, so only the region files (and row groups) containing
-    those keys are opened — the multi-Get analog, without a batch-size
-    knob because partitions parallelize naturally."""
+    """BulkGet (S11, HBaseTableScan.scala:424-447): the rows of a list
+    of leading-dimension key values, as a client-side multi-Get. The
+    keys become point ranges, and only the region files and row groups
+    holding them are read — in the driver, with no Spark job and no
+    Python worker. The rows form a local relation, and ``read_table``'s
+    pipeline (``read_opts``: time range, versions, TTL, other catalogs)
+    runs on it. The reference sends its Gets in batches of
+    ``bulkGetSize``; here the key list already lives in the driver, so
+    the rows read are bounded by the keys times the generations that
+    overlap them.
+
+    The get is a snapshot at call time, like an HBase ``Result``: a
+    write after the call is not visible in the returned DataFrame. A
+    leading dimension with no byte coder (an Avro-coded key) raises
+    ValueError; use ``read_table(...).filter(F.col(key).isin(keys))``
+    there."""
     cat = parse_catalog(catalog)
-    first = cat.rowkey_fields()[0].col_name
-    df = read_table(spark, catalog, root=root, **read_opts)
-    return df.filter(F.col(first).isin(list(keys)))
+    first = cat.rowkey_fields()[0]
+    if first.avro_schema is not None:
+        raise ValueError(
+            f"bulk_get: leading rowkey {first.col_name!r} is Avro-coded, so keys have no "
+            "byte encoding to look up; use read_table(...).filter(F.col(key).isin(keys))"
+        )
+    keys = [k for k in (_coerce(v, first.dt) for v in keys) if k is not None]
+    df = _read_table(spark, catalog, cat, keys, root=root, **read_opts)
+    return df.filter(F.col(first.col_name).isin(keys))
 
 
 def write_stream_table(
@@ -1441,8 +1505,8 @@ def count_rows(
     Appended/deleted tables fall back to the distributed merge-read
     count (still one job, no collect)."""
     cat = parse_catalog(catalog)
-    stored, regions = table_state(table_path(root, cat))
-    has_ttl = bool(parse_catalog(stored).ttl if stored is not None else cat.ttl)
+    _, wcat, regions = table_state(table_path(root, cat))
+    has_ttl = bool((wcat or cat).ttl)
     if merge_is_noop(regions) and not has_ttl:
         # A single-generation table can still carry tombstones (a CDC
         # feed of inserts + deletes over disjoint unique keys passes

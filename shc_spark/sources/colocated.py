@@ -270,8 +270,7 @@ def colocated_join(
     # cells (same explicit-error stance as cross-catalog TTL reads).
     for c, r in ((catalog_a, root), (catalog_b, root_b or root)):
         cat = parse_catalog(c)
-        stored = table_state(table_path(r, cat))[0]
-        if parse_catalog(stored).ttl if stored is not None else cat.ttl:
+        if (table_state(table_path(r, cat)).catalog or cat).ttl:
             raise ValueError(
                 "colocated_join does not support TTL tables; read them "
                 "through read_table (which applies expiry) and join"

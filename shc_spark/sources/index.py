@@ -149,9 +149,6 @@ class SecondaryIndex:
         # collect is CAPPED — limit(n+1) proves whether the set fits
         # without ever pulling more than n+1 keys to the driver.
         keys = [r[0] for r in keys_df.limit(self.max_fetch_keys + 1).collect()]
-        if not keys:
-            sch = parse_catalog(self.base_catalog).spark_schema()
-            return self.spark.createDataFrame([], sch)
         if len(keys) > self.max_fetch_keys:
             # Wide range: distributed left-semi join of the base scan
             # against the index keys — AQE broadcasts when the key set

@@ -137,20 +137,20 @@ class _TableService:
         return ts
 
     def _state(self, table: str) -> tuple:
-        """(table dir, stored catalog JSON, region list) of one table;
-        a table without a stored catalog does not exist."""
+        """(table dir, stored catalog JSON, parsed stored catalog, region
+        list) of one table; a table without a stored catalog does not
+        exist."""
         import os
 
         path = os.path.join(self.root, table)
-        cat_json, regions = table_state(path)
+        cat_json, cat, regions = table_state(path)
         if cat_json is None:
             raise FileNotFoundError(os.path.join(path, "_catalog.json"))
-        return path, cat_json, regions
+        return path, cat_json, cat, regions
 
     def _reader(self, table: str, ranges: list[ScanRange] | None,
                 raw: bool = False) -> tuple:
-        _, cat_json, regions = self._state(table)
-        cat = parse_catalog(cat_json)
+        _, cat_json, cat, regions = self._state(table)
         opts = {"catalog": cat_json, "root": self.root}
         if not raw and not merge_is_noop(regions):
             opts["merge"] = "latest"
@@ -333,8 +333,7 @@ class _TableService:
         append-only hence monotonic."""
         from shc_spark.sources.shc_source import DEL_COL
 
-        _, cat_json, regions = self._state(table)
-        cat = parse_catalog(cat_json)
+        _, cat_json, cat, regions = self._state(table)
         reg = {r["id"]: r for r in regions}[gen_id]
         rdr = ShcReader(None, {"catalog": cat_json, "root": self.root,
                                "includeDeletes": "true"})
@@ -386,8 +385,7 @@ class _TableService:
             _store_catalog,
         )
 
-        path, cat_json, regions = self._state(table)
-        cat = parse_catalog(cat_json)
+        path, cat_json, cat, regions = self._state(table)
         if not rows:
             return {"rows": 0}
         rows = [(r[0], r[1], r[2], bool(r[3]) if len(r) > 3 else False) for r in rows]
@@ -442,7 +440,7 @@ class _TableService:
     # exactly the atomicity a region server provides per row.
 
     def _cell_field(self, table: str, column: bytes):
-        cat = parse_catalog(self._state(table)[1])
+        cat = self._state(table)[2]
         for f in cat.fields.values():
             if not f.is_rowkey and f"{f.cf}:{f.col}".encode() == column:
                 return f

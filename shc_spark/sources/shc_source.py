@@ -180,54 +180,73 @@ def aggregate_partial_schema(cat: Catalog, spec: dict) -> StructType:
 
 
 from collections import OrderedDict
+from typing import NamedTuple
 
 _REGION_CACHE: OrderedDict = OrderedDict()
 # Housekeeping analog of the reference's connection cache (S20,
 # HBaseConnectionCache.scala:35-154): the reference refcounts
 # connections and evicts after 10 idle minutes via a housekeeping
-# thread. Region metadata is a read-only snapshot, not a live socket,
-# so no refcounts are needed; boundedness is the surviving contract —
-# LRU capped so scanning thousands of distinct tables from one
-# long-lived process cannot grow the cache without bound.
+# thread. Table metadata (region list, parsed stored catalog) is a
+# read-only snapshot, not a live socket, so no refcounts are needed;
+# boundedness is the surviving contract — LRU capped so scanning
+# thousands of distinct tables from one long-lived process cannot grow
+# the cache without bound.
 _REGION_CACHE_MAX = 256
 
 
-def _load_regions(path: str) -> list[dict]:
-    """Region metadata with an mtime-validated, LRU-bounded cache —
-    the analog of the reference's connection/region-locator cache
-    (S20, HBaseConnectionCache): repeated queries against the same
-    table skip re-reading and re-parsing the metadata file; any write
-    bumps the file mtime and invalidates naturally."""
-    meta = os.path.join(path, "_regions.json")
+def _cached_meta(path: str, name: str, load):
+    """``load(text)`` of the metadata file ``<path>/<name>`` through an
+    mtime-validated, LRU-bounded cache — the analog of the reference's
+    connection/region-locator cache (S20, HBaseConnectionCache):
+    repeated queries against the same table skip re-reading and
+    re-parsing the file; any write bumps the file mtime and invalidates
+    naturally. Raises FileNotFoundError when the file is absent."""
+    meta = os.path.join(path, name)
     st = os.stat(meta)
     key = (st.st_mtime_ns, st.st_size)  # size guards coarse-mtime filesystems
     hit = _REGION_CACHE.get(meta)
     if hit is not None and hit[0] == key:
         _REGION_CACHE.move_to_end(meta)
-        return [dict(r) for r in hit[1]]  # callers mutate (commit)
+        return hit[1]
     with open(meta) as fh:
-        regions = json.load(fh)
-    _REGION_CACHE[meta] = (key, regions)
+        value = load(fh.read())
+    _REGION_CACHE[meta] = (key, value)
     _REGION_CACHE.move_to_end(meta)
     while len(_REGION_CACHE) > _REGION_CACHE_MAX:
         _REGION_CACHE.popitem(last=False)
-    return [dict(r) for r in regions]
+    return value
 
 
-def table_state(path: str) -> tuple:
-    """One metadata snapshot of the table at ``path``: (stored writer
-    catalog JSON or None, region list — [] before the first commit).
-    The region list comes through the mtime-checked ``_REGION_CACHE``."""
+def _load_regions(path: str) -> list[dict]:
+    """Region metadata of the table at ``path``, through the cache;
+    fresh dicts, since callers mutate them (commit)."""
+    return [dict(r) for r in _cached_meta(path, "_regions.json", json.loads)]
+
+
+class TableState(NamedTuple):
+    """One metadata snapshot of a table: the stored writer catalog as
+    JSON and parsed (both None before the first commit), and the region
+    list ([] before the first commit)."""
+
+    catalog_json: str | None
+    catalog: Catalog | None
+    regions: list
+
+
+def table_state(path: str) -> TableState:
+    """The table at ``path`` as one ``TableState``. The stored catalog
+    is parsed once per version of ``_catalog.json`` and the region list
+    read once per version of ``_regions.json``, both through the
+    mtime-checked ``_REGION_CACHE``."""
     try:
-        with open(os.path.join(path, "_catalog.json")) as fh:
-            stored = fh.read()
+        stored, cat = _cached_meta(path, "_catalog.json", lambda t: (t, parse_catalog(t)))
     except FileNotFoundError:
-        stored = None
+        stored = cat = None
     try:
         regions = _load_regions(path)
     except FileNotFoundError:
         regions = []
-    return stored, regions
+    return TableState(stored, cat, regions)
 
 
 def merge_is_noop(regions: list) -> bool:
@@ -245,9 +264,9 @@ def _replace_file(path: str, name: str, text: str) -> None:
     """Atomically replace ``<path>/<name>`` with ``text``: write a temp
     file in the same directory, then ``os.replace`` it into place, so a
     crash leaves the old file or the new one, never a torn one. Drops
-    the metadata cache entry, since mtime+size can miss a same-second
-    same-size rewrite. No lock: concurrent committers can still lose an
-    update."""
+    the file's metadata cache entry (region list or parsed catalog),
+    since mtime+size can miss a same-second same-size rewrite. No lock:
+    concurrent committers can still lose an update."""
     dest = os.path.join(path, name)
     tmp = os.path.join(path, f"{name}.{uuid.uuid4().hex[:12]}.tmp")
     try:
@@ -783,13 +802,14 @@ class ShcReader(DataSourceReader):
             agg = gb.aggregate(
                 [(f.name, "first") for f in want if f.name != ROWKEY_COL]
             )
-            t = pa.table(
-                {
-                    f.name: agg.column(
-                        f.name if f.name == ROWKEY_COL else f"{f.name}_first"
-                    )
+            # declared schema, nullability included: every partition of
+            # one read yields batches of one schema
+            t = pa.Table.from_arrays(
+                [
+                    agg.column(f.name if f.name == ROWKEY_COL else f"{f.name}_first")
                     for f in want
-                }
+                ],
+                schema=want,
             )
         for batch in t.to_batches(max_chunksize=self.batch_size):
             if len(batch):
@@ -1033,7 +1053,7 @@ class ShcWriter(DataSourceArrowWriter):
         return ShcCommit([i for i in infos if i])
 
     def commit(self, messages):
-        regions = [] if self.overwrite else table_state(self.path)[1]
+        regions = [] if self.overwrite else table_state(self.path).regions
         new = []
         for m in messages:
             if m and m.info:
@@ -1134,7 +1154,7 @@ class ShcStreamWriter(DataSourceStreamArrowWriter):
 
     def commit(self, messages, batchId: int) -> None:
         os.makedirs(self.path, exist_ok=True)
-        regions = table_state(self.path)[1]
+        regions = table_state(self.path).regions
 
         def _stale(r):
             # only entries of THIS query's txn are replaceable; legacy

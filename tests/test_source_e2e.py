@@ -298,6 +298,52 @@ def test_partition_pruning_effective(spark, basic_table, root):
     assert len(real) < len([p for p in all_parts if p.path])
 
 
+def test_merge_read_batches_have_the_declared_schema(tmp_path):
+    """Every batch of every merge-read partition has the declared Arrow
+    schema, nullability included, whether the partition passes one file
+    through or merges several with tombstones — so one read yields one
+    schema. Built and read without Spark."""
+    import pandas as pd
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from shc_spark.catalog import parse_catalog
+    from shc_spark.sources.api import encode_rowkey_batch
+    from shc_spark.sources.shc_source import (
+        DEL_COL, ROWKEY_COL, TS_COL, ShcReader, ShcWriter, internal_schema,
+    )
+
+    cat = _gens_catalog("nospark")
+    parsed = parse_catalog(cat)
+    opts = {"catalog": cat, "root": str(tmp_path)}
+
+    def generation(ts, spans, deleted=False, overwrite=False):
+        writer = ShcWriter(None, dict(opts), overwrite)
+        msgs = []
+        for lo, hi in spans:  # one region file per span
+            k = pd.Series(range(lo, hi), dtype="int64")
+            cols = {"k": k}
+            if deleted:
+                cols[DEL_COL] = pa.array([1] * len(k), pa.int8())
+            else:
+                cols.update(a=k.astype(float), s=[f"v{i}" for i in k])
+            cols[ROWKEY_COL] = encode_rowkey_batch(parsed, [k])
+            cols[TS_COL] = [ts] * len(k)
+            msgs.append(writer.write(iter([pa.RecordBatch.from_pydict(cols)])))
+        writer.commit(msgs)
+
+    generation(1000, [(0, 50), (50, 100)], overwrite=True)
+    generation(2000, [(40, 120)])
+    generation(3000, [(10, 20)], deleted=True)
+    reader = ShcReader(None, {**opts, "merge": "latest"})
+    parts = reader.partitions()
+    assert {p.dedup for p in parts} == {False, True}
+    want = to_arrow_schema(internal_schema(parsed))
+    batches = [b for p in parts for b in reader.read(p)]
+    assert sum(len(b) for b in batches) == 110
+    assert all(b.schema == want for b in batches)
+
+
 def test_key_in_pushdown_consumed_and_pruned(spark, basic_table, root):
     """A key ``In`` in the shape Spark passes (pyspark.sql.datasource.In,
     values in ``value``) is fully handled: pushFilters yields nothing
@@ -382,6 +428,146 @@ def test_bulk_get(spark, basic_table, root):
     got = bulk_get(spark, CAT_BASIC, ["row010", "row200", "rowNope"], root=root)
     rows = {r["col0"]: r["col4"] for r in got.collect()}
     assert rows == {"row010": 10, "row200": 200}
+
+
+def _assert_same_frame(got, want):
+    """Same schema and the same rows, in any order."""
+    assert got.schema == want.schema
+    assert sorted(map(tuple, got.collect()), key=repr) == sorted(
+        map(tuple, want.collect()), key=repr
+    )
+
+
+def _check_bulk_get(spark, cat, keys, root, **read_opts):
+    """bulk_get equals the filtered full read it replaces."""
+    from shc_spark.catalog import parse_catalog
+    from shc_spark.sources import bulk_get
+
+    first = parse_catalog(cat).rowkey_fields()[0].col_name
+    want = read_table(spark, cat, root=root, **read_opts).filter(F.col(first).isin(keys))
+    _assert_same_frame(bulk_get(spark, cat, keys, root=root, **read_opts), want)
+
+
+def _gens_catalog(name, **table):
+    return json.dumps(
+        {
+            "table": {"namespace": "bg", "name": name, "tableCoder": "OrderedType",
+                      "version": "2.0", **table},
+            "rowkey": "key",
+            "columns": {
+                "k": {"cf": "rowkey", "col": "key", "type": "bigint"},
+                "a": {"cf": "fa", "col": "a", "type": "double"},
+                "s": {"cf": "fb", "col": "s", "type": "string"},
+            },
+        }
+    )
+
+
+def _gen_rows(spark, lo, hi, tag):
+    return spark.createDataFrame(
+        [(i, float(i), f"{tag}{i}") for i in range(lo, hi)], "k long, a double, s string"
+    )
+
+
+def test_bulk_get_equals_filtered_read(spark, tmp_path):
+    """The driver-side multi-Get returns what a full read filtered on
+    the keys returns: across three overlapping generations, after a
+    delete, with time travel and version limits, through a subset
+    catalog, and for empty, all-absent and numpy keys."""
+    import numpy as np
+
+    from shc_spark.sources import bulk_get, delete_rows
+
+    root = str(tmp_path)
+    cat = _gens_catalog("gens")
+    write_table(_gen_rows(spark, 0, 200, "g0"), cat, root=root, num_regions=4,
+                mode="overwrite", timestamp=1000)
+    write_table(_gen_rows(spark, 150, 260, "g1"), cat, root=root, mode="append", timestamp=2000)
+    write_table(_gen_rows(spark, 0, 40, "g2"), cat, root=root, mode="append", timestamp=3000)
+    # in one, two and three generations, and absent
+    keys = [5, 39, 45, 160, 199, 255, 999]
+    _check_bulk_get(spark, cat, keys, root)
+    latest = bulk_get(spark, cat, keys, root=root)
+    _assert_same_frame(bulk_get(spark, cat, [np.int64(k) for k in keys], root=root), latest)
+    for no_rows in ([], [1000, 2000]):
+        got = bulk_get(spark, cat, no_rows, root=root)
+        assert got.schema == latest.schema and got.collect() == []
+    _check_bulk_get(spark, cat, keys, root, timestamp=2000)
+    _check_bulk_get(spark, cat, keys, root, max_versions=2)
+    subset = json.dumps(
+        {
+            "table": {"namespace": "bg", "name": "gens", "tableCoder": "OrderedType",
+                      "version": "2.0"},
+            "rowkey": "key",
+            "columns": {
+                "s2": {"cf": "fb", "col": "s", "type": "string"},
+                "k2": {"cf": "rowkey", "col": "key", "type": "bigint"},
+            },
+        }
+    )
+    _check_bulk_get(spark, subset, keys, root)
+    delete_rows(spark, cat, [5, 160], root=root, timestamp=4000)
+    _check_bulk_get(spark, cat, keys, root)
+    _check_bulk_get(spark, cat, keys, root, max_versions=2)
+
+
+def test_bulk_get_equals_filtered_read_ttl_salt_phoenix(spark, tmp_path):
+    """The same equality on a TTL table, a salted table and a Phoenix
+    composite key whose var-length first dim plans superset ranges."""
+    root = str(tmp_path)
+    ttl = _gens_catalog("ttl", ttl={"fa": 100})
+    write_table(_gen_rows(spark, 0, 50, "old"), ttl, root=root, num_regions=4,
+                mode="overwrite", timestamp=50_000)
+    write_table(_gen_rows(spark, 20, 30, "new"), ttl, root=root, mode="append",
+                timestamp=150_000)
+    _check_bulk_get(spark, ttl, [1, 25, 77], root, ttl_now_ms=200_000)
+
+    salted = _gens_catalog("salted", saltBuckets=4)
+    write_table(_gen_rows(spark, 0, 300, "s"), salted, root=root, num_regions=4,
+                mode="overwrite", timestamp=1000)
+    _check_bulk_get(spark, salted, [0, 17, 299, 5000], root)
+
+    phx = json.dumps(
+        {
+            "table": {"namespace": "bg", "name": "phx", "tableCoder": "PhoenixType",
+                      "version": "2.0"},
+            "rowkey": "key1:key2",
+            "columns": {
+                "name": {"cf": "rowkey", "col": "key1", "type": "string"},
+                "seq": {"cf": "rowkey", "col": "key2", "type": "int"},
+                "val": {"cf": "cf1", "col": "v", "type": "double"},
+            },
+        }
+    )
+    users = [(f"user{i}", j, float(i * 10 + j)) for i in range(40) for j in range(2)]
+    write_table(spark.createDataFrame(users, "name string, seq int, val double"), phx,
+                root=root, num_regions=4, mode="overwrite", timestamp=1000)
+    # 'user3' plans a range that also covers 'user30'..'user39'
+    _check_bulk_get(spark, phx, ["user3", "user30", "user", "nobody"], root)
+
+
+def test_bulk_get_reads_in_the_driver_as_a_snapshot(spark, tmp_path):
+    """A plain latest get starts no Spark job, collect included, and it
+    is a snapshot at call time: a later append is not in its rows."""
+    from shc_spark.sources import bulk_get
+
+    root = str(tmp_path)
+    cat = _gens_catalog("snap")
+    write_table(_gen_rows(spark, 0, 100, "g0"), cat, root=root, num_regions=4,
+                mode="overwrite", timestamp=1000)
+    sc = spark.sparkContext
+    sc.setJobGroup("bulk_get_driver_read", "bulk_get starts no job")
+    try:
+        got = bulk_get(spark, cat, [3, 15, 500], root=root)
+        rows = {r.k: r.s for r in got.collect()}
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert rows == {3: "g03", 15: "g015"}
+    assert list(sc.statusTracker().getJobIdsForGroup("bulk_get_driver_read")) == []
+
+    write_table(_gen_rows(spark, 15, 16, "g1"), cat, root=root, mode="append", timestamp=2000)
+    assert {r.k: r.s for r in got.collect()} == rows
+    assert bulk_get(spark, cat, [15], root=root).collect()[0].s == "g115"
 
 
 def test_phoenix_varlen_exclusive_start_not_narrowed(spark, root):
@@ -529,6 +715,12 @@ def test_avro_coded_rowkey(spark, tmp_path):
     # filters on the decoded struct evaluate above the scan
     got = out.filter(F.col("col0.favorite_number") >= 4).count()
     assert got == 2
+    # an Avro key has no byte encoding to look up: bulk_get refuses
+    # instead of reading the whole table into the driver
+    from shc_spark.sources import bulk_get
+
+    with pytest.raises(ValueError, match="Avro-coded"):
+        bulk_get(spark, cat, [("name002", 2, "color002")], root=root)
 
 
 def test_stream_source_tails_generations(spark, tmp_path):
@@ -1082,7 +1274,9 @@ def test_snapshot_export_import_roundtrip(spark, tmp_path):
 
 def test_composite_secondary_index(spark, tmp_path):
     """Composite index on (segment, nation): leading column prunes,
-    second column refines; both-column lookup matches the base scan."""
+    second column refines; both-column lookup matches the base scan. A
+    lookup that matches nothing has the schema of one that matches,
+    also with the base catalog declaring a value column before its key."""
     from shc_spark.sources import SecondaryIndex
 
     cat = json.dumps(
@@ -1090,8 +1284,8 @@ def test_composite_secondary_index(spark, tmp_path):
             "table": {"namespace": "x", "name": "cust2", "tableCoder": "OrderedType", "version": "2.0"},
             "rowkey": "key",
             "columns": {
-                "c_custkey": {"cf": "rowkey", "col": "key", "type": "bigint"},
                 "c_mktsegment": {"cf": "cf", "col": "s", "type": "string"},
+                "c_custkey": {"cf": "rowkey", "col": "key", "type": "bigint"},
                 "c_nationkey": {"cf": "cf", "col": "n", "type": "int"},
             },
         }
@@ -1107,7 +1301,8 @@ def test_composite_secondary_index(spark, tmp_path):
     seg, nk = df.filter(F.col("c_mktsegment") == "BUILDING").select(
         "c_mktsegment", "c_nationkey"
     ).first()
-    got = sorted(r["c_custkey"] for r in ix.lookup(seg, nk).collect())
+    hit = ix.lookup(seg, nk)
+    got = sorted(r["c_custkey"] for r in hit.collect())
     want = sorted(
         r["c_custkey"]
         for r in df.filter(
@@ -1115,6 +1310,8 @@ def test_composite_secondary_index(spark, tmp_path):
         ).collect()
     )
     assert got == want and got  # non-empty
+    miss = ix.lookup("NO SUCH SEGMENT", nk)
+    assert miss.schema == hit.schema and miss.count() == 0
     # leading-column-only lookup also works
     assert ix.lookup("BUILDING").count() == df.filter(
         F.col("c_mktsegment") == "BUILDING"
