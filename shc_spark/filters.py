@@ -268,11 +268,9 @@ def _translate(f, key_name: str, encode, points_only: bool = False) -> HRF:
         v = encode(f.value)
         return HRF([ScanRange(v, True, v, True)], True)
     if kind == "In":
-        pts = [encode(v) for v in f.value]
-        rs: list[ScanRange] = []
-        for p in pts:
-            rs = ranges_or(rs, [ScanRange(p, True, p, True)])
-        return HRF(rs, True)
+        # one union of every point: folding them in one at a time
+        # re-sorts the list per value, quadratic in the IN-list length
+        return HRF(_normalize([ScanRange(p, True, p, True) for p in map(encode, f.value)]), True)
     if points_only:
         return HRF.full()
     if kind == "GreaterThan":

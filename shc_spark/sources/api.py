@@ -34,6 +34,7 @@ import uuid
 
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -665,22 +666,14 @@ def _dyn_map(f, fams: list, grouped: bool):
 
 
 def read_table(
-    spark: SparkSession,
-    catalog: str,
-    root: str = DEFAULT_ROOT,
-    timestamp: int | None = None,
-    min_stamp: int | None = None,
-    max_stamp: int | None = None,
-    max_versions: int | None = None,
-    merge_to_latest: bool = True,
-    merge_dynamic_maps: bool = False,
-    keep_internal: bool = False,
-    restrictive: str = "column",
-    reader_options: dict | None = None,
-    ttl_now_ms: int | None = None,
-    key_ranges: list | None = None,
+    spark: SparkSession, catalog: str, root: str = DEFAULT_ROOT, **opts
 ) -> DataFrame:
     """Read an shc table back as a DataFrame with the catalog schema.
+    ``opts`` are the read options of ``_read_table``: ``timestamp``,
+    ``min_stamp`` / ``max_stamp``, ``max_versions``,
+    ``merge_to_latest`` (default True), ``merge_dynamic_maps``,
+    ``keep_internal``, ``restrictive`` (default "column"),
+    ``reader_options``, ``ttl_now_ms`` and ``key_ranges``.
 
     ``key_ranges``: optional ``[(lo, hi), ...]`` INCLUSIVE logical
     values of the LEADING rowkey dimension — explicit Scan ranges (the
@@ -715,13 +708,7 @@ def read_table(
     whose regions prove one version per key skips the merge; any other
     merge is a per-key Spark aggregation.
     """
-    return _read_table(
-        spark, catalog, parse_catalog(catalog), None, root=root, timestamp=timestamp,
-        min_stamp=min_stamp, max_stamp=max_stamp, max_versions=max_versions,
-        merge_to_latest=merge_to_latest, merge_dynamic_maps=merge_dynamic_maps,
-        keep_internal=keep_internal, restrictive=restrictive,
-        reader_options=reader_options, ttl_now_ms=ttl_now_ms, key_ranges=key_ranges,
-    )
+    return _read_table(spark, catalog, parse_catalog(catalog), None, root=root, **opts)
 
 
 def _read_table(
@@ -742,10 +729,13 @@ def _read_table(
     ttl_now_ms: int | None = None,
     key_ranges: list | None = None,
 ) -> DataFrame:
-    """``read_table`` on the parsed read catalog ``rcat``. With
-    ``get_keys`` None the scan is a Spark read of the shc data source;
-    a list of leading writer-key values reads just their point
-    partitions in the driver instead (``_multi_get``)."""
+    """``read_table`` on the parsed read catalog ``rcat``, with its
+    options and their defaults. With ``get_keys`` None the scan is a
+    Spark read of the shc data source. A list of leading-key values
+    reads just their rows: in the driver (``_multi_get``) when every
+    key is a value of the key type and their planned partitions hold
+    at most ``DRIVER_GET_MAX_ROWS`` rows, else as that Spark read
+    filtered on the keys."""
     stored, wcat, regions = table_state(table_path(root, rcat))
     wcat = wcat or rcat
     other = stored is not None and not _same_catalog(stored, catalog)
@@ -812,11 +802,19 @@ def _read_table(
     if key_ranges:
         opts["keyranges"] = json.dumps([[lo, hi] for lo, hi in key_ranges])
     opts.update(reader_options or {})
-    if get_keys is None:
+    df = None
+    if get_keys is not None:
+        values = _key_values(get_keys, wcat.fields[wkeys[0]].dt)
+        if values is not None:
+            df = _multi_get(spark, opts, wkeys[0], values)
+    if df is None:
         register(spark)
         df = spark.read.format("shc").options(**opts).load()
-    else:
-        df = _multi_get(spark, opts, wkeys[0], get_keys)
+        if get_keys is not None:
+            # the rowkey filter pushes down to point ranges; every step
+            # below is per key, so filtering first returns what
+            # filtering last would
+            df = df.filter(F.col(wkeys[0]).isin(get_keys))
 
     if mask_dels:
         # a tombstone at ts T masks every version of its row with
@@ -1062,24 +1060,62 @@ def scan_aggregate(
     return out.select(*group_by, *requested)
 
 
-def _multi_get(spark: SparkSession, opts: dict, key: str, keys: list) -> DataFrame:
+DRIVER_GET_MAX_ROWS = 100_000
+"""Most rows a ``bulk_get`` reads in the driver, as its planned
+partitions bound them before the read (``ShcReader.max_rows``). A get
+over it (a composite key whose leading values span wide row ranges,
+say) runs as a Spark scan instead."""
+
+
+def _multi_get(spark: SparkSession, opts: dict, key: str, keys: list) -> DataFrame | None:
     """Client-side multi-Get: the shc reader, built from the scan
     options ``opts``, plans the point partitions of ``keys`` (values of
     the leading writer key ``key``) and reads them here in the driver —
     no Spark job, no Python planner or worker round trip. The rows
-    become a local relation with the scan's schema."""
+    become a local relation with the scan's schema. Returns None, for
+    the caller to scan with Spark, when the planned partitions may hold
+    more than ``DRIVER_GET_MAX_ROWS`` rows."""
     from pyspark.sql.datasource import In
     from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.readwriter import to_str
 
+    keys = [k for k in keys if k is not None]
     # as Spark hands options to a data source: lowercased keys, strings
     reader = ShcReader(None, {k.lower(): to_str(v) for k, v in opts.items()})
     list(reader.pushFilters([In((key,), tuple(keys))]))
-    if keys and any(r.start is None and r.end is None for r in reader.hrf.ranges):
-        raise ValueError(f"bulk_get: not every key encodes as a value of rowkey {key!r}")
+    if any(r.start is None and r.end is None for r in reader.hrf.ranges):
+        # an Avro-coded key has no byte encoding: this would read the table
+        raise ValueError(
+            f"bulk_get: the keys of rowkey {key!r} have no byte encoding to look up; "
+            "use read_table(...).filter(F.col(key).isin(keys))"
+        )
     schema = internal_schema(reader.cat, reader.include_deletes)
-    batches = [b for p in reader.partitions() for b in reader.read(p)]
+    # ranges of a composite key's var-length leading dim are supersets
+    wanted = pa.array(keys, to_arrow_schema(schema).field(key).type)
+    parts = reader.partitions()
+    if reader.max_rows(parts) > DRIVER_GET_MAX_ROWS:
+        return None
+    batches = [b.filter(pc.is_in(b.column(key), value_set=wanted))
+               for p in parts for b in reader.read(p)]
+    # createDataFrame loses the rows after two empty chunks in a row
+    batches = [b for b in batches if len(b)]
     return spark.createDataFrame(pa.Table.from_batches(batches, to_arrow_schema(schema)), schema)
+
+
+def _key_values(keys: list, dt: T.DataType) -> list | None:
+    """``keys`` as Python values of the key type ``dt`` (numpy scalars
+    unwrapped), or None when a key is not such a value (1.5 or "5" for
+    a bigint key): what that key matches is up to Spark's casts."""
+    out = []
+    for v in keys:
+        try:
+            c = _coerce(v, dt)
+            if v is not None and not bool(c == v):
+                return None
+        except (TypeError, ValueError):
+            return None
+        out.append(c)
+    return out
 
 
 def bulk_get(
@@ -1096,25 +1132,17 @@ def bulk_get(
     Python worker. The rows form a local relation, and ``read_table``'s
     pipeline (``read_opts``: time range, versions, TTL, other catalogs)
     runs on it. The reference sends its Gets in batches of
-    ``bulkGetSize``; here the key list already lives in the driver, so
-    the rows read are bounded by the keys times the generations that
-    overlap them.
+    ``bulkGetSize``; here a get whose planned partitions may hold more
+    than ``DRIVER_GET_MAX_ROWS`` rows runs as a Spark scan instead, as
+    does a get with a key that is not a value of the key type (1.5 for
+    a bigint key).
 
-    The get is a snapshot at call time, like an HBase ``Result``: a
-    write after the call is not visible in the returned DataFrame. A
-    leading dimension with no byte coder (an Avro-coded key) raises
-    ValueError; use ``read_table(...).filter(F.col(key).isin(keys))``
-    there."""
-    cat = parse_catalog(catalog)
-    first = cat.rowkey_fields()[0]
-    if first.avro_schema is not None:
-        raise ValueError(
-            f"bulk_get: leading rowkey {first.col_name!r} is Avro-coded, so keys have no "
-            "byte encoding to look up; use read_table(...).filter(F.col(key).isin(keys))"
-        )
-    keys = [k for k in (_coerce(v, first.dt) for v in keys) if k is not None]
-    df = _read_table(spark, catalog, cat, keys, root=root, **read_opts)
-    return df.filter(F.col(first.col_name).isin(keys))
+    A get read in the driver is a snapshot at call time, like an HBase
+    ``Result``: a write after the call is not visible in the returned
+    DataFrame. A leading dimension with no byte coder (an Avro-coded
+    key) raises ValueError; use
+    ``read_table(...).filter(F.col(key).isin(keys))`` there."""
+    return _read_table(spark, catalog, parse_catalog(catalog), list(keys), root=root, **read_opts)
 
 
 def write_stream_table(

@@ -673,6 +673,24 @@ class ShcReader(DataSourceReader):
             )
         return parts
 
+    def max_rows(self, parts) -> int:
+        """A bound, known before reading, on the rows ``read`` yields
+        for ``parts``: per file, one per point range plus every row of
+        the row groups the other ranges may touch, and at most the
+        file's rows."""
+        file_rows = {r["path"]: r.get("rows") for r in _load_regions(self.path)}
+        total = 0
+        for p in parts:
+            paths = p.paths if isinstance(p, MergePartition) else [p.path] if p.path else []
+            spans = tuple(r for r in p.ranges if not _is_point(r))
+            for path in paths:
+                n = len(p.ranges) - len(spans)
+                if spans or not p.ranges:
+                    md = pq.read_metadata(path)
+                    n += sum(md.row_group(rg).num_rows for rg in _live_row_groups(md, spans))
+                total += min(n, file_rows.get(path) or n)
+        return total
+
     # -- execution (S11/S13, vectorized) ----------------------------------
     def read(self, partition):
         if self.agg_spec is not None:
@@ -819,38 +837,22 @@ class ShcReader(DataSourceReader):
         # Streaming read: iter_batches + per-batch range mask bounds
         # executor memory at ~batch_size rows regardless of region file
         # size (a whole-file read_table peaks at full region size on an
-        # over-wide region). S11 scan-vs-get: rows are sorted by
-        # __rowkey, so row-group statistics on it are tight — whole row
-        # groups outside the coarse bounding range are skipped up front
-        # (the BulkGet analog: a point lookup touches ~1 row group).
-        # Parquet stat truncation is safe here: a truncated min is a
-        # byte-prefix (<= real min) and a truncated max is bumped
-        # upward (>= real max), so both skip tests stay conservative.
+        # over-wide region). S11 scan-vs-get: row groups outside the
+        # ranges are skipped up front (the BulkGet analog: a point
+        # lookup touches ~1 row group).
         partition = RegionPartition(path=path, ranges=ranges)
-        starts = [r[0] for r in partition.ranges]
-        ends = [r[2] for r in partition.ranges]
-        lo = min(starts) if partition.ranges and all(s is not None for s in starts) else None
-        hi = max(ends) if partition.ranges and all(e is not None for e in ends) else None
         full_scan = any(
             s is None and e is None for s, _, e, _ in partition.ranges
         ) or not partition.ranges
+        # point ranges (a Get's exact keys) mask with one set lookup per
+        # batch; only true ranges cost a pair of comparisons each
+        points = [r[0] for r in partition.ranges if _is_point(r)]
+        spans = [r for r in partition.ranges if not _is_point(r)]
+        point_set = pa.array(points, pa.binary())
 
         with pq.ParquetFile(partition.path) as pf:
             md = pf.metadata
-            key_leaf = next(
-                i
-                for i in range(md.num_columns)
-                if md.row_group(0).column(i).path_in_schema == ROWKEY_COL
-            )
-            row_groups = []
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(key_leaf).statistics
-                if st is not None and st.has_min_max:
-                    if hi is not None and st.min > hi:
-                        continue
-                    if lo is not None and st.max < lo:
-                        continue
-                row_groups.append(rg)
+            row_groups = _live_row_groups(md, partition.ranges)
             # column pruning at the parquet decoder: only the catalog's
             # columns are materialized — a subset catalog over a wide
             # physical table never decodes the other columns
@@ -867,8 +869,8 @@ class ShcReader(DataSourceReader):
             ):
                 if not full_scan:
                     key = batch.column(ROWKEY_COL)
-                    mask = None
-                    for start, start_inc, end, end_inc in partition.ranges:
+                    mask = pc.is_in(key, value_set=point_set) if points else None
+                    for start, start_inc, end, end_inc in spans:
                         cond = None
                         if start is not None:
                             op = pc.greater_equal if start_inc else pc.greater
@@ -898,6 +900,38 @@ class ShcReader(DataSourceReader):
                     else:
                         arrays.append(pa.nulls(len(batch), field.type))
                 yield pa.RecordBatch.from_arrays(arrays, schema=want)
+
+
+def _is_point(r: tuple) -> bool:
+    """A scan range holding exactly one key (a Get)."""
+    return r[0] is not None and r[0] == r[2] and r[1] and r[3]
+
+
+def _live_row_groups(md, ranges: tuple) -> list:
+    """Row groups of the parquet file with metadata ``md`` that may
+    hold a key of ``ranges`` (all of them for no ranges). Rows are
+    sorted by ``__rowkey``, so row-group statistics on it are tight and
+    whole row groups outside the ranges' bounding range are skipped.
+    Parquet stat truncation is safe here: a truncated min is a
+    byte-prefix (<= real min) and a truncated max is bumped upward
+    (>= real max), so both skip tests stay conservative."""
+    starts = [r[0] for r in ranges]
+    ends = [r[2] for r in ranges]
+    lo = min(starts) if ranges and all(s is not None for s in starts) else None
+    hi = max(ends) if ranges and all(e is not None for e in ends) else None
+    key_leaf = next(
+        i for i in range(md.num_columns) if md.row_group(0).column(i).path_in_schema == ROWKEY_COL
+    )
+    live = []
+    for rg in range(md.num_row_groups):
+        st = md.row_group(rg).column(key_leaf).statistics
+        if st is not None and st.has_min_max:
+            if hi is not None and st.min > hi:
+                continue
+            if lo is not None and st.max < lo:
+                continue
+        live.append(rg)
+    return live
 
 
 BUCKET_COL = "__bucket"

@@ -302,9 +302,11 @@ def test_merge_read_batches_have_the_declared_schema(tmp_path):
     """Every batch of every merge-read partition has the declared Arrow
     schema, nullability included, whether the partition passes one file
     through or merges several with tombstones — so one read yields one
-    schema. Built and read without Spark."""
+    schema; ``max_rows`` bounds the rows a scan and a get read. Built
+    and read without Spark."""
     import pandas as pd
     import pyarrow as pa
+    from pyspark.sql.datasource import In
     from pyspark.sql.pandas.types import to_arrow_schema
 
     from shc_spark.catalog import parse_catalog
@@ -342,6 +344,13 @@ def test_merge_read_batches_have_the_declared_schema(tmp_path):
     batches = [b for p in parts for b in reader.read(p)]
     assert sum(len(b) for b in batches) == 110
     assert all(b.schema == want for b in batches)
+    assert reader.max_rows(parts) >= 110
+
+    # a get: 15 is deleted, 45 and 60 merge two generations, 500 is absent
+    list(reader.pushFilters([In(("k",), (5, 15, 45, 60, 500))]))
+    parts = reader.partitions()
+    assert sum(len(b) for p in parts for b in reader.read(p)) == 3
+    assert reader.max_rows(parts) >= 3
 
 
 def test_key_in_pushdown_consumed_and_pruned(spark, basic_table, root):
@@ -492,6 +501,8 @@ def test_bulk_get_equals_filtered_read(spark, tmp_path):
     for no_rows in ([], [1000, 2000]):
         got = bulk_get(spark, cat, no_rows, root=root)
         assert got.schema == latest.schema and got.collect() == []
+    # 1.5 is no bigint: Spark's casts decide, and it matches no row
+    _check_bulk_get(spark, cat, [5, 1.5, 39.0], root)
     _check_bulk_get(spark, cat, keys, root, timestamp=2000)
     _check_bulk_get(spark, cat, keys, root, max_versions=2)
     subset = json.dumps(
@@ -546,6 +557,50 @@ def test_bulk_get_equals_filtered_read_ttl_salt_phoenix(spark, tmp_path):
     _check_bulk_get(spark, phx, ["user3", "user30", "user", "nobody"], root)
 
 
+def _job_count(spark, group, action):
+    """Spark jobs that ``action()`` starts, counted under a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+
+def test_bulk_get_wide_composite_get_scans_with_spark(spark, tmp_path, monkeypatch):
+    """A composite key whose leading value spans many rows: a get over
+    the driver budget runs as a Spark scan, one under it in the driver,
+    and both equal the filtered full read."""
+    from shc_spark.sources import api
+
+    root = str(tmp_path)
+    cat = json.dumps(
+        {
+            "table": {"namespace": "bg", "name": "wide", "tableCoder": "OrderedType",
+                      "version": "2.0"},
+            "rowkey": "key1:key2",
+            "columns": {
+                "g": {"cf": "rowkey", "col": "key1", "type": "int"},
+                "n": {"cf": "rowkey", "col": "key2", "type": "int"},
+                "v": {"cf": "cf1", "col": "v", "type": "double"},
+            },
+        }
+    )
+    rows = [(g, n, float(n)) for g in range(4) for n in range(300)]
+    write_table(spark.createDataFrame(rows, "g int, n int, v double"), cat, root=root,
+                num_regions=4, mode="overwrite", timestamp=1000)
+    monkeypatch.setattr(api, "DRIVER_GET_MAX_ROWS", 500)
+    jobs, got = _job_count(spark, "bulk_get_wide", lambda: api.bulk_get(
+        spark, cat, [1, 2], root=root).collect())
+    assert len(got) == 600 and jobs > 0
+    _check_bulk_get(spark, cat, [1, 2], root)
+    jobs, got = _job_count(spark, "bulk_get_narrow", lambda: api.bulk_get(
+        spark, cat, [3], root=root).collect())
+    assert len(got) == 300 and jobs == 0
+    _check_bulk_get(spark, cat, [3, 7], root)
+
+
 def test_bulk_get_reads_in_the_driver_as_a_snapshot(spark, tmp_path):
     """A plain latest get starts no Spark job, collect included, and it
     is a snapshot at call time: a later append is not in its rows."""
@@ -555,15 +610,13 @@ def test_bulk_get_reads_in_the_driver_as_a_snapshot(spark, tmp_path):
     cat = _gens_catalog("snap")
     write_table(_gen_rows(spark, 0, 100, "g0"), cat, root=root, num_regions=4,
                 mode="overwrite", timestamp=1000)
-    sc = spark.sparkContext
-    sc.setJobGroup("bulk_get_driver_read", "bulk_get starts no job")
-    try:
+
+    def get():
         got = bulk_get(spark, cat, [3, 15, 500], root=root)
-        rows = {r.k: r.s for r in got.collect()}
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert rows == {3: "g03", 15: "g015"}
-    assert list(sc.statusTracker().getJobIdsForGroup("bulk_get_driver_read")) == []
+        return got, {r.k: r.s for r in got.collect()}
+
+    jobs, (got, rows) = _job_count(spark, "bulk_get_driver_read", get)
+    assert rows == {3: "g03", 15: "g015"} and jobs == 0
 
     write_table(_gen_rows(spark, 15, 16, "g1"), cat, root=root, mode="append", timestamp=2000)
     assert {r.k: r.s for r in got.collect()} == rows
@@ -719,7 +772,7 @@ def test_avro_coded_rowkey(spark, tmp_path):
     # instead of reading the whole table into the driver
     from shc_spark.sources import bulk_get
 
-    with pytest.raises(ValueError, match="Avro-coded"):
+    with pytest.raises(ValueError, match="no byte encoding"):
         bulk_get(spark, cat, [("name002", 2, "color002")], root=root)
 
 
