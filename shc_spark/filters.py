@@ -27,6 +27,7 @@ exact.
 
 from __future__ import annotations
 
+from bisect import bisect_left, bisect_right
 from dataclasses import dataclass
 
 #: +inf sentinel for an unbounded upper key
@@ -134,6 +135,21 @@ def ranges_and(a: list[ScanRange], b: list[ScanRange]) -> list[ScanRange]:
             if r is not None:
                 out.append(r)
     return _normalize(out)
+
+
+def ranges_clip(ranges: list[ScanRange], sub: ScanRange) -> list[ScanRange]:
+    """``ranges_and(ranges, [sub])`` for NORMALIZED ``ranges`` (sorted,
+    disjoint, as every HRF holds them): two bisects find the slice of
+    ranges that can meet ``sub``, and only that slice is intersected.
+    The planner clips one HRF to every region or sub-range this way,
+    in O(log n + output) each instead of O(n)."""
+    lo = 0 if sub.start is None else bisect_left(
+        ranges, (False, sub.start), key=lambda r: (r.end is None, r.end or b"")
+    )
+    hi = len(ranges) if sub.end is None else bisect_right(
+        ranges, (True, sub.end), key=lambda r: (r.start is not None, r.start or b"")
+    )
+    return [r for r in (ra.intersect(sub) for ra in ranges[lo:hi]) if r is not None]
 
 
 def ranges_or(a: list[ScanRange], b: list[ScanRange]) -> list[ScanRange]:

@@ -36,6 +36,14 @@ from pyspark.sql.types import StructType
 # realpath -> (mtime_ns, size, schema)
 _SCHEMAS: dict[str, tuple[int, int, StructType]] = {}
 
+DRIVER_GET_MAX_ROWS = 100_000
+"""Most rows a query reads in the driver instead of running a Spark
+job: a ``bulk_get`` (as ``ShcReader.max_rows`` bounds its planned
+partitions) and a BM25 or IVF index query (as the pruned posting files
+bound it, see ``operators.idxcache.read_local``). A read over it runs
+as a Spark scan instead. Read as ``io.DRIVER_GET_MAX_ROWS`` at call
+time, so there is one budget for both layers."""
+
 
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     """``spark.read.parquet(path)`` with the inferred schema memoized

@@ -16,6 +16,12 @@ useless on an always-empty file). The fingerprint folds in the data
 file census — (marker mtime_ns, file count, max file mtime_ns, total
 bytes) from one os.walk — so any append, tombstone delete, or
 compaction changes it even within a single mtime tick.
+
+The driver-side half of index serving lives here too: ``read_local``,
+the one pyarrow reader of index subtrees (meta tables, and the pruned
+posting partitions of a small BM25 or IVF query, ``read_postings``),
+``spark_round`` (``F.round`` value for value) and ``topk_frame`` (the
+rounded (score desc, id asc) top-k window, as a local DataFrame).
 """
 
 from __future__ import annotations
@@ -122,12 +128,7 @@ def tombstone_snapshot(tomb_path: str) -> list:
     compaction)."""
     if not os.path.exists(os.path.join(tomb_path, "_SUCCESS")):
         return []
-    out = []
-    for root, _dirs, files in os.walk(tomb_path):
-        for f in files:
-            if not f.startswith(("_", ".")):
-                out.append(os.path.join(root, f))
-    return sorted(out)
+    return _data_files(tomb_path)
 
 
 def drop_tombstone_snapshot(tomb_path: str, snapshot: list) -> None:
@@ -145,41 +146,174 @@ def drop_tombstone_snapshot(tomb_path: str, snapshot: list) -> None:
             # PERSISTENT removal failure would leave purged tombstones
             # masking forever
             log.debug("tombstone snapshot cleanup could not remove %s", f, exc_info=True)
-    remaining = [
-        f
-        for root, _dirs, files in os.walk(tomb_path)
-        for f in files
-        if not f.startswith(("_", "."))
-    ]
-    if not remaining:
+    if not _data_files(tomb_path):
         shutil.rmtree(tomb_path, ignore_errors=True)
 
 
-def local_meta_rows(path: str) -> list[dict]:
-    """Driver-side pyarrow read of a TINY meta subtree (centroids,
-    quant/PQ codebooks, banding params — single-file repartition(1)
-    trees of a few KB). A spark.read...collect() of the same file is
-    one whole Spark job (~0.2-0.3s scheduler overhead on this box),
-    and a serving composition pays it per meta table per call
-    (VERDICT r10 #7 profile: the PQ gate ran 6+ such jobs before its
-    first real stage). Always fresh — it reads the files themselves,
-    no cache to invalidate."""
-    import glob
+def _data_files(path: str) -> list:
+    """The committed data files under ``path``, as ``spark.read.parquet``
+    lists them: every file whose name is not hidden (``_SUCCESS``,
+    ``.crc`` and other ``_``/``.`` names), in path order."""
+    return sorted(
+        os.path.join(r, f)
+        for r, _d, fs in os.walk(path)
+        for f in fs
+        if not f.startswith(("_", "."))
+    )
 
+
+def read_local(
+    path: str,
+    columns: list | None = None,
+    part_col: str | None = None,
+    values=(),
+    max_rows: int | None = None,
+    keep: tuple | None = None,
+):
+    """Driver-side pyarrow read of an index subtree: the one reader
+    behind the meta reads and the driver path of the BM25 and IVF
+    queries. Reads every data file under ``path``, or with ``part_col``
+    only those of the ``part_col=<v>`` directories of ``values`` (the
+    partitions Spark's partition pruning would read); ``part_col`` in
+    ``columns`` comes back as the int column Spark infers for it.
+    ``keep = (column, values)`` keeps only the rows whose ``column`` is
+    one of ``values``, like a pushed ``isin``.
+
+    Returns None when the read would return more than ``max_rows``
+    rows. That is known before any other column is decoded: without
+    ``keep`` from the files' footers, with it from the ``keep`` column,
+    which is read first. An empty selection returns an empty table
+    with the subtree's schema."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    files = sorted(glob.glob(os.path.join(path, "*.parquet")))
-    if not files:  # partitioned or nested layouts fall back to a walk
-        files = sorted(
-            os.path.join(r, f)
-            for r, _d, fs in os.walk(path)
-            for f in fs
-            if f.endswith(".parquet")
-        )
-    out: list[dict] = []
-    for f in files:
-        out.extend(pq.read_table(f).to_pylist())
-    return out
+    if part_col is None:
+        files = [(f, None) for f in _data_files(path)]
+    else:
+        files = [
+            (f, int(v))
+            for v in values
+            for f in _data_files(os.path.join(path, f"{part_col}={int(v)}"))
+        ]
+    handles = [(pq.ParquetFile(f), v) for f, v in files]
+    if keep is None:
+        if max_rows is not None and sum(h.metadata.num_rows for h, _ in handles) > max_rows:
+            return None
+        masks = [None] * len(handles)
+    else:
+        col, wanted = keep
+        masks, n = [], 0
+        for h, _ in handles:
+            masks.append(pc.is_in(h.read(columns=[col]).column(col), value_set=pa.array(wanted)))
+            n += pc.sum(masks[-1]).as_py() or 0
+            if max_rows is not None and n > max_rows:
+                return None
+    read_cols = None if columns is None else [c for c in columns if c != part_col]
+    tables = []
+    for (h, v), mask in zip(handles, masks):
+        t = h.read(columns=read_cols)
+        if mask is not None:
+            t = t.filter(mask)
+        if part_col in (columns or ()):
+            t = t.append_column(part_col, pa.array(np.full(len(t), v, dtype=np.int32)))
+        tables.append(t.select(columns) if columns is not None else t)
+    if not tables:
+        files = _data_files(path)
+        if not files:
+            return pa.table({})
+        schema = pq.read_schema(files[0])
+        if part_col in (columns or ()):
+            schema = schema.append(pa.field(part_col, pa.int32()))
+        return pa.schema([schema.field(c) for c in columns or schema.names]).empty_table()
+    schema = tables[0].schema
+    return pa.concat_tables([t if t.schema.equals(schema) else t.cast(schema) for t in tables])
+
+
+def local_meta_rows(path: str) -> list[dict]:
+    """Driver-side read of a TINY meta subtree (centroids, quant/PQ
+    codebooks, banding params — single-file repartition(1) trees of a
+    few KB). A spark.read...collect() of the same file is one whole
+    Spark job (~0.2-0.3s scheduler overhead on this box), and a serving
+    composition pays it per meta table per call (VERDICT r10 #7
+    profile: the PQ gate ran 6+ such jobs before its first real
+    stage). Always fresh — it reads the files themselves, no cache to
+    invalidate."""
+    return read_local(path).to_pylist()
+
+
+def read_postings(path: str, columns: list, part_col: str, values, id_col: str, keep=None):
+    """The driver path's read of a BM25 or IVF index: ``read_local`` of
+    the ``values`` partitions of ``postings/`` under the driver budget
+    (``io.DRIVER_GET_MAX_ROWS``), minus the tombstoned ids — the
+    queries' left-anti join, applied, as there, only when
+    ``tombstones/_SUCCESS`` exists. Returns None, for the Spark body to
+    run, when the posting rows or the tombstones are over the budget,
+    or a posting id is null (the Spark window orders nulls first)."""
+    import pyarrow.compute as pc
+
+    from shc_spark import io as shc_io
+
+    budget = shc_io.DRIVER_GET_MAX_ROWS
+    table = read_local(os.path.join(path, "postings"), columns, part_col, values, budget, keep)
+    if table is None or table.column(id_col).null_count:
+        return None
+    tomb_path = os.path.join(path, "tombstones")
+    if not os.path.exists(os.path.join(tomb_path, "_SUCCESS")):
+        return table
+    tomb = read_local(tomb_path, ["id"], max_rows=budget)
+    if tomb is None:
+        return None
+    ids = table.column(id_col)
+    dead = tomb.column("id").drop_null().cast(ids.type)
+    return table.filter(pc.invert(pc.is_in(ids, value_set=dead)))
+
+
+def spark_round(x, scale: int = 4):
+    """``F.round(x, scale)`` of a float64 array, value for value: Spark
+    rounds HALF_UP the decimal that ``Double.toString`` prints for the
+    double, so 0.72525 (stored just below that decimal) rounds up to
+    0.7253. A binary ``floor(x * 10**scale + 0.5)`` decides every value
+    whose scaled fraction is not within rounding error of one half;
+    those few are decided on the shortest decimal of the double, which
+    is what the JVM prints for doubles of this range."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    import numpy as np
+
+    x = np.asarray(x, dtype=np.float64)
+    f = 10.0**scale
+    y = np.abs(x) * f
+    out = np.copysign(np.floor(y + 0.5), x) / f
+    near = np.flatnonzero(np.abs(y - np.floor(y) - 0.5) <= 1e-9 * np.maximum(y, 1.0))
+    q = Decimal(1).scaleb(-scale)
+    for i in near:
+        out[i] = float(Decimal(repr(float(x[i]))).quantize(q, rounding=ROUND_HALF_UP))
+    # Spark's decimal has no negative zero
+    return out + 0.0
+
+
+def topk_frame(spark, scored, query_col: str, score_col: str, id_col: str, k: int, schema):
+    """The top-k window of a serving index run in the driver: each
+    ``query_col`` group's first ``k`` rows of the pandas frame
+    ``scored`` by (``score_col`` rounded as ``F.round(score, 4)`` desc,
+    ``id_col`` asc), numbered by an int ``rank``, as a local DataFrame
+    of ``schema`` (the Spark body's output schema) in (query, rank)
+    order."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    ranked = scored.assign(**{score_col: spark_round(scored[score_col].to_numpy())})
+    ranked = ranked.sort_values(
+        [query_col, score_col, id_col], ascending=[True, False, True], kind="stable"
+    )
+    rank = ranked.groupby(query_col, sort=False).cumcount() + 1
+    ranked = ranked.assign(rank=rank.astype("int32"))[rank.to_numpy() <= k]
+    table = pa.Table.from_pandas(
+        ranked[schema.names], schema=to_arrow_schema(schema), preserve_index=False
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def begin_staged_build(path: str) -> str:

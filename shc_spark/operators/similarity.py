@@ -16,7 +16,10 @@ shape for a corpus that is huge and a query set that is small:
 
 Users of the core: cosine_topk, sq8_topk, lsh_topk, ivf_topk,
 ivf_pq_topk, hard_negative_topk and the persisted-IVF search
-(ivf_index_topk, ivf_index_topk_with_refine, hybrid_index_rrf*).
+(ivf_index_topk, ivf_index_topk_with_refine, hybrid_index_rrf*). A
+small persisted-IVF search runs the same `score_batch` and
+`_emit_topk` in the driver instead (`_ivf_index_local`), with no
+Spark job.
 Their `queries` argument takes either a DataFrame or a
 collect_query_side() result, so several rankings of one query set
 share one driver collect.
@@ -841,15 +844,27 @@ def ivf_index_topk(
     full-precision (id_col, vec_col) table, e.g. the corpus) to get
     the FAISS refine stage: PQ prunes to ``rerank_factor * k``
     survivors per query and only those join back for exact cosines.
-    ``queries`` is a DataFrame or a collect_query_side() result."""
-    depth = max(k * rerank_factor, k) if rerank_with is not None else k
-    part, q_ids, qm = _ivf_index_scored(
-        spark, path, queries, vec_col, id_col, nprobe, max_queries, depth
-    )
+    ``queries`` is a DataFrame or a collect_query_side() result.
+
+    Without ``rerank_with``, a batch whose probed cells hold at most
+    ``io.DRIVER_GET_MAX_ROWS`` posting rows is served in the driver
+    (:func:`_ivf_index_local`): the cells' files read with pyarrow,
+    the same scoring closure run here, the same rows as the Spark body
+    in a local DataFrame, and no Spark job (none at all when the query
+    side is a local frame or a collect_query_side() result). A larger
+    batch, and every refine, runs the Spark body: one partition-pruned
+    mapInPandas pass and the top-k window."""
+    probe = _ivf_index_probe(spark, path, queries, vec_col, id_col, nprobe, max_queries)
     if rerank_with is None:
-        return _topk_window(part, k)
+        local = _ivf_index_local(spark, path, probe, id_col, k)
+        if local is not None:
+            return local
+        return _topk_window(_ivf_index_scored(spark, path, probe, id_col, k), k)
     # the FAISS refine stage: exact cosine on the depth survivors only
+    depth = max(k * rerank_factor, k)
+    part = _ivf_index_scored(spark, path, probe, id_col, depth)
     pruned = _topk_window(part, depth).drop("rank", "cosine")
+    q_ids, qm = probe[0][:2]
     return _refine_from_pruned(
         spark, pruned, q_ids, qm, k, rerank_with, vec_col, id_col
     )
@@ -885,9 +900,9 @@ def ivf_index_topk_with_refine(
     identical subtrees, so the postings scan and the Python pass
     execute once (ReusedExchange — pinned by tests/test_plans.py)."""
     depth = max(k * rerank_factor, k)
-    part, q_ids, qm = _ivf_index_scored(
-        spark, path, queries, vec_col, id_col, nprobe, max_queries, depth
-    )
+    probe = _ivf_index_probe(spark, path, queries, vec_col, id_col, nprobe, max_queries)
+    part = _ivf_index_scored(spark, path, probe, id_col, depth)
+    q_ids, qm = probe[0][:2]
     # r15: pin the depth-ranked frame (bounded: nq x depth rows) so
     # the postings scan + Python scoring pass execute exactly ONCE no
     # matter how many downstream actions consume the two results
@@ -917,7 +932,7 @@ def ivf_index_topk_with_refine(
     return approx, refined
 
 
-def _ivf_index_scored(
+def _ivf_index_probe(
     spark,
     path: str,
     queries,
@@ -925,14 +940,13 @@ def _ivf_index_scored(
     id_col: str,
     nprobe: int,
     max_queries: int,
-    depth: int,
 ):
-    """The shared body of the persisted-IVF search: probe selection
-    against the saved centroids, pruned postings scan, storage-tier
-    scoring (float / SQ8 / PQ-ADC) at per-batch depth ``depth``.
-    Returns (scored DataFrame, query ids, normalized query matrix)."""
-    import os
-
+    """The query side of the persisted-IVF search, shared by the Spark
+    body and the driver path: probe selection against the saved
+    centroids and the storage-tier scoring closure (float / SQ8 /
+    PQ-ADC). Returns (side, score_batch, payload column), where side is
+    (query ids, normalized query matrix, (nq, nprobe) probed cells, PQ
+    lookup tables or None)."""
     cent = read_ivf_centroids(spark, path)
     stats = read_ivf_quant(spark, path)
     books = read_ivf_pq(spark, path)
@@ -961,9 +975,21 @@ def _ivf_index_scored(
         C = _matrix(pdf["__vec"], np.int64)
         return 1.0 - lut_[:, np.arange(C.shape[1]), C].sum(axis=2).T / 2.0, mask
 
+    payload_col = "codes" if (stats is not None or books is not None) else vec_col
+    return (q_ids, qm, cells, lut), score_batch, payload_col
+
+
+def _ivf_index_scored(spark, path: str, probe: tuple, id_col: str, depth: int) -> DataFrame:
+    """The Spark body of the persisted-IVF search: the postings scan
+    pruned to the probed cids, the tombstone anti-join, and the
+    ``probe``'s scoring at per-batch depth ``depth`` in one `_scored`
+    pass (unrounded, unranked)."""
+    import os
+
     from shc_spark.operators.idxcache import index_relation
 
-    probed = list(dict.fromkeys(int(c) for c in cells.ravel()))
+    side, score_batch, payload_col = probe
+    probed = list(dict.fromkeys(int(c) for c in side[2].ravel()))
     postings = index_relation(spark, path, "postings").filter(
         F.col("cid").isin(*probed) if probed else F.lit(False)
     )
@@ -972,11 +998,50 @@ def _ivf_index_scored(
         postings = postings.join(
             tomb.select(F.col("id").alias(id_col)), id_col, "left_anti"
         )
-    payload_col = "codes" if (stats is not None or books is not None) else vec_col
-    part = _scored(
-        postings, (id_col, payload_col, "cid"), (q_ids, qm, cells, lut), score_batch, depth
+    return _scored(postings, (id_col, payload_col, "cid"), side, score_batch, depth)
+
+
+def _ivf_index_local(spark, path: str, probe: tuple, id_col: str, k: int) -> DataFrame | None:
+    """The driver path of a small query batch: the top-k of
+    ``_topk_window(_ivf_index_scored(...), k)``, with no Spark job.
+    The probed cids' posting files are read with pyarrow, tombstoned
+    ids dropped, and the ``probe``'s own ``score_batch`` and
+    `_emit_topk` run here, one Arrow batch of the mapInPandas size at a
+    time; the (rounded cosine desc, id asc) window runs in pandas. The
+    result is a local DataFrame. Returns None, for the Spark body to
+    run, when the probed files hold more than ``io.DRIVER_GET_MAX_ROWS``
+    rows (or tombstones), or a posting id is null."""
+    from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import from_arrow_type
+
+    from shc_spark.operators.idxcache import read_postings, topk_frame
+
+    side, score_batch, payload_col = probe
+    postings = read_postings(
+        path, [id_col, payload_col, "cid"], "cid", sorted({int(c) for c in side[2].ravel()}), id_col
     )
-    return part, q_ids, qm
+    if postings is None:
+        return None
+    step = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
+    step = step if step > 0 else max(1, postings.num_rows)
+    emitted = []
+    if len(side[0]):
+        for off in range(0, postings.num_rows, step):
+            pdf = postings.slice(off, step).rename_columns(["__id", "__vec", "__aux"]).to_pandas()
+            S, mask = score_batch(pdf, side)
+            emitted.extend(_emit_topk(side[0], pdf["__id"].to_numpy(), S, mask, k))
+    scored = (
+        pd.concat(emitted, ignore_index=True) if emitted
+        else pd.DataFrame({"query_id": [], "neighbor_id": [], "cosine": []})
+    )
+    id_type = from_arrow_type(postings.schema.field(id_col).type)
+    schema = T.StructType([
+        T.StructField("query_id", id_type),
+        T.StructField("neighbor_id", id_type),
+        T.StructField("cosine", T.DoubleType()),
+        T.StructField("rank", T.IntegerType(), False),
+    ])
+    return topk_frame(spark, scored, "query_id", "cosine", "neighbor_id", k, schema)
 
 
 def _refine_from_pruned(spark, pruned, q_ids, qm, k, rerank_with, vec_col, id_col):
@@ -1103,10 +1168,10 @@ def _hybrid_index_fused(spark, text_path, ivf_path, queries, rrf_k, depth, nprob
     vector ranks from one batch probe of the IVF index — both ranked by
     (rounded score desc, id asc) — and one full outer join applies the
     RRF formula per query."""
-    from shc_spark.operators.textindex import _bm25_scores, _ranked
+    from shc_spark.operators.textindex import _bm25_topk
 
     terms = {q: t for q, (t, _v) in queries.items()}
-    bm = _ranked(_bm25_scores(spark, text_path, terms), depth).select(
+    bm = _bm25_topk(spark, text_path, terms, depth).select(
         "query_id", "id", F.col("rank").alias("r_bm")
     )
     # vector query ids are negative ordinals: the top-k operators

@@ -34,6 +34,14 @@ Query semantics are IDENTICAL to ``text.bm25_search`` over the same
 (non-deleted) corpus: same tf/df/idf/length normalization, same 4dp
 rounding, same (score desc, id asc) top-k — the driver gate shares the
 inline operator's exact DuckDB oracle.
+
+A query batch has two bodies with equal rows. When its terms keep at
+most ``io.DRIVER_GET_MAX_ROWS`` posting rows, the driver reads the
+term buckets' files with pyarrow and ranks in numpy
+(:func:`_bm25_local`): no Spark job, a local DataFrame — the index
+counterpart of ``bulk_get``'s client-side multi-Get. A larger batch
+runs the pruned Spark pass (:func:`_bm25_scores`), one job at the
+caller's action.
 """
 
 from __future__ import annotations
@@ -261,6 +269,19 @@ def delete_from_text_index(spark, path: str, ids) -> str:
     return path
 
 
+def _query_terms(spark, path: str, queries: dict):
+    """({term: [query ids as strings]}, sorted posting buckets of the
+    terms) of a query batch (query_id -> terms)."""
+    from shc_spark.operators.xxh import bucket_of_str
+
+    nb = read_text_index_meta(spark, path)["num_buckets"]
+    qids_of: dict = {}
+    for qid, terms in queries.items():
+        for t in set(terms):
+            qids_of.setdefault(t, []).append(str(qid))
+    return qids_of, sorted({bucket_of_str(t, nb) for t in qids_of})
+
+
 def _bm25_scores(
     spark, path: str, queries: dict, k1: float = 1.2, b: float = 0.75
 ) -> DataFrame:
@@ -283,17 +304,11 @@ def _bm25_scores(
     DataFrame to ship), and the stats scalars ride a broadcast
     single-row cross join instead of a collect."""
     from shc_spark.operators.idxcache import index_relation
-    from shc_spark.operators.xxh import bucket_of_str
 
-    nb = read_text_index_meta(spark, path)["num_buckets"]
-    qids_of: dict = {}
-    for qid, terms in queries.items():
-        for t in set(terms):
-            qids_of.setdefault(t, []).append(str(qid))
+    qids_of, buckets = _query_terms(spark, path, queries)
     terms = sorted(qids_of)
     cand = index_relation(spark, path, "postings").filter(
-        F.col("tbkt").isin(sorted({bucket_of_str(t, nb) for t in terms}))
-        & F.col("term").isin(terms)
+        F.col("tbkt").isin(buckets) & F.col("term").isin(terms)
     )
     if os.path.exists(os.path.join(path, "tombstones", "_SUCCESS")):
         cand = cand.join(
@@ -326,6 +341,71 @@ def _bm25_scores(
     )
 
 
+def _bm25_local(
+    spark, path: str, queries: dict, k: int, k1: float = 1.2, b: float = 0.75
+) -> DataFrame | None:
+    """The driver path of a small query batch: each query's top-k
+    (query_id, id, bm25, rank) rows, equal to ``_ranked(_bm25_scores(
+    ...), k)``, with no Spark job. The term buckets' posting files are
+    read with pyarrow (their ``term`` column first), tombstoned ids
+    dropped, and the same tf/df/idf/length formula and (rounded bm25
+    desc, id asc) ranking run in numpy and pandas. The result is a
+    local DataFrame. Returns None, for the Spark body to run, when the
+    terms keep more than ``io.DRIVER_GET_MAX_ROWS`` posting rows (or
+    tombstones), or a posting id is null."""
+    import math
+
+    import numpy as np
+    import pandas as pd
+    import pyarrow.compute as pc
+    from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import from_arrow_type
+
+    from shc_spark.operators.idxcache import read_local, read_postings, topk_frame
+
+    qids_of, buckets = _query_terms(spark, path, queries)
+    terms = sorted(qids_of)
+    cand = read_postings(
+        path, ["term", "id", "tf", "dl"], "tbkt", buckets, "id", keep=("term", terms)
+    )
+    if cand is None:
+        return None
+    stats = read_local(os.path.join(path, "stats"), ["n_docs", "sum_dl"])
+    n_docs = pc.sum(stats.column("n_docs")).as_py() or 0
+    if n_docs <= 0:
+        return None  # an empty corpus: Spark's avgdl division decides
+    avgdl = float(pc.sum(stats.column("sum_dl")).as_py() or 0) / float(n_docs)
+    fan = pd.DataFrame(
+        [(t, q) for t in terms for q in qids_of[t]], columns=["term", "query_id"]
+    )
+    c = cand.to_pandas().merge(fan, on="term")
+    df = c.groupby(["query_id", "term"])["id"].transform("size").to_numpy(np.int64)
+    # one scalar log per distinct df, as the JVM takes it per row
+    dfs, at = np.unique(df, return_inverse=True)
+    idf = np.array([math.log(1 + (n_docs - d + 0.5) / (d + 0.5)) for d in dfs.tolist()])[at]
+    tf = c["tf"].to_numpy(np.float64)
+    dl = c["dl"].to_numpy(np.float64)
+    c["bm25"] = idf * (tf * (k1 + 1)) / (tf + k1 * (1 - b + b * dl / avgdl))
+    scored = c.groupby(["query_id", "id"], as_index=False, sort=False)["bm25"].sum()
+    schema = T.StructType([
+        T.StructField("query_id", T.StringType()),
+        T.StructField("id", from_arrow_type(cand.schema.field("id").type)),
+        T.StructField("bm25", T.DoubleType()),
+        T.StructField("rank", T.IntegerType(), False),
+    ])
+    return topk_frame(spark, scored, "query_id", "bm25", "id", k, schema)
+
+
+def _bm25_topk(
+    spark, path: str, queries: dict, k: int, k1: float = 1.2, b: float = 0.75
+) -> DataFrame:
+    """Each query's top-k (query_id, id, bm25, rank): the driver path
+    (:func:`_bm25_local`) when its read is within the budget, else the
+    Spark body (:func:`_bm25_scores` under :func:`_ranked`)."""
+    local = _bm25_local(spark, path, queries, k, k1, b)
+    return local if local is not None else _ranked(_bm25_scores(spark, path, queries, k1, b), k)
+
+
 def _ranked(scored: DataFrame, k: int) -> DataFrame:
     """Each query's top-k of a (query_id, id, bm25) frame with its
     (bm25 desc, id asc) rank."""
@@ -347,11 +427,17 @@ def text_index_topk(
     k1: float = 1.2,
     b: float = 0.75,
 ) -> DataFrame:
-    """BM25 top-k (id, bm25) over the persisted index — the batch body
-    (:func:`_bm25_scores`) run on one query, cut by a distributed
-    (bm25 desc, id asc) TakeOrdered. The whole query is one Spark job
-    at the caller's action, and every scan in it is statically pruned.
-    No terms -> an empty frame."""
+    """BM25 top-k (id, bm25) over the persisted index, in (bm25 desc,
+    id asc) order. A query whose terms keep at most
+    ``io.DRIVER_GET_MAX_ROWS`` posting rows is served in the driver
+    (:func:`_bm25_local`): a local DataFrame, no Spark job. A larger
+    one runs the batch body (:func:`_bm25_scores`) on one query, cut
+    by a distributed (bm25 desc, id asc) TakeOrdered: one Spark job at
+    the caller's action, every scan in it statically pruned. No terms
+    -> an empty frame."""
+    local = _bm25_local(spark, path, {"q": terms}, k, k1, b)
+    if local is not None:
+        return local.select("id", "bm25")
     return (
         _bm25_scores(spark, path, {"q": terms}, k1, b)
         .select("id", "bm25")
@@ -371,13 +457,15 @@ def text_index_topk_batch(
     """BM25 top-k for a BATCH of queries — ``queries`` maps query_id
     -> list of terms — in ONE pruned pass of the same body as
     :func:`text_index_topk`: the union of all queries' posting buckets
-    is read once, candidates fan out per query, and one window takes
-    each query's top-k. Output is (query_id, id, bm25, rank). This is
-    the cluster-serving shape: 1000 queries cost one index read of
-    their combined term buckets, not 1000 round-trips."""
+    is read once, candidates fan out per query, and each query's top-k
+    is taken. Output is (query_id, id, bm25, rank). A batch whose terms
+    keep at most ``io.DRIVER_GET_MAX_ROWS`` posting rows runs in the
+    driver, with no Spark job; a larger one runs as one Spark pass with
+    one window. 1000 queries cost one index read of their combined
+    term buckets, not 1000 round-trips."""
     if not any(queries.values()):
         raise ValueError("queries must map query_id -> non-empty term list")
-    return _ranked(_bm25_scores(spark, path, queries, k1, b), k)
+    return _bm25_topk(spark, path, queries, k, k1, b)
 
 
 def minor_compact_text_index(spark, path: str, threshold: int = 2) -> str:

@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from shc_spark import io as shc_io
 from shc_spark.catalog import Catalog, parse_catalog
 from shc_spark.coders import get_coder
 from shc_spark.sources.shc_source import (
@@ -734,7 +735,7 @@ def _read_table(
     Spark read of the shc data source. A list of leading-key values
     reads just their rows: in the driver (``_multi_get``) when every
     key is a value of the key type and their planned partitions hold
-    at most ``DRIVER_GET_MAX_ROWS`` rows, else as that Spark read
+    at most ``io.DRIVER_GET_MAX_ROWS`` rows, else as that Spark read
     filtered on the keys."""
     stored, wcat, regions = table_state(table_path(root, rcat))
     wcat = wcat or rcat
@@ -1060,13 +1061,6 @@ def scan_aggregate(
     return out.select(*group_by, *requested)
 
 
-DRIVER_GET_MAX_ROWS = 100_000
-"""Most rows a ``bulk_get`` reads in the driver, as its planned
-partitions bound them before the read (``ShcReader.max_rows``). A get
-over it (a composite key whose leading values span wide row ranges,
-say) runs as a Spark scan instead."""
-
-
 def _multi_get(spark: SparkSession, opts: dict, key: str, keys: list) -> DataFrame | None:
     """Client-side multi-Get: the shc reader, built from the scan
     options ``opts``, plans the point partitions of ``keys`` (values of
@@ -1074,7 +1068,7 @@ def _multi_get(spark: SparkSession, opts: dict, key: str, keys: list) -> DataFra
     no Spark job, no Python planner or worker round trip. The rows
     become a local relation with the scan's schema. Returns None, for
     the caller to scan with Spark, when the planned partitions may hold
-    more than ``DRIVER_GET_MAX_ROWS`` rows."""
+    more than ``io.DRIVER_GET_MAX_ROWS`` rows."""
     from pyspark.sql.datasource import In
     from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.readwriter import to_str
@@ -1093,7 +1087,7 @@ def _multi_get(spark: SparkSession, opts: dict, key: str, keys: list) -> DataFra
     # ranges of a composite key's var-length leading dim are supersets
     wanted = pa.array(keys, to_arrow_schema(schema).field(key).type)
     parts = reader.partitions()
-    if reader.max_rows(parts) > DRIVER_GET_MAX_ROWS:
+    if reader.max_rows(parts) > shc_io.DRIVER_GET_MAX_ROWS:
         return None
     batches = [b.filter(pc.is_in(b.column(key), value_set=wanted))
                for p in parts for b in reader.read(p)]
@@ -1133,7 +1127,7 @@ def bulk_get(
     pipeline (``read_opts``: time range, versions, TTL, other catalogs)
     runs on it. The reference sends its Gets in batches of
     ``bulkGetSize``; here a get whose planned partitions may hold more
-    than ``DRIVER_GET_MAX_ROWS`` rows runs as a Spark scan instead, as
+    than ``io.DRIVER_GET_MAX_ROWS`` rows runs as a Spark scan instead, as
     does a get with a key that is not a value of the key type (1.5 for
     a bigint key).
 

@@ -68,8 +68,10 @@ log = logging.getLogger("shc_spark.source")
 from shc_spark.filters import (
     HRF,
     ScanRange,
+    _normalize,
     _prefix_upper,
     ranges_and,
+    ranges_clip,
     ranges_or,
     translate_filters,
 )
@@ -597,6 +599,9 @@ class ShcReader(DataSourceReader):
         self._warn_on_replan(hrf)
         if self.cat.salt_buckets and hrf.ranges != HRF.full().ranges:
             hrf = self._expand_salt(hrf)
+        # ranges_clip wants sorted, disjoint ranges (salted fan-outs and
+        # key-range options may be neither)
+        hrf = HRF(_normalize(hrf.ranges), hrf.handled)
         if self.options.get("merge") == "latest":
             parts = self._merge_partitions(regions, hrf)
         else:
@@ -613,7 +618,7 @@ class ShcReader(DataSourceReader):
             end = bytes.fromhex(reg["end"]) if reg["end"] is not None else None
             # region covers [start, end] inclusive (tight file min/max)
             region_range = ScanRange(start, True, end, True)
-            live = ranges_and(hrf.ranges, [region_range])
+            live = ranges_clip(hrf.ranges, region_range)
             if live:
                 parts.append(
                     RegionPartition(
@@ -648,13 +653,13 @@ class ShcReader(DataSourceReader):
         for i, lo in enumerate(bounds):
             hi = bounds[i + 1] if i + 1 < len(bounds) else None
             sub = ScanRange(lo, True, hi, False)
-            live = ranges_and(hrf.ranges, [sub])
+            live = ranges_clip(hrf.ranges, sub)
             if not live:
                 continue
             over = [
                 (s, e, reg)
                 for s, e, reg in spans
-                if ranges_and([ScanRange(s, True, e, True)], [sub])
+                if ScanRange(s, True, e, True).intersect(sub) is not None
             ]
             if not over:
                 continue

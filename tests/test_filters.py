@@ -23,8 +23,10 @@ from shc_spark.filters import (
     FULL_SCAN,
     HRF,
     ScanRange,
+    _normalize,
     _prefix_upper,
     ranges_and,
+    ranges_clip,
     ranges_or,
     translate_filters,
 )
@@ -91,6 +93,32 @@ def test_normalize_disjoint_sorted(specs):
             assert r1.end <= r2.start
             if r1.end == r2.start:
                 assert not (r1.end_inclusive and r2.start_inclusive)
+
+
+@given(st.lists(interval, min_size=0, max_size=12), interval)
+@settings(max_examples=500)
+def test_ranges_clip_equals_ranges_and(specs, sub_spec):
+    """The planner's bisect clip of a normalized range set to one
+    region or sub-range returns exactly what ranges_and returns, on
+    random sets of points, bounded and unbounded ranges."""
+    ranges = _normalize([rng(*s) for s in specs])
+    sub = rng(*sub_spec)
+    assert ranges_clip(ranges, sub) == ranges_and(ranges, [sub])
+
+
+def test_ranges_clip_many_points_and_cuts():
+    """A wide get's point set clipped at every region cut, the shape of
+    ShcReader._merge_partitions: equal to ranges_and for each cut."""
+    import random
+
+    r = random.Random(7)
+    points = _normalize([rng(v, True, v, True) for v in r.sample(range(-50, 50), 60)])
+    cuts = sorted(r.sample(range(-50, 50), 9))
+    bounds = [None] + cuts
+    for i, lo in enumerate(bounds):
+        hi = bounds[i + 1] if i + 1 < len(bounds) else None
+        sub = rng(lo, True, hi, False)
+        assert ranges_clip(points, sub) == ranges_and(points, [sub])
 
 
 # --------------------------------------------------------------------------

@@ -2,6 +2,7 @@
 join equivalence, dedup equivalences — the quality checks behind the
 rows-only gate entries."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from shc_spark.operators import dedup, similarity
@@ -5581,3 +5582,246 @@ def test_lsh_candidates_are_bucket_matches(spark):
         assert got[mp] == expected(mp), mp
     # both rules are exercised: the 1-bit probes add candidates
     assert got[False] and got[False] < got[True]
+
+
+# ---------------------------------------------------------------------------
+# The driver path of the BM25 and IVF index queries: the Spark body's
+# rows and schema (the body forced by a zero driver budget), no Spark job.
+
+_SERVED: dict = {}
+
+
+@pytest.fixture(scope="module")
+def index_root(tmp_path_factory):
+    return str(tmp_path_factory.mktemp("served"))
+
+
+def _job_count(spark, group, action):
+    """Spark jobs that ``action()`` starts, counted under a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+
+def _schema_rows(df):
+    return df.schema, [tuple(r) for r in df.collect()]
+
+
+def _driver_and_body(spark, monkeypatch, run, group):
+    """(Spark jobs of the driver path, its (schema, rows), the Spark
+    body's (schema, rows)) of one query."""
+    from shc_spark import io as shc_io
+
+    jobs, local = _job_count(spark, group, lambda: _schema_rows(run()))
+    with monkeypatch.context() as m:
+        m.setattr(shc_io, "DRIVER_GET_MAX_ROWS", 0)
+        body = _schema_rows(run())
+    return jobs, local, body
+
+
+def _served_ivf(spark, root, storage):
+    """An IVF index over the sf0.01 embeddings: even ids built, odd ids
+    appended (a second file in most cid partitions), three ids
+    tombstoned."""
+    import os
+
+    p = os.path.join(root, f"ivf_{storage}")
+    if p not in _SERVED:
+        emb = spark.read.parquet(f"{SF}/embeddings.parquet")
+        similarity.build_ivf_index(
+            emb.filter(F.col("vec_id") % 2 == 0), p, "embedding", "vec_id",
+            dim=64, num_centroids=8, storage=storage,
+        )
+        similarity.append_to_ivf_index(
+            emb.filter(F.col("vec_id") % 2 == 1), p, "embedding", "vec_id"
+        )
+        side = similarity.collect_query_side(emb.filter(F.col("vec_id") < 8))
+        top = similarity.ivf_index_topk(spark, p, side, k=5, nprobe=2).collect()
+        similarity.delete_from_ivf_index(spark, p, sorted({r["neighbor_id"] for r in top})[:3])
+        _SERVED[p] = side
+    return p, _SERVED[p]
+
+
+def _served_text(spark, root, string_ids):
+    """A BM25 index over the sf0.01 documents: even ids built, odd ids
+    appended, the top hit of one query tombstoned."""
+    import os
+
+    from shc_spark.operators import textindex
+
+    p = os.path.join(root, f"text_{'str' if string_ids else 'long'}")
+    if p not in _SERVED:
+        docs = spark.read.parquet(f"{SF}/documents.parquet")
+        ids = F.concat(F.lit("doc-"), F.col("doc_id").cast("string")) if string_ids else F.col("doc_id")
+        docs = docs.select(ids.alias("doc_id"), "text", (F.col("doc_id") % 2).alias("odd"))
+        textindex.build_text_index(docs.filter("odd = 0"), p)
+        textindex.append_to_text_index(docs.filter("odd = 1"), p)
+        victim = textindex.text_index_topk(spark, p, ["join"], k=1).collect()[0]["id"]
+        textindex.delete_from_text_index(spark, p, [victim])
+        _SERVED[p] = victim
+    return p
+
+
+@pytest.mark.parametrize("storage", ["float", "sq8", "pq"])
+def test_ivf_index_driver_path_equals_spark_body(spark, monkeypatch, index_root, storage):
+    """ivf_index_topk served in the driver returns the Spark body's
+    rows and schema on every storage tier, over an appended generation
+    and tombstoned ids, with no Spark job; with k above the candidate
+    count every candidate comes back; an empty query frame gives an
+    empty frame of the same schema."""
+    import os
+
+    from shc_spark.operators.idxcache import _data_files
+
+    p, side = _served_ivf(spark, index_root, storage)
+    cells = os.listdir(os.path.join(p, "postings"))
+    assert max(len(_data_files(os.path.join(p, "postings", c))) for c in cells) > 1
+    for k, nprobe in ((5, 2), (400, 1)):
+        jobs, local, body = _driver_and_body(
+            spark, monkeypatch,
+            lambda: similarity.ivf_index_topk(spark, p, side, k=k, nprobe=nprobe),
+            f"ivf_driver_{storage}_{k}",
+        )
+        assert jobs == 0
+        assert local[0] == body[0]
+        assert sorted(local[1]) == sorted(body[1]) and body[1]
+    per_query = {}
+    for r in local[1]:
+        per_query[r[0]] = per_query.get(r[0], 0) + 1
+    assert max(per_query.values()) < 400
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
+    _jobs, local, body = _driver_and_body(
+        spark, monkeypatch,
+        lambda: similarity.ivf_index_topk(spark, p, emb.limit(0), k=5), "ivf_driver_empty",
+    )
+    assert local == body and not local[1]
+
+
+@pytest.mark.parametrize("string_ids", [False, True])
+def test_text_index_driver_path_equals_spark_body(spark, monkeypatch, index_root, string_ids):
+    """text_index_topk and text_index_topk_batch served in the driver
+    return the Spark body's rows and schema (single queries in the
+    body's order), over an appended generation and a tombstoned id,
+    with no Spark job; k above the candidate count, a term that is in
+    no document and a query without terms included."""
+    from shc_spark.operators import textindex
+
+    p = _served_text(spark, index_root, string_ids)
+    batch = {"a": ["join", "scan"], "b": ["vector"], "c": ["nosuchterm"], "d": ["join", "join", "data"]}
+    runs = {
+        "batch": lambda: textindex.text_index_topk_batch(spark, p, batch, k=10),
+        "single": lambda: textindex.text_index_topk(spark, p, ["join", "scan", "vector"], k=20),
+        "deep": lambda: textindex.text_index_topk(spark, p, ["vector"], k=10_000),
+        "empty": lambda: textindex.text_index_topk(spark, p, [], k=10),
+    }
+    got = {}
+    for name, run in runs.items():
+        jobs, local, body = _driver_and_body(spark, monkeypatch, run, f"text_driver_{name}")
+        assert jobs == 0, name
+        assert local[0] == body[0], name
+        if name == "batch":
+            assert sorted(local[1]) == sorted(body[1])
+        else:
+            assert local[1] == body[1], name
+        got[name] = local[1]
+    assert {r[0] for r in got["batch"]} == {"a", "b", "d"}
+    assert 0 < len(got["deep"]) < 10_000
+    assert _SERVED[p] not in {r[0] for r in got["deep"]}
+    assert not got["empty"]
+
+
+def test_index_queries_over_budget_run_spark(spark, monkeypatch, index_root):
+    """A batch whose pruned read is over the driver budget runs the
+    Spark body: it starts Spark jobs and returns the driver path's
+    rows."""
+    from shc_spark import io as shc_io
+    from shc_spark.operators import textindex
+
+    tp = _served_text(spark, index_root, False)
+    vp, side = _served_ivf(spark, index_root, "float")
+    runs = {
+        "text": lambda: textindex.text_index_topk_batch(
+            spark, tp, {"a": ["join", "scan"], "b": ["vector"]}, k=10
+        ),
+        "ivf": lambda: similarity.ivf_index_topk(spark, vp, side, k=5, nprobe=2),
+    }
+    for name, run in runs.items():
+        jobs, local = _job_count(spark, f"under_{name}", lambda: _schema_rows(run()))
+        assert jobs == 0
+        with monkeypatch.context() as m:
+            m.setattr(shc_io, "DRIVER_GET_MAX_ROWS", 50)
+            jobs, over = _job_count(spark, f"over_{name}", lambda: _schema_rows(run()))
+        assert jobs > 0, name
+        assert over[0] == local[0] and sorted(over[1]) == sorted(local[1]), name
+
+
+def test_index_driver_path_opens_only_pruned_partitions(spark, monkeypatch, index_root):
+    """The driver path opens exactly the data files of the query terms'
+    tbkt buckets and of the probed cid cells (plus the tombstone and
+    meta files), like the Spark body's partition pruning."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from shc_spark.operators import textindex
+    from shc_spark.operators.idxcache import _data_files
+    from shc_spark.operators.xxh import bucket_of_str
+
+    tp = _served_text(spark, index_root, False)
+    vp, side = _served_ivf(spark, index_root, "float")
+    opened = []
+    real = pq.ParquetFile
+
+    def recording(source, *a, **kw):
+        opened.append(source)
+        return real(source, *a, **kw)
+
+    def postings_opened():
+        return sorted(f for f in opened if os.sep + "postings" + os.sep in f)
+
+    monkeypatch.setattr(pq, "ParquetFile", recording)
+    terms = ["join", "scan", "vector"]
+    textindex.text_index_topk(spark, tp, terms, k=10).collect()
+    nb = textindex.read_text_index_meta(spark, tp)["num_buckets"]
+    want = sorted(
+        f for b in {bucket_of_str(t, nb) for t in terms}
+        for f in _data_files(os.path.join(tp, "postings", f"tbkt={b}"))
+    )
+    assert want and postings_opened() == want
+    opened.clear()
+    similarity.ivf_index_topk(spark, vp, side, k=5, nprobe=2).collect()
+    cells = similarity._probe(side[1], similarity.read_ivf_centroids(spark, vp), 2)
+    want = sorted(
+        f for c in {int(c) for c in cells.ravel()}
+        for f in _data_files(os.path.join(vp, "postings", f"cid={c}"))
+    )
+    assert want and postings_opened() == want
+    assert len({int(c) for c in cells.ravel()}) < len(os.listdir(os.path.join(vp, "postings"))) - 1
+
+
+def test_spark_round_matches_f_round(spark):
+    """The driver-side rounding equals F.round(x, 4) on random doubles
+    and on .xxxx5 boundary values, whose double sits just below or above
+    the decimal Spark rounds (0.72525 rounds up to 0.7253)."""
+    import numpy as np
+
+    from shc_spark.operators.idxcache import spark_round
+
+    rng = np.random.default_rng(11)
+    vals = np.concatenate([
+        rng.normal(size=3000) * 10,
+        rng.uniform(-1, 1, 3000),
+        (np.arange(-3000, 3000) + 0.5) / 1e4,
+        np.round(rng.uniform(-50, 50, 3000), 4) + 0.00005,
+        [0.72525, -0.72525, 1.00005, 2.5e-5, -2.5e-5, 0.0, -0.0, 1e-9],
+    ])
+    df = spark.createDataFrame([(float(v),) for v in vals], "x double")
+    want = [r[0] for r in df.select(F.round("x", 4)).collect()]
+    assert [repr(float(x)) for x in spark_round(vals)] == [repr(x) for x in want]
+    # a binary floor(x * 1e4 + 0.5) alone gets 0.72525 wrong
+    assert np.floor(0.72525 * 1e4 + 0.5) / 1e4 == 0.7252
+    assert spark_round([0.72525])[0] == 0.7253

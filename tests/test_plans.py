@@ -10,6 +10,14 @@ from shc_spark.queries import all_queries
 SF = "/root/testdata/sf0.01"
 
 
+def _spark_body(monkeypatch):
+    """Index queries small enough for the driver path run the Spark
+    body instead: these pins are about that body's plan."""
+    from shc_spark import io as shc_io
+
+    monkeypatch.setattr(shc_io, "DRIVER_GET_MAX_ROWS", 0)
+
+
 @pytest.fixture(scope="module")
 def plans(spark):
     qs = all_queries()
@@ -255,10 +263,11 @@ def test_psi_drift_single_scan_per_side(plans):
     assert p.count("FileScan") <= 2, p
 
 
-def test_ivf_index_partition_pruned(spark):
+def test_ivf_index_partition_pruned(spark, monkeypatch):
     """The persisted-index search must read ONLY the probed cid
     partitions: the postings scan plan carries a PartitionFilters
     entry on cid (Spark partition pruning), not a full-index scan."""
+    _spark_body(monkeypatch)
     import hashlib
     import os
 
@@ -319,11 +328,12 @@ def test_dedup_index_partition_pruned_and_broadcast(spark):
     assert "BroadcastNestedLoopJoin" not in plan, plan
 
 
-def test_text_index_partition_pruned(spark):
+def test_text_index_partition_pruned(spark, monkeypatch):
     """The persisted BM25 index must read only the query terms'
     posting buckets (PartitionFilters on tbkt) and nothing else —
     dl rides the posting rows, so the lengths table never appears in
     a query plan (r15) — joining by broadcast."""
+    _spark_body(monkeypatch)
     import os
     import shutil
 
@@ -352,10 +362,11 @@ def test_text_index_partition_pruned(spark):
     assert plan.count("BroadcastNestedLoopJoin") <= 1, plan
 
 
-def test_text_index_batch_plan(spark):
+def test_text_index_batch_plan(spark, monkeypatch):
     """Batched BM25 serving: the (query_id, term) fan-out must be a
     broadcast join over the pruned posting read (no lengths scan, no
     data-sized nested-loop join anywhere)."""
+    _spark_body(monkeypatch)
     import os
     import shutil
 
@@ -382,11 +393,12 @@ def test_text_index_batch_plan(spark):
     assert plan.count("BroadcastNestedLoopJoin") <= 1, plan
 
 
-def test_ivf_index_pq_partition_pruned(spark):
+def test_ivf_index_pq_partition_pruned(spark, monkeypatch):
     """PQ-storage index search keeps the same pruning contract as the
     float index: PartitionFilters on cid, and with rerank_with the
     refine join must be a broadcast hash join (survivor set is nq*R*k
     rows), never a nested loop over the corpus."""
+    _spark_body(monkeypatch)
     import hashlib
     import os
 

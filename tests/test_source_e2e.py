@@ -572,6 +572,7 @@ def test_bulk_get_wide_composite_get_scans_with_spark(spark, tmp_path, monkeypat
     """A composite key whose leading value spans many rows: a get over
     the driver budget runs as a Spark scan, one under it in the driver,
     and both equal the filtered full read."""
+    from shc_spark import io as shc_io
     from shc_spark.sources import api
 
     root = str(tmp_path)
@@ -590,7 +591,7 @@ def test_bulk_get_wide_composite_get_scans_with_spark(spark, tmp_path, monkeypat
     rows = [(g, n, float(n)) for g in range(4) for n in range(300)]
     write_table(spark.createDataFrame(rows, "g int, n int, v double"), cat, root=root,
                 num_regions=4, mode="overwrite", timestamp=1000)
-    monkeypatch.setattr(api, "DRIVER_GET_MAX_ROWS", 500)
+    monkeypatch.setattr(shc_io, "DRIVER_GET_MAX_ROWS", 500)
     jobs, got = _job_count(spark, "bulk_get_wide", lambda: api.bulk_get(
         spark, cat, [1, 2], root=root).collect())
     assert len(got) == 600 and jobs > 0
